@@ -180,20 +180,6 @@ def a4_usage_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 #       (k_val/props_len columns) and exercised by extract_doc_json
 #   set_union_distinct  — union+distinct is the node-frame step INSIDE
 #       curation_pagerank (driver-verified exactly via rank_scaled)
-# Round 5 rotation (judge's round-5 item 2): multimodal_image and
-# multimodal_audio retired from the registry — all three multimodal
-# queries prove the SAME mapInArrow binary-payload contract and
-# multimodal_frames (the explode variant, strictly more shape) stays
-# green; the two functions and their DuckDB oracles remain below for
-# pytest (tests/test_multimodal.py) and anyone re-adding them. Their
-# slots now carry corpus_profile (exact-percentile corpus card) and
-# curation_mixture (mixture_rates + build_mixture end-to-end).
-# sim_ann_topk likewise retired: it was rows-only and strictly weaker
-# than sim_ann_recall, which RUNS both ANN paths (LSH + IVF) every
-# round and drives their hits against the exact baseline into
-# driver-visible recall values + ok floors. Its slot carries
-# spandedup_soundness (the one heavyweight curation operator that had
-# no driver entry).
 
 
 def p4_time_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -628,34 +614,6 @@ def sim_embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sim_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both ANN top-k variants in one result (merged sim_lsh_topk +
-    sim_ivf_topk — same corpus, same (query, rank) grain, both index
-    structures still exercised), tagged by method: multi-table
-    multi-probe LSH bucket pruning, and IVF nearest-centroid cell search
-    (vectorized numpy matmul per batch). Rows-only for the driver:
-    recall < 1 by construction; pytest re-verifies every cosine in numpy
-    and enforces recall floors vs the DuckDB-verified exact baseline
-    (sim_cosine_topk), and sim_ann_recall surfaces the floors as a
-    driver-visible boolean."""
-    from docling_api_spark.operators.similarity import (
-        ivf_cosine_topk,
-        lsh_cosine_topk,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
-    )
-    queries = emb.filter(F.col("vec_id") < 5)
-    lsh = lsh_cosine_topk(emb, queries, dim=64, k=3).withColumn(
-        "method", F.lit("lsh")
-    )
-    ivf = ivf_cosine_topk(emb, queries, dim=64, k=3).withColumn(
-        "method", F.lit("ivf")
-    )
-    return lsh.unionByName(ivf).orderBy("method", "query_id", "rank")
-
-
 def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN quality tracking (rows-only oracle): recall@3 of the LSH and
     IVF paths against the exact brute-force baseline, one row per method.
@@ -1053,53 +1011,6 @@ def corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-def multimodal_image(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal image plumbing (merged multimodal_features +
-    multimodal_resize — same table, same per-doc grain, both stages still
-    exercised): FIMG binary payload -> mapInArrow metadata extraction,
-    AND the same payload -> downscale-by-2 -> re-extracted metadata. The
-    decode step is a deterministic fake; real codecs stubbed. DuckDB
-    oracle restates the FIMG header/body + subsample arithmetic in SQL
-    (mean_byte uses integer floor-at-4-decimals — bit-identical doubles)."""
-    import struct
-
-    from docling_api_spark.operators.multimodal import (
-        FAKE_IMAGE_MAGIC,
-        resize_image,
-        with_image_metadata,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    binned = d.select(
-        "doc_id",
-        F.concat(
-            F.lit(FAKE_IMAGE_MAGIC),
-            # little-endian width=64, height=32 headers, then text bytes
-            F.lit(struct.pack("<II", 64, 32)),
-            F.col("text").cast("binary"),
-        ).alias("image"),
-    )
-    # order matters: resize first (keeps the input column), then original
-    # metadata (drops it), then re-extract on the downscaled payload
-    small = resize_image(binned, factor=2)
-    meta = (
-        with_image_metadata(small)
-        .withColumnRenamed("image_meta", "orig_meta")
-        .withColumnRenamed("image_small", "image")
-    )
-    out = with_image_metadata(meta)
-    return out.select(
-        "doc_id",
-        F.col("orig_meta.width").alias("width"),
-        F.col("orig_meta.height").alias("height"),
-        F.col("orig_meta.n_bytes").alias("n_bytes"),
-        F.col("orig_meta.mean_byte").alias("mean_byte"),
-        F.col("image_meta.width").alias("small_width"),
-        F.col("image_meta.height").alias("small_height"),
-        F.col("image_meta.n_bytes").alias("small_n_bytes"),
-    )
-
-
 def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal frame-sampling plumbing: FVID container (4 frames x 16
     bytes built from the doc text) -> every-2nd-frame metadata, exploded.
@@ -1127,36 +1038,6 @@ def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("f.n_bytes").alias("frame_bytes"),
         F.col("f.mean_byte").alias("mean_byte"),
     ).orderBy("doc_id", "frame_idx")
-
-
-def multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal audio-feature plumbing: FAUD payload (32 i16 samples from
-    the doc text bytes) -> sample_rate / n_samples / duration / RMS.
-    DuckDB-verified (little-endian i16 decode restated in SQL; RMS
-    floored at 4 decimals for bit-identical doubles)."""
-    import struct
-
-    from docling_api_spark.operators.multimodal import (
-        FAKE_AUDIO_MAGIC,
-        with_audio_features,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    samples = F.rpad(F.substring("text", 1, 64), 64, " ").cast("binary")
-    binned = d.select(
-        "doc_id",
-        F.concat(
-            F.lit(FAKE_AUDIO_MAGIC), F.lit(struct.pack("<I", 16000)), samples
-        ).alias("audio"),
-    )
-    out = with_audio_features(binned)
-    return out.select(
-        "doc_id",
-        F.col("audio_meta.sample_rate").alias("sample_rate"),
-        F.col("audio_meta.n_samples").alias("n_samples"),
-        F.col("audio_meta.duration_s").alias("duration_s"),
-        F.col("audio_meta.rms").alias("rms"),
-    ).orderBy("doc_id")
 
 
 def corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2333,17 +2214,6 @@ def oracle_sql() -> dict[str, str]:
                    END AS corpus_guard
             FROM documents
         """,
-        "multimodal_image": """
-            SELECT doc_id, 64 AS width, 32 AS height,
-                   CAST(12 + length(text) AS BIGINT) AS n_bytes,
-                   CAST(list_sum(list_transform(
-                            range(1, length(text) + 1), i -> ord(text[i])
-                        )) * 10000 // length(text) AS DOUBLE) / 10000.0
-                       AS mean_byte,
-                   32 AS small_width, 16 AS small_height,
-                   CAST(12 + (length(text) + 1) // 2 AS BIGINT) AS small_n_bytes
-            FROM documents
-        """,
         "multimodal_frames": """
             WITH p AS (
                 SELECT doc_id, rpad(substr(text, 1, 64), 64, ' ') AS b
@@ -2356,28 +2226,6 @@ def oracle_sql() -> dict[str, str]:
             FROM p, (VALUES (0), (2)) t(f)
             ORDER BY doc_id, frame_idx
         """,
-        "multimodal_audio": """
-            WITH p AS (
-                SELECT doc_id, rpad(substr(text, 1, 64), 64, ' ') AS b
-                FROM documents
-            ), v AS (
-                SELECT doc_id,
-                       list_transform(
-                           range(0, 32),
-                           k -> ord(b[2 * k + 1]) + 256 * ord(b[2 * k + 2])
-                       ) AS pcm
-                FROM p
-            )
-            SELECT doc_id, 16000 AS sample_rate, CAST(32 AS BIGINT) AS n_samples,
-                   round(CAST(32 AS DOUBLE) / 16000, 6) AS duration_s,
-                   floor(sqrt(list_avg(list_transform(
-                       pcm, x -> CAST(x AS DOUBLE) * x
-                   ))) * 10000) / 10000.0 AS rms
-            FROM v ORDER BY doc_id
-        """,
-        # (multimodal_image / multimodal_audio were rotated out of
-        # queries() in round 5 — oracles kept directly above for anyone
-        # re-adding them; multimodal_frames stays registered.)
         "corpus_profile": r"""
             -- operators/profile.py corpus card: exact-integer averages
             -- (HALF_UP by integer division, q1 note), EXACT percentiles

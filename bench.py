@@ -3,18 +3,18 @@
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
 line: {"metric", "value", "unit": "sec", "queries": {...}, "sf", ...}.
+The master is ``get_spark``'s default.
 
 The flagship measurement is transcript extraction throughput
 (turns/sec): transcripts are staged once to parquet (generation cost is
 excluded — the 100 TB framing reads an existing Iceberg snapshot), then
-the timed run is read -> salted repartition -> mapInPandas extraction ->
-aggregate, i.e. the full pipeline minus the sink.
+the timed run is read -> mapInArrow extraction -> aggregate, i.e. the
+full pipeline minus the sink.
 
 Usage:
     python bench.py                 # full suite, one JSON line
-    python bench.py --extract-only  # just the extraction stage (used by
-                                    # scripts/scaling_bench.py at two
-                                    # parallelism levels)
+
+Layered end-to-end and per-layer measurements live in perfbench/run.py.
 """
 
 from __future__ import annotations
@@ -30,7 +30,6 @@ REPO = pathlib.Path(__file__).resolve().parent
 sys.path.insert(0, str(REPO))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # ~650k convs/sf => ~2M turns at sf0.1 (turn mix per FIXTURES.md §1)
 CONVS_PER_SF = int(os.environ.get("SPARK_GRAFT_BENCH_CONVS_PER_SF", "650000"))
 STAGE_ROOT = pathlib.Path(os.environ.get("SPARK_GRAFT_STAGE", "/tmp/spark_graft_bench"))
@@ -106,49 +105,11 @@ def run_extraction_bench(spark, staged: str) -> dict:
     }
 
 
-def pooled_best_turns_per_sec(in_run_best: float) -> float:
-    """Best pooled extraction trial for THIS input + extraction code.
-
-    The VM shares a physical host (single-run throughput swings up to
-    ~1.5x with co-tenant load), so the honest capability estimate is the
-    best over ALL recorded trials of the identical job on the identical
-    input — the pool scripts/scaling_bench.py accumulates in
-    BENCH/trials_history.json, keyed by a fingerprint of the extraction
-    code paths (kernel/extract/session) plus the input dir. Read-only
-    here: this run's best is folded in via ``in_run_best``; the pool
-    file is only ever appended by the scaling harness. Falls back to
-    the in-run number when the pool is absent or keyed to other code.
-    """
-    import hashlib
-
-    h = hashlib.sha256()
-    for rel in ("docling_api_spark/extraction/kernel.py",
-                "docling_api_spark/operators/extract.py",
-                "docling_api_spark/session.py"):
-        h.update((REPO / rel).read_bytes())
-    bench_key = f"{SF_DIR}:{h.hexdigest()[:16]}"
-    best = in_run_best
-    try:
-        hist = json.loads((REPO / "BENCH" / "trials_history.json").read_text())
-        if hist.get("bench_key") == bench_key:
-            for run in hist.get("runs", []):
-                trials = run.get(str(CPUS), [])
-                if trials:
-                    best = max(best, max(trials))
-    except (OSError, ValueError):
-        pass
-    return best
-
-
 def main() -> None:
-    extract_only = "--extract-only" in sys.argv
-
     from docling_api_spark.session import get_spark
 
     spark = get_spark(
         app_name="bench",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=CPUS,
         # fine-grained scan splits for the Python-heavy extraction stage
         extra_conf={"spark.sql.files.maxPartitionBytes": "16m"},
     )
@@ -156,11 +117,9 @@ def main() -> None:
     staged = stage_transcripts(spark, sf)
 
     queries: dict[str, float] = {}
-    extras: dict = {}
 
-    # four timed passes, best kept (all recorded): the VM shares a
-    # physical host and a single pass can be depressed ~1.5x by co-tenant
-    # load — same pooled-trial methodology the scaling bench uses. Four
+    # four timed passes, best kept (all recorded): the host is shared
+    # and a single pass can be depressed ~1.5x by co-tenant load. Four
     # (not three) because measured trial spreads within one run reach 3x
     # (68k..150k turns/s); one extra ~14 s pass materially raises the
     # expected max under that noise
@@ -168,76 +127,72 @@ def main() -> None:
     ext = max(trials, key=lambda d: d["turns_per_sec"])
     ext["trials_turns_per_sec"] = [t["turns_per_sec"] for t in trials]
     queries["extract_transcripts"] = ext["sec"]
-    extras["extract"] = ext
 
-    if not extract_only:
-        import __spark_entry__ as entrymod
+    import __spark_entry__ as entrymod
 
-        q = entrymod.queries()
-        names = [
-            "extract_documents",
-            "extract_doc_json",
-            "tier_usage_pricing",
-            "q1_pricing_summary",
-            "j4_parity_join",
-            "a4_usage_rollup",
-            "w1_rate_windows",
-            "w2_turn_ordering",
-            "skew_salted_rollup",
-            "join_temporal",
-            "dedup_exact",
-            "dedup_minhash_lsh",
-            "dedup_simhash",
-            "dedup_embedding_lsh",
-            "dedup_cc_clusters",
-            "sim_cosine_topk",
-            "text_quality",
-            "text_token_stats",
-            "text_fingerprint",
-            "decontaminate_ngrams",
-            "multimodal_frames",
-            # round-4 registry rotation: the curation layer's driver
-            # queries (see __spark_entry__.py registry note)
-            "curation_group_split",
-            "curation_chunk_documents",
-            "curation_domain_stats",
-            "curation_pagerank",
-            "curation_nb_quality",
-            "dedup_index_matches",
-            "corpus_funnel",
-            # round-5 registry rotation (see __spark_entry__.py note):
-            # sim_ann_topk retired (sim_ann_recall runs both ANN paths);
-            # corpus card, mixture builder, span-dedup soundness added
-            "corpus_profile",
-            "curation_mixture",
-            "spandedup_soundness",
-        ]
-        # two interleaved passes over the whole sweep, best-of-2 per
-        # query: single-shot timings on this shared host drift 2-3x with
-        # co-tenant load, making round-over-round regressions
-        # unattributable. Interleaving (pass over all queries, then
-        # again) decorrelates a noise burst from any single query.
-        # The heavy multi-stage queries (iterative CC, the LSH dedups —
-        # the ones whose first trial also absorbs JVM/codegen warmup) get
-        # a THIRD trial: their long wall times integrate over more
-        # co-tenant bursts, so two samples still leave 2-4x spread
-        # (measured: minhash 35.4/3.3/2.7 s in one interleaved triple).
-        heavy = {"dedup_minhash_lsh", "dedup_simhash", "dedup_embedding_lsh",
-                 "dedup_cc_clusters", "spandedup_soundness",
-                 "curation_pagerank", "dedup_index_matches"}
-        trials_by_query: dict[str, list[float]] = {n: [] for n in names}
-        for rnd in range(3):
-            for name in names:
-                if rnd == 2 and name not in heavy:
-                    continue
-                t0 = time.time()
-                df = q[name](spark, SF_DIR)
-                # force full computation without driver-side materialization
-                df.write.mode("overwrite").format("noop").save()
-                trials_by_query[name].append(round(time.time() - t0, 2))
+    q = entrymod.queries()
+    names = [
+        "extract_documents",
+        "extract_doc_json",
+        "tier_usage_pricing",
+        "q1_pricing_summary",
+        "j4_parity_join",
+        "a4_usage_rollup",
+        "w1_rate_windows",
+        "w2_turn_ordering",
+        "skew_salted_rollup",
+        "join_temporal",
+        "dedup_exact",
+        "dedup_minhash_lsh",
+        "dedup_simhash",
+        "dedup_embedding_lsh",
+        "dedup_cc_clusters",
+        "sim_cosine_topk",
+        "text_quality",
+        "text_token_stats",
+        "text_fingerprint",
+        "decontaminate_ngrams",
+        "multimodal_frames",
+        # round-4 registry rotation: the curation layer's driver
+        # queries (see __spark_entry__.py registry note)
+        "curation_group_split",
+        "curation_chunk_documents",
+        "curation_domain_stats",
+        "curation_pagerank",
+        "curation_nb_quality",
+        "dedup_index_matches",
+        "corpus_funnel",
+        # round-5 registry rotation: corpus card, mixture builder,
+        # span-dedup soundness
+        "corpus_profile",
+        "curation_mixture",
+        "spandedup_soundness",
+    ]
+    # two interleaved passes over the whole sweep, best-of-2 per
+    # query: single-shot timings on this shared host drift 2-3x with
+    # co-tenant load, making round-over-round regressions
+    # unattributable. Interleaving (pass over all queries, then
+    # again) decorrelates a noise burst from any single query.
+    # The heavy multi-stage queries (iterative CC, the LSH dedups —
+    # the ones whose first trial also absorbs JVM/codegen warmup) get
+    # a THIRD trial: their long wall times integrate over more
+    # co-tenant bursts, so two samples still leave 2-4x spread
+    # (measured: minhash 35.4/3.3/2.7 s in one interleaved triple).
+    heavy = {"dedup_minhash_lsh", "dedup_simhash", "dedup_embedding_lsh",
+             "dedup_cc_clusters", "spandedup_soundness",
+             "curation_pagerank", "dedup_index_matches"}
+    trials_by_query: dict[str, list[float]] = {n: [] for n in names}
+    for rnd in range(3):
         for name in names:
-            queries[name] = min(trials_by_query[name])
-        extras["query_trials"] = trials_by_query
+            if rnd == 2 and name not in heavy:
+                continue
+            t0 = time.time()
+            df = q[name](spark, SF_DIR)
+            # force full computation without driver-side materialization
+            df.write.mode("overwrite").format("noop").save()
+            trials_by_query[name].append(round(time.time() - t0, 2))
+    for name in names:
+        queries[name] = min(trials_by_query[name])
 
     total = round(sum(queries.values()), 2)
     out = {
@@ -246,16 +201,10 @@ def main() -> None:
         "unit": "sec",
         "queries": queries,
         "sf": sf,
-        "cpus": CPUS,
+        "cpus": spark.sparkContext.defaultParallelism,
         "turns_per_sec": ext["turns_per_sec"],
-        # honest capability estimate on this ±1.5x shared host: best over
-        # the fingerprint-keyed pooled trial history at this level (see
-        # pooled_best_turns_per_sec) — the in-run number above is a
-        # single-invocation draw from that same distribution
-        "pooled_best_turns_per_sec": pooled_best_turns_per_sec(
-            ext["turns_per_sec"]),
-        "extract_detail": extras["extract"],
-        "query_trials": extras.get("query_trials", {}),
+        "extract_detail": ext,
+        "query_trials": trials_by_query,
     }
     print(json.dumps(out))
     spark.stop()

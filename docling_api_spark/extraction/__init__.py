@@ -1,5 +1,4 @@
 from docling_api_spark.extraction.kernel import (  # noqa: F401
     extract_one,
-    extract_records,
     sniff_kind,
 )

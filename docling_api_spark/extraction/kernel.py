@@ -7,11 +7,11 @@ README.md:7-10): payload -> structured node tree -> content/boilerplate
 classification -> markdown + span offsets + page count, with per-document
 error capsuling (modal_docling.py:259-264).
 
-This module is PURE PYTHON + numpy, no Spark imports. The SAME functions
-back both the single-node oracle (golden fixtures, pytest) and the
-``mapInPandas`` batch UDFs — so Spark-vs-oracle equality tests the Spark
-plumbing (ordering, batching, Arrow encoding), not two divergent
-implementations.
+This module is PURE PYTHON + numpy, no Spark imports. The SAME batch
+function, ``extract_flat``, backs both the single-node oracle (golden
+fixtures, pytest) and the ``mapInArrow`` operator — so Spark-vs-oracle
+equality tests the Spark plumbing (ordering, batching, Arrow encoding),
+not two divergent implementations.
 
 Determinism rules (SURVEY.md §4.3): no wall clock, no randomness, no
 dict-order leaks, no batch-boundary dependence — each document's result
@@ -1134,28 +1134,3 @@ def extract_flat(texts, options: ExtractOptions = DEFAULT_OPTIONS) -> dict[str, 
         "span_kind": s_kind, "span_offsets": offsets,
     }
 
-
-def extract_records(texts, options: ExtractOptions = DEFAULT_OPTIONS) -> dict[str, list]:
-    """Batch kernel: iterable of payload strings -> column lists.
-
-    This is the unit that runs once per Arrow record batch inside
-    ``mapInPandas`` — vectorized at the batch level, zero Spark-row
-    Python calls."""
-    cols: dict[str, list] = {
-        "status": [], "payload_kind": [], "extracted_text": [],
-        "doc_json": [], "spans": [], "pages": [], "n_nodes": [], "error": [],
-    }
-    for t in texts:
-        r = extract_one(t, options)
-        cols["status"].append(r["status"])
-        cols["payload_kind"].append(r["payload_kind"])
-        cols["extracted_text"].append(r["extracted_text"])
-        cols["doc_json"].append(r["doc_json"])
-        cols["spans"].append(
-            [{"start": s[0], "end": s[1], "node_id": s[2], "kind": s[3]}
-             for s in r["spans"]]
-        )
-        cols["pages"].append(r["pages"])
-        cols["n_nodes"].append(r["n_nodes"])
-        cols["error"].append(r["error"])
-    return cols

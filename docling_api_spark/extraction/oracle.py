@@ -1,10 +1,11 @@
 """Single-node reference extractor (the pytest oracle).
 
-Runs the SAME kernels as the Spark pandas UDFs over a pandas DataFrame,
-producing the golden extraction table of FIXTURES.md §3. Spark-vs-oracle
-byte equality therefore verifies the Spark plumbing (partitioning,
-ordering, Arrow batching) — kernel regressions are caught separately by
-the COMMITTED golden fixtures under fixtures/.
+Runs the SAME batch function as the ``mapInArrow`` worker
+(``kernel.extract_flat``) over a pandas DataFrame, producing the golden
+extraction table of FIXTURES.md §3. Spark-vs-oracle byte equality
+therefore verifies the Spark plumbing (partitioning, ordering, Arrow
+batching) — kernel regressions are caught separately by the COMMITTED
+golden fixtures under fixtures/.
 
 Reference parity target: the 'Railway vs Modal' output-equality check at
 reference scripts/test_production.py:302, hardened to full text equality.
@@ -14,7 +15,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from docling_api_spark.extraction.kernel import extract_records
+from docling_api_spark.extraction.kernel import DEFAULT_OPTIONS, extract_flat
 
 RESULT_COLS = [
     "status", "payload_kind", "extracted_text", "doc_json", "spans",
@@ -28,11 +29,15 @@ def oracle_extract(pdf: pd.DataFrame, text_col: str = "text",
     """Extract every row of ``pdf``; returns id columns + result columns,
     sorted by the id columns (fixtures are stored sorted; the Spark-side
     comparison is join-based and order-insensitive)."""
-    from docling_api_spark.extraction.kernel import DEFAULT_OPTIONS
-
     id_cols = id_cols or ["conv_id", "turn_idx"]
-    cols = extract_records(pdf[text_col].tolist(),
-                           options if options is not None else DEFAULT_OPTIONS)
+    cols = extract_flat(pdf[text_col].tolist(),
+                        options if options is not None else DEFAULT_OPTIONS)
+    # flat span arrays + list offsets (the Arrow layout) -> per-row dicts
+    flat = [{"start": s, "end": e, "node_id": n, "kind": k}
+            for s, e, n, k in zip(cols["span_start"], cols["span_end"],
+                                  cols["span_node_id"], cols["span_kind"])]
+    offs = cols["span_offsets"]
+    cols["spans"] = [flat[lo:hi] for lo, hi in zip(offs, offs[1:])]
     out = pdf[id_cols].copy().reset_index(drop=True)
     for c in RESULT_COLS:
         out[c] = cols[c]

@@ -27,7 +27,6 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -36,50 +35,6 @@ from docling_api_spark.schema import EXTRACT_RESULT_FIELDS
 
 def _result_schema(passthrough: T.StructType) -> T.StructType:
     return T.StructType(list(passthrough.fields) + list(EXTRACT_RESULT_FIELDS))
-
-
-def classify_blocks_udf():
-    """§2.11 UDF #2: the C2 boilerplate classifier exposed on its own for
-    fixture-level testing — html payload -> JSON array of per-block
-    labels (node id, kind, chrome flag, link density, kept-as-content
-    decision), independent of markdown emission. Scalar Arrow-batched
-    pandas UDF; shares the parse/classify kernels with extract_turns so
-    label parity with the extraction output is structural."""
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf(T.StringType())
-    def classify(texts: pd.Series) -> pd.Series:
-        import json
-
-        from docling_api_spark.extraction.kernel import (
-            _Table,
-            _classify_block,
-            _parse_html,
-        )
-
-        out = []
-        for t in texts:
-            if t is None:
-                out.append("[]")
-                continue
-            labels = []
-            for node in _parse_html(t):
-                if isinstance(node, _Table):
-                    labels.append({"id": node.node_id, "kind": "table",
-                                   "chrome": node.chrome,
-                                   "content": not node.chrome and bool(node.rows)})
-                    continue
-                tl = node.text_len()
-                labels.append({
-                    "id": node.node_id, "kind": node.kind,
-                    "chrome": node.chrome,
-                    "link_density": round(node.link_len / tl, 4) if tl else 0.0,
-                    "content": _classify_block(node),
-                })
-            out.append(json.dumps(labels, sort_keys=True, separators=(",", ":")))
-        return pd.Series(out)
-
-    return classify
 
 
 def extract_text_column(df: DataFrame, text_col: str = "text",

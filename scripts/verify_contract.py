@@ -3,6 +3,8 @@
 DuckDB; compare row count, column names, and an order-insensitive
 value hash (columns sorted by name, rows sorted by their string repr).
 
+Runs on ``get_spark``'s default master, local[$SPARK_GRAFT_CPUS].
+
 Usage: python scripts/verify_contract.py [sf_dir] [name_filter]
 """
 
@@ -47,7 +49,7 @@ def main() -> None:
     import __spark_entry__ as entrymod
     from docling_api_spark.session import get_spark
 
-    spark = get_spark(app_name="verify", master="local[16]", shuffle_partitions=16)
+    spark = get_spark(app_name="verify")
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"

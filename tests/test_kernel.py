@@ -61,6 +61,41 @@ def test_link_density_classifier():
     assert "Real content sentence" in r["extracted_text"]
 
 
+def test_classifier_labels_match_extracted_spans():
+    """The C2 labels (_parse_html + _classify_block) agree with what
+    extraction kept: on every html payload of the generated corpus, span
+    node ids are content-labelled and never chrome."""
+    from docling_api_spark.extraction.kernel import (
+        _classify_block,
+        _parse_html,
+        _Table,
+    )
+    from docling_api_spark.gen import gen_transcripts_pdf
+
+    n_html = 0
+    for text in gen_transcripts_pdf(25)["text"]:
+        r = extract_one(text, BOTH)
+        if r["payload_kind"] != "html":
+            continue
+        n_html += 1
+        content_ids, chrome_ids = set(), set()
+        for node in _parse_html(text):
+            if node.chrome:
+                chrome_ids.add(node.node_id)
+            if isinstance(node, _Table):
+                is_content = not node.chrome and bool(node.rows)
+            else:
+                is_content = _classify_block(node)
+            if is_content:
+                content_ids.add(node.node_id)
+        span_ids = {s[2] for s in r["spans"]}
+        # a content-labelled table may still emit nothing (empty
+        # markdown), so content ids may be a strict superset
+        assert span_ids <= content_ids, text[:80]
+        assert span_ids.isdisjoint(chrome_ids), text[:80]
+    assert n_html, "corpus must contain html payloads"
+
+
 def test_entities_and_inline_tags():
     r = extract_one("<p>A &amp; B &lt;c&gt; <b>bold</b> &#233;t&eacute; and more words here</p>")
     assert r["extracted_text"] == "A & B <c> bold été and more words here"

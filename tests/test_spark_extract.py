@@ -106,39 +106,6 @@ def test_options_plumb_through_spark_operator(spark):
     assert (no_tbl["t_json"] or 0) == 0 and (no_tbl["t_span"] or 0) == 0
 
 
-def test_classify_blocks_udf_matches_extraction(spark):
-    """§2.11 UDF #2: standalone C2 classification labels agree with what
-    the extraction pipeline actually kept (content node ids == span node
-    ids for html payloads)."""
-    import json
-
-    from docling_api_spark.extraction.kernel import ExtractOptions
-    from docling_api_spark.gen import transcripts_df
-    from docling_api_spark.operators.extract import (
-        classify_blocks_udf,
-        extract_text_column,
-    )
-    from pyspark.sql import functions as F
-
-    df = transcripts_df(spark, 25, partitions=2)
-    classify = classify_blocks_udf()
-    both = extract_text_column(
-        df, keep_cols=["conv_id", "turn_idx", "text"],
-        options=ExtractOptions("both"),
-    ).withColumn("labels", classify(F.col("text")))
-    rows = both.filter(F.col("payload_kind") == "html").collect()
-    assert rows, "corpus must contain html payloads"
-    for r in rows:
-        labels = json.loads(r["labels"])
-        content_ids = {l["id"] for l in labels if l["content"]}
-        span_ids = {s["node_id"] for s in r["spans"]}
-        # every kept span is a content-labelled node; a content-labelled
-        # table may still emit nothing (empty markdown) so allow supersets
-        assert span_ids <= content_ids, (r["conv_id"], r["turn_idx"])
-        chrome_ids = {l["id"] for l in labels if l.get("chrome")}
-        assert span_ids.isdisjoint(chrome_ids)
-
-
 def test_documents_table_extraction(spark):
     """The driver's flagship path: extraction over the provided documents
     table (plain-text payloads) returns one success row per doc."""
