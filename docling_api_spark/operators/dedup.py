@@ -1,7 +1,7 @@
 """Deduplication operators for training-data pipelines.
 
-Exact (hash-groupBy), MinHash+LSH (shingle -> minhash -> band ->
-bucket-join -> verify), SimHash, and n-gram Jaccard — all expressed with
+MinHash+LSH (exact content-hash collapse -> shingle -> minhash -> band
+-> bucket-join -> verify), SimHash, and n-gram Jaccard — all expressed with
 JVM-side DataFrame ops + higher-order functions (whole-stage codegen; the
 only shuffles are the groupBys on doc/bucket keys, all partial-agg
 friendly). No Python in any hot path.
@@ -34,20 +34,6 @@ MAX_BUCKET = 64
 
 def _tokens(text_col):
     return F.split(F.trim(F.lower(text_col)), r"\s+")
-
-
-def exact_duplicates(df: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
-    """Exact dedup: group by content hash; emit groups with >1 member.
-    sha2-256 the text so the shuffle key is 32 bytes, not the document."""
-    return (
-        df.groupBy(F.sha2(F.col(text_col), 256).alias("content_hash"))
-        .agg(
-            F.min(id_col).alias("keeper_id"),
-            F.count(F.lit(1)).alias("n_copies"),
-        )
-        .filter(F.col("n_copies") > 1)
-    )
 
 
 def shingles_of_tokens(toks, n: int = SHINGLE_WORDS):

@@ -1,9 +1,9 @@
-"""Temporal join operators: as-of join + bounded-interval range counts.
+"""Temporal join operator: as-of join + bounded-interval range counts.
 
 Spark has no built-in as-of or interval range join; the naive encodings
 (per-key ``applyInPandas`` merge_asof, or an equi-join on the key followed
 by a time filter) either drop to Python or explode to O(|left|·|right|)
-intermediate rows per key. Both operators here use the UNION + WINDOW
+intermediate rows per key. The operator here uses the UNION + WINDOW
 trick instead: tag left/right, union them into one frame, and resolve the
 temporal predicate with window functions over a single shuffle on the join
 key — no join operator at all, no Python, whole-stage codegen throughout.
@@ -19,7 +19,7 @@ as-of attach AND a preceding-interval count still costs one shuffle.
 Reference parity: the reference correlates each usage/webhook event with
 the most recent prior state for the same key — "latest job status at or
 before t" polling (docling_client.py:300-330) and per-key last_used
-tracking (key_service.py:163-180). This operator family is that lookup
+tracking (key_service.py:163-180). This operator is that lookup
 expressed as a set operation instead of a point query.
 """
 
@@ -35,15 +35,6 @@ _IS_RIGHT = "_asof_is_right"
 
 _R_STRUCT = "_asof_right_row"
 _TS_FIELD = "__asof_ts"
-
-
-def _tag_union(left: DataFrame, right_projected: DataFrame) -> DataFrame:
-    """Shared scaffolding: tag left 0 / right 1 and union under the left
-    schema (right columns missing from left arrive as nulls)."""
-    return left.withColumn(_IS_RIGHT, F.lit(0)).unionByName(
-        right_projected.withColumn(_IS_RIGHT, F.lit(1)),
-        allowMissingColumns=True,
-    )
 
 
 def _micros(ts_col: str):
@@ -132,13 +123,15 @@ def asof_join(
     right_clean = right.filter(F.col(right_ts).isNotNull())
     for k in key:
         right_clean = right_clean.filter(F.col(k).isNotNull())
-    u = _tag_union(
-        left,
+    # tag left 0 / right 1 and union under the left schema (right columns
+    # missing from left arrive as nulls)
+    u = left.withColumn(_IS_RIGHT, F.lit(0)).unionByName(
         right_clean.select(
             *key,
             F.col(right_ts).alias(left_ts),
             *[F.col(c).alias(prefix + c) for c in attach_cols],
-        ),
+        ).withColumn(_IS_RIGHT, F.lit(1)),
+        allowMissingColumns=True,
     )
     micros = _micros(left_ts)
     rstruct = F.when(
@@ -172,50 +165,3 @@ def asof_join(
         )
     return out.filter(F.col(_IS_RIGHT) == 0).drop(_IS_RIGHT, _R_STRUCT)
 
-
-def range_interval_count(
-    left: DataFrame,
-    right: DataFrame,
-    on: str | Sequence[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    lower_s: int = 600,
-    upper_s: int = 0,
-    count_col: str = "n_in_range",
-) -> DataFrame:
-    """Interval range join, aggregated: for every left row, the count of
-    right rows with ``right_ts`` in ``[left_ts - lower_s, left_ts + upper_s)``
-    for the same key (half-open upper bound; microsecond-exact). Same
-    union + range-frame plan as :func:`asof_join` — one shuffle, no pair
-    expansion. For ``upper_s = 0`` this is "right events in the preceding
-    ``lower_s`` seconds, strictly before the left event". NULL-``right_ts``
-    rows are dropped (they fall in no interval), as are null-KEY right
-    rows (``NULL = NULL`` is never true in an equality join — see
-    :func:`asof_join`); null-key left rows survive with count 0."""
-    key = [on] if isinstance(on, str) else list(on)
-    left_lower = {c.lower() for c in left.columns}
-    if _IS_RIGHT.lower() in left_lower:
-        raise ValueError(f"left column name {_IS_RIGHT!r} is reserved")
-    if count_col.lower() == _IS_RIGHT.lower():
-        raise ValueError(f"output column name {count_col!r} is reserved")
-    if count_col.lower() in left_lower:
-        raise ValueError(
-            f"output column {count_col!r} already exists on the left frame"
-        )
-    right_clean = right.filter(F.col(right_ts).isNotNull())
-    for k in key:
-        right_clean = right_clean.filter(F.col(k).isNotNull())
-    u = _tag_union(
-        left,
-        right_clean.select(*key, F.col(right_ts).alias(left_ts)),
-    )
-    w_range = (
-        Window.partitionBy(*key)
-        .orderBy(_micros(left_ts))
-        .rangeBetween(-lower_s * 1_000_000, upper_s * 1_000_000 - 1)
-    )
-    out = u.withColumn(
-        count_col,
-        F.count(F.when(F.col(_IS_RIGHT) == 1, F.lit(1))).over(w_range),
-    )
-    return out.filter(F.col(_IS_RIGHT) == 0).drop(_IS_RIGHT)

@@ -172,15 +172,3 @@ def assign_clusters(
         stage, f"{id_col} {id_type}, cluster int"
     )
 
-
-def kmeans_cluster(
-    df: DataFrame,
-    dim: int,
-    k: int = 16,
-    iters: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[DataFrame, np.ndarray, dict]:
-    """Train + assign: ((id, cluster) frame, centroids, info)."""
-    cents, info = kmeans_centroids(df, dim, k, iters, id_col, vec_col)
-    return assign_clusters(df, cents, id_col, vec_col), cents, info

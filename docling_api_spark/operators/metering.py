@@ -29,11 +29,6 @@ def credits_col(pages_col, cpp: int = CREDITS_PER_PAGE, minc: int = MIN_CREDITS)
     return F.greatest(pages_col.cast("long") * F.lit(cpp), F.lit(minc).cast("long"))
 
 
-def success_filter(df: DataFrame, status_col: str = "status") -> DataFrame:
-    """P3 — bill only successes (reference documents.py:76-78)."""
-    return df.filter(F.col(status_col) == "success")
-
-
 def total_pages(df: DataFrame, pages_col: str = "pages") -> DataFrame:
     """A1 — total pages over successful conversions."""
     return df.agg(F.sum(pages_col).alias("total_pages"))
@@ -117,16 +112,3 @@ def time_window_filter(df: DataFrame, time_col: str, as_of: str, days: int) -> D
         F.col(time_col) >= F.to_timestamp(F.lit(as_of)) - F.expr(f"INTERVAL {days} DAYS")
     )
 
-
-def running_counters(keys: DataFrame, usage: DataFrame, key_col: str,
-                     fk_col: str, pages_col: str) -> DataFrame:
-    """A5 — stateless re-derivation of the reference's mutable per-key
-    counters (db_models.py:105-121): aggregate usage, broadcast-join back
-    to the small keys dimension."""
-    agg = usage.groupBy(fk_col).agg(
-        F.count(F.lit(1)).alias("documents_processed"),
-        F.sum(pages_col).alias("pages_processed"),
-        F.sum(credits_col(F.col(pages_col))).alias("credits_used"),
-    )
-    # keys is the small side (200 rows in the reference's world): broadcast
-    return agg.join(F.broadcast(keys), agg[fk_col] == keys[key_col], "inner")

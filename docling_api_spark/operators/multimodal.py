@@ -1,20 +1,19 @@
-"""Multimodal column plumbing: opaque binary payloads + typed metadata.
+"""Multimodal column plumbing: an opaque binary video payload in, typed
+per-frame metadata out.
 
-Images/audio/video ride through the engine as ``binary`` columns with a
-metadata struct; decode / feature-extraction runs batch-wise in
-``mapInArrow`` — the worker receives and returns ``pyarrow.RecordBatch``
-directly, passthrough columns are re-emitted zero-copy, and output
-structs/lists are built as Arrow arrays without a pandas round-trip
-(the pandas serializer measured ~35% of extraction throughput on this
-box; binary columns through pandas object arrays is the same pattern).
+Video rides through the engine as a ``binary`` column; frame sampling
+runs batch-wise in ``mapInArrow`` — the worker receives and returns
+``pyarrow.RecordBatch`` directly, passthrough columns are re-emitted
+zero-copy, and the output list-of-structs column is built as an Arrow
+array without a pandas round-trip (the pandas serializer measured ~35%
+of extraction throughput; binary columns through pandas object arrays
+is the same pattern).
 
-The actual codec step is a **clearly-marked STUB** — image/audio
-libraries are not in this container — but the Spark-side contract
-(schema, batching, UDF signature, partition behavior) is real and
-tested, per the build brief.
-
-The deterministic fake decoder parses a tiny header we synthesize
-(``FIMG`` magic + width + height), standing in for e.g. PIL decode.
+The codec step is a **clearly-marked STUB** — video codec libraries are
+not dependencies of this package — but the Spark-side contract (schema,
+batching, UDF signature, partition behavior) is real and tested. The
+deterministic fake container (``FVID`` magic + frame count + frame
+length + fixed-size frames) stands in for e.g. an ffmpeg decode.
 """
 
 from __future__ import annotations
@@ -25,53 +24,13 @@ from typing import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-FAKE_IMAGE_MAGIC = b"FIMG"
-
-IMAGE_META_SCHEMA = T.StructType(
-    [
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("n_bytes", T.LongType(), False),
-        T.StructField("format", T.StringType(), True),
-        T.StructField("mean_byte", T.DoubleType(), True),
-    ]
-)
-
-
-def encode_fake_image(width: int, height: int, payload: bytes) -> bytes:
-    """Deterministic synthetic 'image': header + raw bytes (test helper)."""
-    return FAKE_IMAGE_MAGIC + struct.pack("<II", width, height) + payload
-
-
-def real_decode_stub(data: bytes):
-    """Where a real codec (PIL / ffmpeg / soundfile) would run.
-
-    Deliberately unimplemented in this container; the pipeline routes
-    around it via the FIMG deterministic fake for tests.
-    """
-    raise NotImplementedError(
-        "real image/audio decode requires codec libraries not present in "
-        "this environment; use the FIMG deterministic fake in tests"
-    )
-
-
 FAKE_VIDEO_MAGIC = b"FVID"
-FAKE_AUDIO_MAGIC = b"FAUD"
 
 FRAME_SCHEMA = T.StructType(
     [
         T.StructField("frame_idx", T.IntegerType(), False),
         T.StructField("n_bytes", T.IntegerType(), False),
         T.StructField("mean_byte", T.DoubleType(), True),
-    ]
-)
-
-AUDIO_META_SCHEMA = T.StructType(
-    [
-        T.StructField("sample_rate", T.IntegerType(), True),
-        T.StructField("n_samples", T.LongType(), False),
-        T.StructField("duration_s", T.DoubleType(), True),
-        T.StructField("rms", T.DoubleType(), True),
     ]
 )
 
@@ -87,129 +46,27 @@ def encode_fake_video(frame_len: int, frames: list[bytes]) -> bytes:
     )
 
 
-def encode_fake_audio(sample_rate: int, samples: bytes) -> bytes:
-    """Deterministic synthetic 'audio': FAUD + sample_rate + i16 PCM-ish
-    byte payload (test helper)."""
-    return FAKE_AUDIO_MAGIC + struct.pack("<I", sample_rate) + samples
+def sample_video_frames(df: DataFrame, bin_col: str = "video",
+                        every: int = 2) -> DataFrame:
+    """Frame-sampling plumbing: FVID container -> array of per-frame
+    metadata structs for every ``every``-th frame, replacing ``bin_col``
+    (a real pipeline would emit decoded frame tensors here). Every other
+    column is kept zero-copy; header parsing of variable-length binaries
+    is per payload, numpy does the per-byte work (one reshape per
+    payload), and the ``frames`` column is built as an Arrow array
+    directly — no pandas anywhere. Bad payloads -> NULL, never task
+    failures."""
+    import numpy as np
 
-
-def _map_binary_column(df: DataFrame, bin_col: str, out_field: T.StructField,
-                       arrow_type_fn, payload_fn, drop_input: bool = True):
-    """Shared mapInArrow harness for the multimodal operators: keep every
-    other column zero-copy, run ``payload_fn`` once per payload (header
-    parsing of variable-length binaries is inherently per-row; numpy does
-    the per-byte work), and build the single output column as an Arrow
-    array directly — no pandas anywhere."""
     if bin_col not in df.columns:
         # fail loudly: pyarrow's get_field_index returns -1 for a missing
         # column, and column(-1) silently reads the LAST column instead
         raise ValueError(f"binary column {bin_col!r} not in {df.columns}")
-    keep = [f.name for f in df.schema.fields
-            if not (drop_input and f.name == bin_col)]
+    keep = [c for c in df.columns if c != bin_col]
     out_schema = T.StructType(
-        [df.schema[c] for c in keep] + [out_field]
+        [df.schema[c] for c in keep]
+        + [T.StructField("frames", T.ArrayType(FRAME_SCHEMA), True)]
     )
-
-    def run(batches: Iterator) -> Iterator:
-        import pyarrow as pa
-
-        out_type = arrow_type_fn(pa)
-        out_arrow = None
-        for b in batches:
-            payloads = b.column(b.schema.get_field_index(bin_col))
-            values = [payload_fn(raw) for raw in payloads.to_pylist()]
-            keep_arrays = [b.column(b.schema.get_field_index(c)) for c in keep]
-            if out_arrow is None:
-                out_arrow = pa.schema(
-                    [b.schema.field(b.schema.get_field_index(c)) for c in keep]
-                    + [pa.field(out_field.name, out_type)]
-                )
-            yield pa.RecordBatch.from_arrays(
-                keep_arrays + [pa.array(values, type=out_type)],
-                schema=out_arrow,
-            )
-
-    return df.mapInArrow(run, schema=out_schema)
-
-
-def _image_meta_arrow(pa):
-    return pa.struct([
-        pa.field("width", pa.int32()),
-        pa.field("height", pa.int32()),
-        pa.field("n_bytes", pa.int64(), nullable=False),
-        pa.field("format", pa.string()),
-        pa.field("mean_byte", pa.float64()),
-    ])
-
-
-def with_image_metadata(df: DataFrame, bin_col: str = "image") -> DataFrame:
-    """Decode/feature-extract over Arrow batches. Bad payloads produce
-    NULL metadata fields, never task failures (same error-capsule posture
-    as the text kernel, C10)."""
-    import numpy as np
-
-    def meta(raw):
-        if raw is None or len(raw) < 12 or bytes(raw[:4]) != FAKE_IMAGE_MAGIC:
-            return {"width": None, "height": None,
-                    "n_bytes": 0 if raw is None else len(raw),
-                    "format": None, "mean_byte": None}
-        w, h = struct.unpack("<II", bytes(raw[4:12]))
-        body = np.frombuffer(bytes(raw[12:]), dtype=np.uint8)
-        # 4-decimal truncation via INTEGER arithmetic (sum*10^4 // n), not
-        # float round: round-half ties land differently across engines,
-        # while this value is one exact int division + one double divide —
-        # bit-identical in Spark and the DuckDB oracle
-        mb = ((int(body.sum()) * 10000 // len(body)) / 10000.0
-              if len(body) else None)
-        return {"width": int(w), "height": int(h), "n_bytes": len(raw),
-                "format": "fimg", "mean_byte": mb}
-
-    return _map_binary_column(
-        df, bin_col, T.StructField("image_meta", IMAGE_META_SCHEMA, True),
-        _image_meta_arrow, meta,
-    )
-
-
-def resize_image(df: DataFrame, bin_col: str = "image",
-                 out_col: str = "image_small", factor: int = 2) -> DataFrame:
-    """'Resize' plumbing: FIMG payload -> FIMG payload at (w//f, h//f) with
-    the body subsampled every ``factor``-th byte — a deterministic stand-in
-    for a real thumbnailer (PIL.Image.resize would slot in at the marked
-    line; see real_decode_stub). Output stays a binary column so further
-    stages compose. Bad payloads -> NULL, never task failures."""
-
-    def resize(raw):
-        if raw is None or len(raw) < 12 or bytes(raw[:4]) != FAKE_IMAGE_MAGIC:
-            return None
-        w, h = struct.unpack("<II", bytes(raw[4:12]))
-        body = bytes(raw[12:])
-        # real codec would decode+resample here (real_decode_stub)
-        small = body[::factor]
-        return (FAKE_IMAGE_MAGIC
-                + struct.pack("<II", max(1, w // factor), max(1, h // factor))
-                + small)
-
-    return _map_binary_column(
-        df, bin_col, T.StructField(out_col, T.BinaryType(), True),
-        lambda pa: pa.binary(), resize, drop_input=False,
-    )
-
-
-def _frames_arrow(pa):
-    return pa.list_(pa.struct([
-        pa.field("frame_idx", pa.int32(), nullable=False),
-        pa.field("n_bytes", pa.int32(), nullable=False),
-        pa.field("mean_byte", pa.float64()),
-    ]))
-
-
-def sample_video_frames(df: DataFrame, bin_col: str = "video",
-                        every: int = 2) -> DataFrame:
-    """Frame-sampling plumbing: FVID container -> array of per-frame
-    metadata structs for every ``every``-th frame (a real pipeline would
-    emit decoded frame tensors here; ffmpeg decode is stubbed —
-    real_decode_stub). One numpy reshape per payload, no per-byte Python."""
-    import numpy as np
 
     def frames(raw):
         if raw is None or len(raw) < 12 or bytes(raw[:4]) != FAKE_VIDEO_MAGIC:
@@ -226,45 +83,27 @@ def sample_video_frames(df: DataFrame, bin_col: str = "video",
             for i in range(0, n, every)
         ]
 
-    return _map_binary_column(
-        df, bin_col, T.StructField("frames", T.ArrayType(FRAME_SCHEMA), True),
-        _frames_arrow, frames,
-    )
+    def run(batches: Iterator) -> Iterator:
+        import pyarrow as pa
 
+        out_type = pa.list_(pa.struct([
+            pa.field("frame_idx", pa.int32(), nullable=False),
+            pa.field("n_bytes", pa.int32(), nullable=False),
+            pa.field("mean_byte", pa.float64()),
+        ]))
+        out_arrow = None
+        for b in batches:
+            payloads = b.column(b.schema.get_field_index(bin_col))
+            values = [frames(raw) for raw in payloads.to_pylist()]
+            keep_arrays = [b.column(b.schema.get_field_index(c)) for c in keep]
+            if out_arrow is None:
+                out_arrow = pa.schema(
+                    [b.schema.field(b.schema.get_field_index(c)) for c in keep]
+                    + [pa.field("frames", out_type)]
+                )
+            yield pa.RecordBatch.from_arrays(
+                keep_arrays + [pa.array(values, type=out_type)],
+                schema=out_arrow,
+            )
 
-def _audio_arrow(pa):
-    return pa.struct([
-        pa.field("sample_rate", pa.int32()),
-        pa.field("n_samples", pa.int64(), nullable=False),
-        pa.field("duration_s", pa.float64()),
-        pa.field("rms", pa.float64()),
-    ])
-
-
-def with_audio_features(df: DataFrame, bin_col: str = "audio") -> DataFrame:
-    """Audio feature-extraction plumbing: FAUD payload -> (sample_rate,
-    n_samples, duration, RMS) via one vectorized numpy pass per payload
-    (soundfile/librosa decode is stubbed — real_decode_stub)."""
-    import numpy as np
-
-    def features(raw):
-        import math
-
-        if raw is None or len(raw) < 8 or bytes(raw[:4]) != FAKE_AUDIO_MAGIC:
-            return None
-        (rate,) = struct.unpack("<I", bytes(raw[4:8]))
-        pcm = np.frombuffer(bytes(raw[8:]), dtype=np.int16)
-        n = len(pcm)
-        rms = float(np.sqrt(np.mean(pcm.astype(np.float64) ** 2))) if n else None
-        # floor (not round) at 4 decimals: floor of a double is the same
-        # IEEE operation in every engine, so the DuckDB oracle reproduces
-        # the value exactly; round-half boundaries do not
-        return {"sample_rate": int(rate), "n_samples": n,
-                "duration_s": round(n / rate, 6) if rate else None,
-                "rms": (math.floor(rms * 10000) / 10000.0
-                        if rms is not None else None)}
-
-    return _map_binary_column(
-        df, bin_col, T.StructField("audio_meta", AUDIO_META_SCHEMA, True),
-        _audio_arrow, features,
-    )
+    return df.mapInArrow(run, schema=out_schema)

@@ -138,25 +138,3 @@ def pack_sequences(
 
     return sharded.groupBy("shard").applyInPandas(pack_shard, out_schema)
 
-
-def bin_fill_stats(packed: DataFrame, ctx_len: int = 2048) -> DataFrame:
-    """Roll packed rows up to the training-example grain: per-bin token
-    fill and utilization — the number a pipeline operator actually
-    watches (dense bins = fewer wasted FLOPs). Pure codegen agg."""
-    return (
-        packed.groupBy("shard", "bin_idx")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").alias("bin_tokens"),
-            F.max(F.col("bin_oversize").cast("int")).cast("boolean")
-            .alias("oversize"),
-        )
-        .withColumn(
-            "utilization",
-            F.round(
-                F.least(F.col("bin_tokens"), F.lit(ctx_len))
-                / F.lit(float(ctx_len)),
-                6,
-            ),
-        )
-    )

@@ -31,12 +31,6 @@ def hash_bucket(key_col, salt: str = ""):
     )
 
 
-def hash_sample(df: DataFrame, key_col: str, rate_bp: int,
-                salt: str = "") -> DataFrame:
-    """Keep ~rate_bp/10000 of rows, deterministically by key hash."""
-    return df.filter(hash_bucket(F.col(key_col), salt) < F.lit(rate_bp))
-
-
 def stratified_sample(df: DataFrame, rates: DataFrame, strata_col: str,
                       key_col: str, rate_col: str = "rate_bp") -> DataFrame:
     """Per-stratum hash sampling: join the broadcast ``rates`` table

@@ -221,62 +221,3 @@ def fingerprint64(texts: pd.Series) -> pd.Series:
             out.append(fp - (1 << 64) if fp >= (1 << 63) else fp)
     return pd.Series(out, dtype="int64")
 
-
-# a StructType object, NOT a DDL string: the decorator parses DDL at
-# import time, which requires an active SparkSession (the module must
-# import session-free, e.g. under pytest collection)
-_ZLIB_SCHEMA = T.StructType([
-    T.StructField("n_bytes", T.LongType()),
-    T.StructField("n_compressed", T.LongType()),
-])
-
-
-@F.pandas_udf(_ZLIB_SCHEMA)
-def _zlib_sizes(texts):
-    """(utf-8 byte count, zlib-compressed byte count) per document —
-    the raw material of the compression-ratio quality signal. zlib
-    level 6, deterministic for a fixed zlib build (the stdlib pins the
-    format; a zlib UPGRADE could shift compressed sizes by a few bytes —
-    the ratio's filtering role tolerates that, and the pytest oracle
-    uses the same runtime so equality holds per-environment). NULL text
-    -> NULL struct."""
-    import zlib
-
-    import pandas as pd
-
-    rows = []
-    for t in texts:
-        if t is None:
-            rows.append({"n_bytes": None, "n_compressed": None})
-        else:
-            b = t.encode("utf-8")
-            rows.append({"n_bytes": len(b),
-                         "n_compressed": len(zlib.compress(b, 6))})
-    return pd.DataFrame(rows)
-
-
-def with_compression_ratio(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Compression-ratio quality signal (a standard crawl-corpus filter
-    feature, e.g. RedPajama-v2/Dolma quality signals): highly REPETITIVE
-    text compresses far below normal prose, near-random noise barely
-    compresses at all — both tails are junk. Appends (n_bytes,
-    n_compressed, compression_ratio) where the ratio =
-    compressed/original HALF_UP at 4dp in exact integer arithmetic off
-    the two byte counts (the only Python is the vectorized zlib batch;
-    empty docs get ratio of the 8-byte zlib header over 1 — large,
-    flagging them noise-side, callers gate short docs on length first).
-    """
-    out = df.withColumn("_z", _zlib_sizes(F.col(text_col)))
-    return (
-        out.withColumn("n_bytes", F.col("_z.n_bytes"))
-        .withColumn("n_compressed", F.col("_z.n_compressed"))
-        .withColumn(
-            "compression_ratio",
-            F.when(
-                F.col("n_bytes").isNotNull(),
-                _ratio_e4(F.col("n_compressed"),
-                          F.greatest(F.col("n_bytes"), F.lit(1)), 4),
-            ),
-        )
-        .drop("_z")
-    )

@@ -16,12 +16,7 @@ Scale design:
   job moves the (smaller) extracted output into the bucketed write
   layout. Lineage is aggregated from the written files (verify-what-
   committed), touching only metric columns.
-- **Skew salting**: when a consumer DOES need conv-co-located rows,
-  ``salted_repartition`` shuffles on ``(conv_id, turn_idx // SALT_BLOCK)``
-  — a single 10^6-turn conversation splits into ~4k-turn blocks spread
-  over the cluster instead of landing on one task. Extraction is
-  per-turn independent, so block splitting cannot change results
-  (batch-invariance is tested). The write shuffle salts the same way
+- **Write salting**: the write shuffle salts on ``(conv_id, turn_idx)``
   (``_wsalt``) to bound files-per-bucket without hot write tasks.
 """
 
@@ -62,26 +57,6 @@ def _salted_bucket_write(df: DataFrame, num_partitions: int,
         .repartition(num_partitions, "bucket", "_wsalt")
         .drop("_wsalt")
     )
-
-
-def salted_repartition(df: DataFrame, num_partitions: int,
-                       sort: bool = False) -> DataFrame:
-    """Shuffle on (conv_id, turn-block): heavy conversations split across
-    partitions; short ones stay whole. Use when a downstream operator
-    needs conv-co-located rows; the extraction itself does NOT (it is
-    per-turn independent), so the default pipeline never calls this
-    before extracting — measured on this box, pre-shuffling the raw 2 KB
-    payload rows costs 2-3x the no-shuffle scan->extract path.
-
-    ``sort=True`` additionally orders (conv_id, turn_idx) runs within
-    partitions — only needed by consumers that stream turns in order;
-    equality verification joins on the keys instead (SURVEY.md §7.3.4).
-    """
-    salted = df.withColumn(
-        "_salt", (F.col("turn_idx") / F.lit(SALT_BLOCK)).cast("int")
-    )
-    out = salted.repartition(num_partitions, "conv_id", "_salt").drop("_salt")
-    return out.sortWithinPartitions("conv_id", "turn_idx") if sort else out
 
 
 def heavy_conversations(df: DataFrame, threshold: int = SALT_BLOCK) -> DataFrame:
@@ -250,8 +225,6 @@ def compact(spark: SparkSession, output_dir: str,
     crash mid-compaction leaves the previous state fully readable and a
     rerun is idempotent. Must not race an in-flight extraction run.
     """
-    from pyspark.sql import functions as F  # noqa: F401 (local alias clarity)
-
     manifest = Manifest(output_dir)
     committed = committed_view(spark, output_dir)
     run_id = manifest.next_run_id()

@@ -45,26 +45,6 @@ EXTRACT_RESULT_FIELDS = [
     T.StructField("error", T.StringType(), True),
 ]
 
-EXTRACTED_TRANSCRIPTS_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("role", T.StringType(), True),
-        T.StructField("tool", T.StringType(), True),
-        T.StructField("ts", T.TimestampType(), True),
-        *EXTRACT_RESULT_FIELDS,
-    ]
-)
-
-EXTRACTED_DOCUMENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        *EXTRACT_RESULT_FIELDS,
-    ]
-)
-
 # Per-partition lineage row (north rule: source snapshot id, partition id,
 # rows in/out, extraction error counts; analog of the reference's
 # usage_records table, api/models/db_models.py:128-160).

@@ -27,10 +27,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    so tests and bench agree with the driver harness.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default:
+    the CPUs this process may run on) so tests, bench and the CLI agree.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         # local[N] → N; "local[*]" → os cpu count
@@ -45,6 +46,8 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # Arrow toPandas/createDataFrame(pandas): exact_cosine_pairs
+        # round-trips through pandas on the dedup_embedding_cosine path
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

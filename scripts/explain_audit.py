@@ -136,15 +136,6 @@ def _build_spandedup(spark, sf_dir):
     return remove_duplicated_spans(d, "doc_id", "text", k=20)
 
 
-def _build_bpe_apply(spark, sf_dir):
-    from docling_api_spark.operators.bpe import apply_bpe
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    return apply_bpe(d, [("t", "h"), ("th", "e")])
-
-
 def _build_pagerank_iter(spark, sf_dir):
     from pyspark.sql import functions as F
 
@@ -178,15 +169,6 @@ def _build_dsir(spark, sf_dir):
     return dsir_select(
         d, d.filter("doc_id % 7 = 0"), d.filter("doc_id % 7 = 1"), k=100
     )
-
-
-def _build_hashed_embeddings(spark, sf_dir):
-    from docling_api_spark.operators.embedding import hashed_embeddings
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    return hashed_embeddings(d)
 
 
 def _build_c4_clean(spark, sf_dir):
@@ -258,13 +240,6 @@ EXTRA_CHECKS = {
                 "contain cross-doc spans reach the Arrow cutter; clean docs "
                 "union back JVM-side",
     },
-    "bpe_apply": {
-        "build": _build_bpe_apply,
-        "must": ["MapInArrow"],
-        "must_not": ["Exchange"],
-        "note": "corpus-wide BPE encoding is scan -> MapInArrow with the "
-                "merge table broadcast: no shuffle anywhere in the job",
-    },
     "classifier_nb_score": {
         "build": _build_nb_score,
         "must": ["BroadcastHashJoin", "Generate", "HashAggregate"],
@@ -301,16 +276,6 @@ EXTRA_CHECKS = {
                 "k-row driver merge (TakeOrderedAndProject) on top of "
                 "the classifier's broadcast scoring pass — never a "
                 "corpus-wide sort",
-    },
-    "hashed_text_embeddings": {
-        "build": _build_hashed_embeddings,
-        "must": ["Generate", "HashAggregate", "xxhash64"],
-        "must_not": ["ArrowEvalPython", "BatchEvalPython",
-                     "SortMergeJoin", "CartesianProduct"],
-        "note": "signed-projection text embeddings are one explode + ONE "
-                "partial-agg groupBy with 64 codegen'd conditional sums "
-                "(the proven simhash64 plan shape) — exact long sums, no "
-                "Python, one exchange on doc_id",
     },
     "c4_clean_lines": {
         "build": _build_c4_clean,

@@ -97,34 +97,6 @@ def test_asof_join_edges(spark):
     assert want[3] == (None, None, 0)
 
 
-def test_range_interval_count(spark):
-    import datetime as dt
-
-    from docling_api_spark.operators.joins import range_interval_count
-
-    rng = random.Random(7)
-    base = dt.datetime(2024, 3, 1)
-    lhs = [(i, rng.randrange(4),
-            base + dt.timedelta(seconds=rng.randrange(0, 3600)), 0.0)
-           for i in range(80)]
-    rhs = [(1000 + i, rng.randrange(4),
-            base + dt.timedelta(seconds=rng.randrange(0, 3600)), 0.0)
-           for i in range(80)]
-    got = range_interval_count(
-        _mk_events(spark, lhs), _mk_events(spark, rhs).select("user_id", "ts"),
-        on="user_id", lower_s=300, upper_s=60, count_col="n",
-    ).orderBy("event_id").collect()
-    for r in got:
-        _eid, user, ts, _ = lhs[r["event_id"]]
-        want = sum(
-            1 for q in rhs
-            if q[1] == user
-            and q[2] >= ts - dt.timedelta(seconds=300)  # lower closed
-            and q[2] < ts + dt.timedelta(seconds=60)    # upper open
-        )
-        assert r["n"] == want, (r, want)
-
-
 def test_asof_join_null_attach_no_chimera(spark):
     """The attached columns must all come from the SAME right row even
     when the latest right row carries a null attach value — a per-column
@@ -199,8 +171,7 @@ def test_asof_join_null_keys_never_match(spark):
     survive with null attaches / zero counts (left-outer)."""
     import datetime as dt
 
-    from docling_api_spark.operators.joins import (asof_join,
-                                                   range_interval_count)
+    from docling_api_spark.operators.joins import asof_join
 
     t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
     left = spark.createDataFrame(
@@ -221,13 +192,6 @@ def test_asof_join_null_keys_never_match(spark):
     }
     assert rows[0]["r_value"] is None and rows[0]["n_prev"] == 0
     assert rows[1]["r_value"] == 3.0 and rows[1]["n_prev"] == 1
-    counts = {
-        r["event_id"]: r["n_in_range"]
-        for r in range_interval_count(
-            left, right, on="user_id", lower_s=600,
-        ).collect()
-    }
-    assert counts == {0: 0, 1: 1}
 
 
 def test_asof_join_output_clobber_raises(spark):
@@ -239,8 +203,7 @@ def test_asof_join_output_clobber_raises(spark):
     import pytest as _pytest
     from pyspark.sql import functions as F
 
-    from docling_api_spark.operators.joins import (asof_join,
-                                                   range_interval_count)
+    from docling_api_spark.operators.joins import asof_join
 
     t0 = dt.datetime(2024, 1, 1)
     left = spark.createDataFrame(
@@ -257,25 +220,19 @@ def test_asof_join_output_clobber_raises(spark):
         asof_join(left.withColumn("n_right_preceding", F.lit(1)), right,
                   on="user_id", attach_cols=("value",),
                   count_preceding_s=60)
-    with _pytest.raises(ValueError, match="already exists"):
-        range_interval_count(left.withColumn("n_in_range", F.lit(1)),
-                             right, on="user_id")
     # Spark resolves column names case-insensitively by default, so a
     # differently-cased left column would still be clobbered
     with _pytest.raises(ValueError, match="already exists"):
         asof_join(left.withColumn("Asof_Value", F.lit(1)), right,
                   on="user_id", attach_cols=("value",))
     # an output name equal to an internal scratch column would be
-    # consumed by the final drop()/filter — reserved in both operators
+    # consumed by the final drop()/filter — reserved
     with _pytest.raises(ValueError, match="reserved"):
         asof_join(left, right, on="user_id", attach_cols=("value",),
                   count_preceding_s=60, count_col="_asof_is_right")
     with _pytest.raises(ValueError, match="reserved"):
         asof_join(left, right, on="user_id",
                   attach_cols=("asof_right_row",), prefix="_")
-    with _pytest.raises(ValueError, match="reserved"):
-        range_interval_count(left, right, on="user_id",
-                             count_col="_asof_is_right")
 
 
 def test_asof_join_tie_break_multi_col(spark):

@@ -1,50 +1,19 @@
 """Multimodal plumbing tests: schema/batching/NULL-capsule behavior of the
-binary-column operators (codec step is a deterministic fake; see
+binary-column frame sampler (codec step is a deterministic fake; see
 operators/multimodal.py docstring)."""
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 
 from docling_api_spark.operators.multimodal import (
-    encode_fake_audio,
-    encode_fake_image,
     encode_fake_video,
-    real_decode_stub,
-    resize_image,
     sample_video_frames,
-    with_audio_features,
-    with_image_metadata,
 )
 
 
 def _bin_df(spark, rows, col):
     return spark.createDataFrame(rows, schema=f"id int, {col} binary")
-
-
-def test_image_metadata_and_null_capsule(spark):
-    img = encode_fake_image(64, 32, bytes(range(100)))
-    df = _bin_df(spark, [(1, img), (2, b"not an image"), (3, None)], "image")
-    got = {r["id"]: r for r in with_image_metadata(df).collect()}
-    m = got[1]["image_meta"]
-    assert (m["width"], m["height"], m["format"]) == (64, 32, "fimg")
-    assert m["mean_byte"] == round(float(np.arange(100).mean()), 4)
-    assert got[2]["image_meta"]["width"] is None  # bad magic -> null fields
-    assert got[3]["image_meta"]["n_bytes"] == 0
-
-
-def test_resize_halves_dims_and_composes(spark):
-    img = encode_fake_image(64, 32, bytes(range(200)))
-    df = _bin_df(spark, [(1, img), (2, b"junk")], "image")
-    small = resize_image(df, factor=2).drop("image").withColumnRenamed(
-        "image_small", "image"
-    )
-    got = {r["id"]: r for r in with_image_metadata(small).collect()}
-    m = got[1]["image_meta"]
-    assert (m["width"], m["height"]) == (32, 16)
-    assert m["n_bytes"] == 12 + 100  # header + every-2nd body byte
-    assert got[2]["image_meta"]["width"] is None  # junk -> NULL propagates
 
 
 def test_video_frame_sampling(spark):
@@ -57,20 +26,5 @@ def test_video_frame_sampling(spark):
     assert [f["mean_byte"] for f in fr] == [0.0, 2.0]
     assert all(f["n_bytes"] == 16 for f in fr)
     assert got[2]["frames"] is None  # truncated container -> NULL
-
-
-def test_audio_features(spark):
-    pcm = np.full(32, 1000, dtype=np.int16).tobytes()
-    df = _bin_df(spark, [(1, encode_fake_audio(16000, pcm)), (2, None)], "audio")
-    got = {r["id"]: r for r in with_audio_features(df).collect()}
-    m = got[1]["audio_meta"]
-    assert m["sample_rate"] == 16000
-    assert m["n_samples"] == 32
-    assert m["duration_s"] == 32 / 16000
-    assert m["rms"] == 1000.0
-    assert got[2]["audio_meta"] is None
-
-
-def test_real_codec_is_an_explicit_stub():
-    with pytest.raises(NotImplementedError):
-        real_decode_stub(b"\x89PNG")
+    with pytest.raises(ValueError, match="binary column 'clip'"):
+        sample_video_frames(df, bin_col="clip")

@@ -66,10 +66,7 @@ def test_pack_invariants(spark):
     """Invariants on a skewed corpus: no bin over budget unless it is a
     single flagged-oversize doc; offsets tile each bin contiguously; no
     doc dropped or duplicated; result independent of input partitioning."""
-    from pyspark.sql import functions as F
-
-    from docling_api_spark.operators.packing import (bin_fill_stats,
-                                                     pack_sequences)
+    from docling_api_spark.operators.packing import pack_sequences
 
     rng = random.Random(5)
     rows = [(f"d{i:04d}", " ".join(["tok"] * rng.randrange(0, 200)))
@@ -92,10 +89,6 @@ def test_pack_invariants(spark):
         for r in members:
             assert r["offset_in_bin"] == off
             off += r["n_tokens"]
-    stats = {(r["shard"], r["bin_idx"]): r
-             for r in bin_fill_stats(packed, ctx_len=96).collect()}
-    assert set(stats) == set(bins)
-    assert all(0.0 <= r["utilization"] <= 1.0 for r in stats.values())
     # partitioning invariance: same assignment from a repartitioned input
     again = {
         r["doc_id"]: (r["shard"], r["bin_idx"], r["offset_in_bin"])

@@ -158,45 +158,3 @@ def test_top_tokens_match_replica(spark):
     got2 = [(r["token"], int(r["n_occurrences"]))
             for r in top_tokens(docs.repartition(13), 25).collect()]
     assert got2 == got
-
-
-def test_compression_ratio_matches_replica(spark):
-    import zlib
-
-    from docling_api_spark.operators.textstats import with_compression_ratio
-    from tests.test_domains import ratio
-
-    cases = [
-        (1, "spam spam spam spam spam spam spam spam spam spam " * 30),
-        # prose long enough that the zlib header stops dominating
-        (2, " ".join(
-            f"Sentence number {i} mentions rather different ideas like "
-            f"{w} and keeps the vocabulary moving along nicely."
-            for i, w in enumerate(
-                ["planners", "shuffles", "metrics", "foxes", "rivers",
-                 "candles", "magnets", "violins", "orchards", "glaciers"])
-        )),
-        (3, ""), (4, None),
-        # genuinely high-entropy deterministic noise (a hash chain —
-        # an arithmetic character pattern is periodic and compresses)
-        (5, "".join(
-            __import__("base64").b64encode(
-                __import__("hashlib").sha256(
-                    bytes([i % 256, i // 256])).digest()).decode()
-            for i in range(40))),
-    ]
-    df = spark.createDataFrame(cases, "doc_id long, text string")
-    got = {int(r["doc_id"]): (r["n_bytes"], r["n_compressed"],
-                              r["compression_ratio"])
-           for r in with_compression_ratio(df).collect()}
-    for i, t in cases:
-        if t is None:
-            assert got[i] == (None, None, None)
-            continue
-        b = t.encode("utf-8")
-        c = len(zlib.compress(b, 6))
-        assert got[i] == (len(b), c, ratio(c, max(len(b), 1), 4)), i
-    # the signal: repetitive text compresses hard, noise barely
-    assert got[1][2] < 0.1
-    assert got[5][2] > 0.7
-    assert 0.1 < got[2][2] < 0.7

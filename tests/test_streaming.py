@@ -1,125 +1,7 @@
-"""Structured Streaming tests: streaming extraction (ST1 variant) and
-the W1 rate-limit windowed count, driven synchronously over staged
-parquet."""
+"""Structured Streaming test: the dedup-index continuous-ingest query,
+driven synchronously over staged parquet."""
 
 from __future__ import annotations
-
-import pandas as pd
-
-from tests.conftest import canon_spans
-
-
-def test_streaming_extraction_matches_batch(spark, tmp_path):
-    from docling_api_spark.gen import transcripts_df
-    from docling_api_spark.operators.extract import extract_text_column
-    from docling_api_spark.streaming.stream import extract_stream
-
-    src = tmp_path / "src"
-    out = tmp_path / "out"
-    ckpt = tmp_path / "ckpt"
-    t = transcripts_df(spark, 20, partitions=2)
-    t.write.mode("overwrite").parquet(str(src))
-
-    q = extract_stream(spark, str(src), str(out), str(ckpt))
-    q.awaitTermination(300)
-
-    batch = extract_text_column(spark.read.parquet(str(src))).toPandas()
-    streamed = spark.read.parquet(str(out)).toPandas()
-    assert len(streamed) == len(batch)
-    for df in (batch, streamed):
-        df["spans_json"] = df["spans"].map(canon_spans)
-    b = batch.drop(columns=["spans"]).sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-    s = streamed.drop(columns=["spans"]).sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(b[sorted(b.columns)], s[sorted(s.columns)], check_like=True)
-
-
-def test_rate_limit_stream(spark, tmp_path):
-    from docling_api_spark.schema import TRANSCRIPTS_SCHEMA  # noqa: F401
-    from docling_api_spark.streaming.stream import rate_limit_counts
-    from pyspark.sql import functions as F, types as T
-
-    # synthetic burst: user 1 sends 70 requests in one minute (over the
-    # default 60/min limit), user 2 sends 5
-    rows = [(1, f"2024-01-01 00:00:{s%60:02d}.{s//60}00000") for s in range(70)]
-    rows += [(2, f"2024-01-01 00:00:{s:02d}.000000") for s in range(5)]
-    pdf = pd.DataFrame(rows, columns=["user_id", "ts"])
-    pdf["ts"] = pd.to_datetime(pdf["ts"])
-    src = tmp_path / "events"
-    spark.createDataFrame(pdf).write.mode("overwrite").parquet(str(src))
-
-    schema = T.StructType([
-        T.StructField("user_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-    ])
-    stream = spark.readStream.schema(schema).parquet(str(src))
-    agg = rate_limit_counts(stream)
-    q = (
-        agg.writeStream.format("memory").queryName("rl")
-        .outputMode("complete").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(300)
-    res = spark.sql("SELECT * FROM rl").toPandas()
-    u1 = res[res.user_id == 1]
-    assert int(u1["n_requests"].sum()) == 70
-    assert bool(u1.loc[u1["n_requests"].idxmax(), "over_limit"])
-    u2 = res[res.user_id == 2]
-    assert not u2["over_limit"].any()
-
-
-def test_stateful_conversation_progress(spark, tmp_path):
-    """applyInPandasWithState: counters accumulate across micro-batches,
-    and a conversation closed by the END marker drops its state."""
-    from docling_api_spark.schema import TRANSCRIPTS_SCHEMA
-    from docling_api_spark.streaming.stateful import conversation_progress
-
-    src = tmp_path / "turns"
-    src.mkdir()
-    ckpt = tmp_path / "ckpt"
-
-    def write_batch(name, rows):
-        pdf = pd.DataFrame(
-            rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-        )
-        pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
-        pdf["ts"] = pd.to_datetime(pdf["ts"])
-        spark.createDataFrame(pdf, schema=TRANSCRIPTS_SCHEMA).coalesce(1) \
-            .write.mode("append").parquet(str(src))
-
-    import time
-
-    ts = "2024-01-01 00:00:00"
-    # file 1: conv a gets 2 turns, conv b gets 1
-    write_batch("b1", [
-        ("a", 0, "user", "<p>hi</p>", None, ts),
-        ("a", 1, "assistant", "reply", None, ts),
-        ("b", 0, "user", "x", None, ts),
-    ])
-    time.sleep(1.1)  # distinct mtimes -> deterministic file order
-    # file 2: conv a continues then closes with the END marker
-    write_batch("b2", [
-        ("a", 2, "tool", "result", "search", ts),
-        ("a", 3, "system", "", "END", ts),
-    ])
-
-    # maxFilesPerTrigger=1 turns the two files into two micro-batches of
-    # ONE query run — state must carry across the micro-batch boundary
-    stream = spark.readStream.schema(TRANSCRIPTS_SCHEMA) \
-        .option("maxFilesPerTrigger", 1).parquet(str(src))
-    q = (
-        conversation_progress(stream)
-        .writeStream.format("memory").queryName("progress")
-        .outputMode("update").option("checkpointLocation", str(ckpt))
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(300)
-    res = spark.sql("SELECT * FROM progress").toPandas()
-    a = res[res.conv_id == "a"].sort_values("turns_seen")
-    # one update row per micro-batch that touched conv a
-    assert list(a["turns_seen"]) == [2, 4]        # 2 after mb1, 2+2 after mb2
-    assert list(a["max_turn_idx"]) == [1, 3]
-    assert list(a["complete"]) == [False, True]   # END marker closes it
-    b = res[res.conv_id == "b"]
-    assert list(b["turns_seen"]) == [1]
 
 
 def test_dedup_index_streaming_ingest(spark, tmp_path):
