@@ -922,7 +922,7 @@ def extract_doc_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def extract_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end transcript extraction: distributed deterministic
-    generation -> mapInPandas extraction (the north-rule pipeline)."""
+    generation -> mapInArrow extraction (the north-rule pipeline)."""
     from docling_api_spark.gen import transcripts_df
     from docling_api_spark.operators.extract import extract_text_column
 
@@ -2209,7 +2209,7 @@ def oracle_sql() -> dict[str, str]:
                    1 AS pages_from_json,
                    'docling-spark' AS schema_name,
                    TRUE AS markdown_gated_off,
-                   CASE WHEN regexp_matches(text, '\A[a-z ]*\z') THEN 'ok'
+                   CASE WHEN regexp_matches(text, '\\A[a-z ]*\\z') THEN 'ok'
                         ELSE 'ORACLE GUARD: corpus property violated'
                    END AS corpus_guard
             FROM documents

@@ -7,11 +7,12 @@ README.md:7-10): payload -> structured node tree -> content/boilerplate
 classification -> markdown + span offsets + page count, with per-document
 error capsuling (modal_docling.py:259-264).
 
-This module is PURE PYTHON + numpy, no Spark imports. The SAME batch
+This module is PURE PYTHON, no Spark imports. The SAME batch
 function, ``extract_flat``, backs both the single-node oracle (golden
 fixtures, pytest) and the ``mapInArrow`` operator — so Spark-vs-oracle
 equality tests the Spark plumbing (ordering, batching, Arrow encoding),
-not two divergent implementations.
+not two divergent implementations. It holds the only per-row loop and
+error capsule; ``extract_one`` is a one-row ``extract_flat``.
 
 Determinism rules (SURVEY.md §4.3): no wall clock, no randomness, no
 dict-order leaks, no batch-boundary dependence — each document's result
@@ -711,7 +712,7 @@ def _parse_html(text: str):
                         t = table_stack[-1]
                         if t.cur_row is not None:
                             t.rows.append(t.cur_row)
-                            if t.in_thead or (name == "tr" and _tr_was_header(t)):
+                            if t.in_thead:
                                 t.header_rows = len(t.rows)
                             t.cur_row = None
                 elif top in ("td", "th"):
@@ -735,11 +736,6 @@ def _parse_html(text: str):
             t.rows.append(t.cur_row)
             t.cur_row = None
     return nodes
-
-
-def _tr_was_header(t: _Table) -> bool:
-    # first row of a table with no thead: treated as header at emission
-    return False
 
 
 # ---------------------------------------------------------------------------
@@ -1027,76 +1023,38 @@ def _extract_plain(text: str, options: ExtractOptions = DEFAULT_OPTIONS):
 # Top level: per-document dispatch with error capsuling (C10)
 # ---------------------------------------------------------------------------
 
-def _result(status: str, pkind: str, out: str, spans: list, pages: int,
-            n_nodes: int, items: list | None, options: ExtractOptions,
-            error: str | None = None) -> dict:
-    """Assemble one result row with P2 output-format gating
-    (docling_client.py:452-456): the un-requested export column is NULL.
-    Error/skipped capsules carry ``items=None`` → no doc_json (the
-    reference's error response has no content keys either,
-    modal_docling.py:259-264)."""
-    return {
-        "status": status,
-        "payload_kind": pkind,
-        "extracted_text": out if options.want_markdown else None,
-        "doc_json": (
-            doc_json_str(pkind, pages, n_nodes, items)
-            if options.want_json and items is not None else None
-        ),
-        "spans": spans,
-        "pages": pages,
-        "n_nodes": n_nodes,
-        "error": error,
-    }
+# payload kind -> parser; every other successful kind (plain, b64_plain)
+# is plain prose
+_PARSERS = {"html": _extract_html, "markdown": _extract_markdown,
+            "pdfish": _extract_pdfish}
 
 
-def extract_one(text: str | None,
-                options: ExtractOptions = DEFAULT_OPTIONS) -> dict:
-    """Extract a single payload. NEVER raises — any internal failure
-    becomes a status='error' capsule (reference modal_docling.py:259-264)."""
-    try:
-        kind = sniff_kind(text, options.max_payload_chars)
-        if kind == "empty":
-            return _result(STATUS_SUCCESS, "empty", "", [], 1, 0,
-                           [] if options.want_json else None, options)
-        if kind == "oversize":
-            return _result(
-                STATUS_ERROR, "oversize", "", [], 1, 0, None, options,
-                error=(f"payload_too_large: {len(text)} > "
-                       f"{options.max_payload_chars}"))
-        if kind == "needs_ocr":
-            return _result(STATUS_SKIPPED_OCR, "needs_ocr", "", [], 1, 0,
-                           None, options)
-        if kind == "b64":
-            try:
-                raw = base64.b64decode(text.strip().replace("\n", ""), validate=True)
-                decoded = raw.decode("utf-8")
-            except (binascii.Error, UnicodeDecodeError) as e:
-                return _result(
-                    STATUS_ERROR, "b64", "", [], 1, 0, None, options,
-                    error=f"invalid_base64_payload: {type(e).__name__}")
-            if decoded.startswith(PDFISH_MAGIC):
-                out, spans, pages, n, items = _extract_pdfish(decoded, options)
-                return _result(STATUS_SUCCESS, "pdfish", out, spans, pages,
-                               n, items, options)
-            # decodable base64 but unknown magic -> treat decoded as plain
-            out, spans, pages, n, items = _extract_plain(decoded, options)
-            return _result(STATUS_SUCCESS, "b64_plain", out, spans, pages,
-                           n, items, options)
-        if kind == "html":
-            out, spans, pages, n, items = _extract_html(text, options)
-            return _result(STATUS_SUCCESS, "html", out, spans, pages, n,
-                           items, options)
-        if kind == "markdown":
-            out, spans, pages, n, items = _extract_markdown(text, options)
-            return _result(STATUS_SUCCESS, "markdown", out, spans, pages, n,
-                           items, options)
-        out, spans, pages, n, items = _extract_plain(text, options)
-        return _result(STATUS_SUCCESS, "plain", out, spans, pages, n,
-                       items, options)
-    except Exception as e:  # noqa: BLE001 — capsule, never crash the batch
-        return _result(STATUS_ERROR, "unknown", "", [], 1, 0, None, options,
-                       error=f"{type(e).__name__}: {e}")
+def _extract_row(text: str | None, options: ExtractOptions) -> tuple:
+    """One payload -> ``(status, payload_kind, markdown, spans, pages,
+    n_nodes, items, error)``. Error/skipped capsules carry ``items=None``
+    → no doc_json (the reference's error response has no content keys
+    either, modal_docling.py:259-264). May raise; ``extract_flat``
+    capsules that."""
+    kind = sniff_kind(text, options.max_payload_chars)
+    if kind == "empty":
+        return (STATUS_SUCCESS, "empty", "", [], 1, 0,
+                [] if options.want_json else None, None)
+    if kind == "oversize":
+        return (STATUS_ERROR, "oversize", "", [], 1, 0, None,
+                f"payload_too_large: {len(text)} > {options.max_payload_chars}")
+    if kind == "needs_ocr":
+        return (STATUS_SKIPPED_OCR, "needs_ocr", "", [], 1, 0, None, None)
+    if kind == "b64":
+        try:
+            raw = base64.b64decode(text.strip().replace("\n", ""), validate=True)
+            text = raw.decode("utf-8")
+        except (binascii.Error, UnicodeDecodeError) as e:
+            return (STATUS_ERROR, "b64", "", [], 1, 0, None,
+                    f"invalid_base64_payload: {type(e).__name__}")
+        # decodable base64 but unknown magic -> treat decoded as plain
+        kind = "pdfish" if text.startswith(PDFISH_MAGIC) else "b64_plain"
+    parse = _PARSERS.get(kind, _extract_plain)
+    return (STATUS_SUCCESS, kind, *parse(text, options), None)
 
 
 def extract_flat(texts, options: ExtractOptions = DEFAULT_OPTIONS) -> dict[str, list]:
@@ -1106,23 +1064,36 @@ def extract_flat(texts, options: ExtractOptions = DEFAULT_OPTIONS) -> dict[str, 
     Arrow ListArray/StructArray memory layout itself — so the operator
     builds the nested column with zero per-element Python.
 
+    NEVER raises on a payload — any internal failure becomes a
+    status='error' capsule row (reference modal_docling.py:259-264).
+    P2 output-format gating (docling_client.py:452-456): the
+    un-requested export column is NULL.
+
     Measured on this box, routing the output through pandas object
     columns (``mapInPandas`` serializer) costs ~35% of end-to-end
     throughput; this layout + ``mapInArrow`` recovers it."""
+    want_markdown, want_json = options.want_markdown, options.want_json
     status: list = []; kind: list = []; text: list = []; djson: list = []
     pages: list = []; n_nodes: list = []; error: list = []
     s_start: list = []; s_end: list = []; s_nid: list = []; s_kind: list = []
     offsets: list = [0]
     for t in texts:
-        r = extract_one(t, options)
-        status.append(r["status"])
-        kind.append(r["payload_kind"])
-        text.append(r["extracted_text"])
-        djson.append(r["doc_json"])
-        pages.append(r["pages"])
-        n_nodes.append(r["n_nodes"])
-        error.append(r["error"])
-        for s in r["spans"]:
+        try:
+            st, pk, out, spans, pg, n, items, err = _extract_row(t, options)
+            dj = (doc_json_str(pk, pg, n, items)
+                  if want_json and items is not None else None)
+        except Exception as e:  # noqa: BLE001 — capsule, never crash the batch
+            st, pk, out, spans, pg, n, dj, err = (
+                STATUS_ERROR, "unknown", "", [], 1, 0, None,
+                f"{type(e).__name__}: {e}")
+        status.append(st)
+        kind.append(pk)
+        text.append(out if want_markdown else None)
+        djson.append(dj)
+        pages.append(pg)
+        n_nodes.append(n)
+        error.append(err)
+        for s in spans:
             s_start.append(s[0]); s_end.append(s[1])
             s_nid.append(s[2]); s_kind.append(s[3])
         offsets.append(len(s_start))
@@ -1134,3 +1105,13 @@ def extract_flat(texts, options: ExtractOptions = DEFAULT_OPTIONS) -> dict[str, 
         "span_kind": s_kind, "span_offsets": offsets,
     }
 
+
+def extract_one(text: str | None,
+                options: ExtractOptions = DEFAULT_OPTIONS) -> dict:
+    """Extract a single payload: a one-row view of ``extract_flat``, with
+    spans as ``(start, end, node_id, kind)`` tuples. NEVER raises."""
+    cols = extract_flat([text], options)
+    row = {k: v[0] for k, v in cols.items() if not k.startswith("span_")}
+    row["spans"] = list(zip(cols["span_start"], cols["span_end"],
+                            cols["span_node_id"], cols["span_kind"]))
+    return row

@@ -16,11 +16,9 @@ from __future__ import annotations
 import pandas as pd
 
 from docling_api_spark.extraction.kernel import DEFAULT_OPTIONS, extract_flat
+from docling_api_spark.schema import EXTRACT_RESULT_FIELDS
 
-RESULT_COLS = [
-    "status", "payload_kind", "extracted_text", "doc_json", "spans",
-    "pages", "n_nodes", "error",
-]
+RESULT_COLS = [f.name for f in EXTRACT_RESULT_FIELDS]
 
 
 def oracle_extract(pdf: pd.DataFrame, text_col: str = "text",

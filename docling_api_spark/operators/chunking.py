@@ -36,16 +36,6 @@ from pyspark.sql import functions as F
 _RESERVED = ("_toks", "_n", "_n_chunks", "chunk_idx")
 
 
-def n_chunks_for(n_tokens: int, ctx_len: int, stride: int) -> int:
-    """Window count covering ``n_tokens`` tokens: 1 window when the doc
-    fits, else enough stride steps that the last window reaches the end.
-    Shared by the operator (as a JVM expression mirroring this) and the
-    pytest oracle — one definition of the windowing rule."""
-    if n_tokens <= ctx_len:
-        return 1
-    return -((n_tokens - ctx_len) // -stride) + 1  # ceil div
-
-
 def chunk_documents(
     df: DataFrame,
     ctx_len: int = 512,
@@ -89,7 +79,7 @@ def chunk_documents(
         )
         .withColumn("_n", F.size("_toks"))
     )
-    # n_chunks_for() as a codegen expression: ceil((n - ctx)/stride) + 1
+    # window count covering _n tokens: ceil((n - ctx)/stride) + 1
     # for n > ctx, else 1 — integer `div` on the biased numerator, no
     # float round-trip at any document length.
     n_chunks = F.when(

@@ -29,12 +29,10 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
+from docling_api_spark.extraction.kernel import DEFAULT_OPTIONS
 from docling_api_spark.schema import EXTRACT_RESULT_FIELDS
-
-
-def _result_schema(passthrough: T.StructType) -> T.StructType:
-    return T.StructType(list(passthrough.fields) + list(EXTRACT_RESULT_FIELDS))
 
 
 def extract_text_column(df: DataFrame, text_col: str = "text",
@@ -55,82 +53,45 @@ def extract_text_column(df: DataFrame, text_col: str = "text",
     keep = keep_cols if keep_cols is not None else [
         c for c in df.columns if c != text_col
     ]
-    passthrough = T.StructType([df.schema[c] for c in keep])
-    out_schema = _result_schema(passthrough)
-    opt_fmt = options.output_format if options is not None else "markdown"
-    opt_tables = options.enable_table_extraction if options is not None else True
-    opt_maxchars = options.max_payload_chars if options is not None else None
+    result = T.StructType(EXTRACT_RESULT_FIELDS)
+    out_schema = T.StructType([df.schema[c] for c in keep] + result.fields)
+    opts = options or DEFAULT_OPTIONS
+    # the Arrow form of EXTRACT_RESULT_FIELDS; the nested spans column's
+    # struct fields name the kernel's flat span_<field> arrays
+    result_fields = list(to_arrow_schema(result))
+    spans_type = next(f.type for f in result_fields if f.name == "spans")
+    span_fields = list(spans_type.value_type)
 
     def run(batches: Iterator) -> Iterator:
-        # import inside the task: keeps the closure tiny; the kernel module
-        # (with its precompiled regex automata) loads once per worker and
-        # is reused across batches (worker reuse is on by default).
+        # import inside the task: the kernel module (with its precompiled
+        # regex automata) loads once per worker and is reused across
+        # batches (worker reuse is on by default).
         import pyarrow as pa
 
-        from docling_api_spark.extraction.kernel import (
-            ExtractOptions,
-            extract_flat,
-        )
+        from docling_api_spark.extraction.kernel import extract_flat
 
-        if opt_maxchars is None:
-            opts = ExtractOptions(opt_fmt, opt_tables)
-        else:
-            opts = ExtractOptions(opt_fmt, opt_tables, opt_maxchars)
-
-        span_struct = pa.struct([
-            pa.field("start", pa.int64(), nullable=False),
-            pa.field("end", pa.int64(), nullable=False),
-            pa.field("node_id", pa.int32(), nullable=False),
-            pa.field("kind", pa.string(), nullable=False),
-        ])
         out_arrow = None  # built from the first batch (keeps input arrow
         # types, e.g. timestamp unit/tz, exactly as Spark sent them)
 
         for b in batches:
-            idx = b.schema.get_field_index(text_col)
-            cols = extract_flat(b.column(idx).to_pylist(), opts)
-
+            cols = extract_flat(b.column(text_col).to_pylist(), opts)
             structs = pa.StructArray.from_arrays(
-                [
-                    pa.array(cols["span_start"], pa.int64()),
-                    pa.array(cols["span_end"], pa.int64()),
-                    pa.array(cols["span_node_id"], pa.int32()),
-                    pa.array(cols["span_kind"], pa.string()),
-                ],
-                fields=list(span_struct),
+                [pa.array(cols[f"span_{f.name}"], f.type) for f in span_fields],
+                fields=span_fields,
             )
-            spans = pa.ListArray.from_arrays(
-                pa.array(cols["span_offsets"], pa.int32()), structs
+            cols["spans"] = pa.ListArray.from_arrays(
+                pa.array(cols["span_offsets"], pa.int32()), structs,
+                type=spans_type,
             )
-            keep_arrays = [
-                b.column(b.schema.get_field_index(c)) for c in keep
-            ]
-            result_arrays = [
-                pa.array(cols["status"], pa.string()),
-                pa.array(cols["payload_kind"], pa.string()),
-                pa.array(cols["extracted_text"], pa.string()),
-                pa.array(cols["doc_json"], pa.string()),
-                spans,
-                pa.array(cols["pages"], pa.int32()),
-                pa.array(cols["n_nodes"], pa.int32()),
-                pa.array(cols["error"], pa.string()),
+            arrays = [b.column(c) for c in keep] + [
+                cols["spans"] if f.name == "spans"
+                else pa.array(cols[f.name], f.type)
+                for f in result_fields
             ]
             if out_arrow is None:
                 out_arrow = pa.schema(
-                    [b.schema.field(b.schema.get_field_index(c)) for c in keep]
-                    + [
-                        pa.field("status", pa.string()),
-                        pa.field("payload_kind", pa.string()),
-                        pa.field("extracted_text", pa.string()),
-                        pa.field("doc_json", pa.string()),
-                        pa.field("spans", pa.list_(span_struct)),
-                        pa.field("pages", pa.int32()),
-                        pa.field("n_nodes", pa.int32()),
-                        pa.field("error", pa.string()),
-                    ]
+                    [b.schema.field(c) for c in keep] + result_fields
                 )
-            yield pa.RecordBatch.from_arrays(
-                keep_arrays + result_arrays, schema=out_arrow
-            )
+            yield pa.RecordBatch.from_arrays(arrays, schema=out_arrow)
 
     return df.mapInArrow(run, schema=out_schema)

@@ -49,9 +49,8 @@ def _as_long(c: str, op: str):
     below is the single, clearly-messaged error path regardless of
     session config. A NULL-producing cast (string 'doc-123') would
     otherwise flow on as NULL — connected_components would return an
-    empty labels frame ("zero duplicate clusters" with no error) and
-    select_keepers a NULL keeper (every ``keep`` NULL) — and a
-    TRUNCATING cast (double 1.2 and 1.7 both -> 1) would silently merge
+    empty labels frame ("zero duplicate clusters" with no error) — and
+    a TRUNCATING cast (double 1.2 and 1.7 both -> 1) would silently merge
     distinct nodes. The round-trip-through-double equality check catches
     truncation for every numeric input type (both sides pass through the
     same double conversion, so >2^53 longs compare equal to themselves).
@@ -199,53 +198,6 @@ def connected_components(
         prev_sum = agg["s"]
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds"
-    )
-
-
-def select_keepers(clusters: DataFrame, scores: DataFrame,
-                   id_col: str = "id", cluster_col: str = "comp",
-                   score_col: str = "score") -> DataFrame:
-    """Quality-aware keeper selection: per cluster keep the member with
-    the HIGHEST score, ties broken by minimum id (production pipelines
-    keep the best copy of a duplicate group, not the first-crawled one —
-    min-id keeping throws away the cleanest mirror whenever it was
-    crawled later). Returns (id, cluster, keep).
-
-    Determinism under ties: the argmax is one ``max`` over
-    struct(score, -id) — struct comparison is lexicographic, and long
-    max is associative, so the winner is a pure function of the set, at
-    any parallelism (``max_by`` would be tie-nondeterministic). Members
-    absent from ``scores`` carry a NULL score, which sorts below every
-    real score in the struct max — they can only win in a fully
-    unscored cluster, where the -id tie-break degrades the whole
-    selection to min-id keeping (tested). NaN scores are folded to NULL
-    before the max — Spark orders NaN ABOVE every real double, so an
-    un-guarded NaN (a 0/0 upstream) would crown the junk copy.
-
-    Node ids must cast losslessly to long — same loud ``_as_long``
-    guard as connected_components (a string id would otherwise negate
-    to NULL and every ``keep`` would come back NULL).
-    """
-    j = clusters.join(
-        scores.select(
-            F.col(id_col),
-            F.nanvl(F.col(score_col),
-                    F.lit(None).cast("double")).alias("_s"),
-        ),
-        id_col, "left",
-    ).withColumn(
-        # same lossless-long guard as connected_components: a string id
-        # would otherwise make -id silently NULL (non-ANSI), crowning a
-        # NULL keeper and returning every ``keep`` as NULL
-        "_idl", _as_long(id_col, "select_keepers"),
-    )
-    winners = j.groupBy(cluster_col).agg(
-        F.max(F.struct(F.col("_s").alias("s"),
-                       (-F.col("_idl")).alias("ni"))).alias("_w"),
-    ).select(cluster_col, (-F.col("_w.ni")).alias("_keeper"))
-    return j.join(winners, cluster_col).select(
-        id_col, cluster_col,
-        (F.col("_idl") == F.col("_keeper")).alias("keep"),
     )
 
 

@@ -136,39 +136,3 @@ def kmeans_centroids(
             break
         cents = new
     return cents, info
-
-
-def assign_clusters(
-    df: DataFrame,
-    cents: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id_col, cluster) — nearest-centroid (cosine) per vector, one
-    shuffle-free pass; argmax breaks ties to the lowest cell id."""
-    from docling_api_spark.operators.similarity import register_broadcast
-
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(_unit_rows(cents))
-    # lazily consumed by the returned frame: session-lifetime hygiene
-    # via the shared registry (keeps the immediately-prior one alive)
-    register_broadcast(bc)
-    id_type = df.select(id_col).schema[id_col].simpleString().split(":")[1]
-
-    def stage(batches: Iterator[pa.RecordBatch],
-              ) -> Iterator[pa.RecordBatch]:
-        cn = bc.value
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            unit = _unit_rows(_batch_mat(batch, vec_col))
-            cell = _assign_cells(unit, cn)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(id_col), pa.array(cell, pa.int32())],
-                [id_col, "cluster"],
-            )
-
-    return df.select(id_col, vec_col).mapInArrow(
-        stage, f"{id_col} {id_type}, cluster int"
-    )
-

@@ -170,72 +170,3 @@ def score_lm(df: DataFrame, bigrams: DataFrame, contexts: DataFrame,
         avg.alias("avg_logprob"),
         F.exp(-avg).alias("perplexity"),
     )
-
-
-def perplexity_buckets(scored: DataFrame, meta: dict,
-                       frac_head: float = 1 / 3,
-                       frac_middle: float = 1 / 3,
-                       granularity: int = 100) -> DataFrame:
-    """CCNet's head/middle/tail split: rank documents by per-token
-    log-prob and cut at the ``frac_head`` / ``frac_head+frac_middle``
-    quantiles — 'head' is the most reference-like slice (lowest
-    perplexity), 'tail' the least; CCNet trains preferentially on head.
-
-    Deterministic and scalable the way profile.py's exact percentiles
-    are: the ranking key is the EXACT integral per-token log-prob
-    coarsened to ``granularity`` sub-units per nat (a bounded-cardinality
-    long), the quantile cutoffs are read off a groupBy histogram of that
-    key (bounded rows — one small driver collect, like the corpus card),
-    and bucket assignment compares each doc's key to the two cutoff
-    literals. No corpus sort, no sampling-based range partitioning, no
-    approx_percentile (its sketch merge is partition-order sensitive).
-    Documents with n_pred = 0 (NULL text) get bucket 'unscored'. Cutoffs
-    sit at coarse-key granularity, so sizes match the requested
-    fractions only up to key ties — the deterministic trade, documented.
-    """
-    if not (0 < frac_head and 0 <= frac_middle
-            and frac_head + frac_middle <= 1):
-        raise ValueError(
-            "perplexity_buckets: need 0 < frac_head, 0 <= frac_middle, "
-            "frac_head + frac_middle <= 1 (a zero head would silently "
-            "mislabel the top key)")
-    # per-token avg log-prob in coarse units; Spark `div` truncates
-    # toward zero (verified) — the pytest replica mirrors exactly that
-    step = max(1, meta["scale"] // granularity)
-    keyed = scored.withColumn(
-        "_pk",
-        F.when(
-            F.col("n_pred") > 0,
-            F.expr(f"(logprob_scaled div n_pred) div {step}"),
-        ),
-    )
-    hist = sorted(
-        (int(r["_pk"]), int(r["n"]))
-        for r in keyed.filter("_pk is not null")
-        .groupBy("_pk").agg(F.count(F.lit(1)).alias("n")).collect()
-    )
-    n = sum(c for _, c in hist)
-    if n == 0:
-        return keyed.select(
-            scored["*"], F.lit("unscored").alias("ppl_bucket"))
-
-    def cutoff(target: int) -> int:
-        cum = 0
-        # highest log-prob (lowest perplexity) first
-        for k, c in reversed(hist):
-            cum += c
-            if cum >= target:
-                return k
-        return hist[0][0]
-
-    import math as _m
-
-    head_cut = cutoff(_m.ceil(frac_head * n))
-    mid_cut = cutoff(_m.ceil((frac_head + frac_middle) * n))
-    return keyed.select(
-        scored["*"],
-        F.when(F.col("_pk").isNull(), F.lit("unscored"))
-        .when(F.col("_pk") >= head_cut, F.lit("head"))
-        .when(F.col("_pk") >= mid_cut, F.lit("middle"))
-        .otherwise(F.lit("tail")).alias("ppl_bucket"),
-    )

@@ -29,11 +29,6 @@ def credits_col(pages_col, cpp: int = CREDITS_PER_PAGE, minc: int = MIN_CREDITS)
     return F.greatest(pages_col.cast("long") * F.lit(cpp), F.lit(minc).cast("long"))
 
 
-def total_pages(df: DataFrame, pages_col: str = "pages") -> DataFrame:
-    """A1 — total pages over successful conversions."""
-    return df.agg(F.sum(pages_col).alias("total_pages"))
-
-
 def usage_rollup(df: DataFrame, key_col: str, value_col: str,
                  time_col: str | None = None,
                  value_decimals: int | None = None,

@@ -35,17 +35,6 @@ FRAME_SCHEMA = T.StructType(
 )
 
 
-def encode_fake_video(frame_len: int, frames: list[bytes]) -> bytes:
-    """Deterministic synthetic 'video': FVID + n_frames + frame_len +
-    fixed-size frames concatenated (test helper)."""
-    assert all(len(f) == frame_len for f in frames)
-    return (
-        FAKE_VIDEO_MAGIC
-        + struct.pack("<II", len(frames), frame_len)
-        + b"".join(frames)
-    )
-
-
 def sample_video_frames(df: DataFrame, bin_col: str = "video",
                         every: int = 2) -> DataFrame:
     """Frame-sampling plumbing: FVID container -> array of per-frame

@@ -45,7 +45,6 @@ SPAN_TOKENS = 20
 # Java regex \s (Spark split) = ASCII [ \t\n\x0B\f\r]; Python re mirrors
 # this exact class so the cutter's token offsets align 1:1 with the JVM
 # token indices (Python's own \s is unicode-wide — NOT equivalent).
-_JAVA_WS = re.compile(r"[ \t\n\x0B\f\r]+")
 _NON_WS = re.compile(r"[^ \t\n\x0B\f\r]+")
 _WS_CHARS = " \t\n\x0b\f\r"
 

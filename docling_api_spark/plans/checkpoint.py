@@ -217,15 +217,6 @@ class Manifest:
             yield state
             self._write(state)
 
-    def inflight(self) -> set[str]:
-        return set(self._read()["inflight"])
-
-    def inflight_leases(self) -> dict[str, float]:
-        return dict(self._read()["inflight"])
-
-    def retired(self) -> set[str]:
-        return set(self._read()["retired"])
-
     def runs(self) -> list[dict]:
         return self._read()["runs"]
 

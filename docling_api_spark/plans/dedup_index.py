@@ -33,16 +33,6 @@ from pyspark.sql import types as T
 
 INDEX_FILE = "INDEX.json"
 
-#: minimal ingest schema — parquet column pruning means extra columns in
-#: the source files are simply never read
-INGEST_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-    ]
-)
-
-
 def _pointer_path(index_dir: str) -> str:
     return os.path.join(index_dir, INDEX_FILE)
 
@@ -177,97 +167,3 @@ def update_index(
          "n_added": n_fresh, "committed": True}
     )
     return summary
-
-
-def dedup_index_ingest(
-    spark: SparkSession,
-    input_dir: str,
-    index_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.6,
-    matches_dir: str | None = None,
-    schema: T.StructType | None = None,
-    max_files_per_trigger: int = 8,
-):
-    """Continuous-crawl ingestion: a Structured Streaming job that folds
-    every micro-batch of newly landed document files into the committed
-    signature index via ``update_index`` (foreachBatch). Each batch's
-    exact + minhash-near matches against the corpus-so-far land under
-    ``matches_dir/batch=<id>/`` and a JSON summary under
-    ``index_dir/ingest_log/`` — the per-snapshot report a crawl pipeline
-    keeps.
-
-    Exactly-once without a transactional sink: the streaming checkpoint
-    replays a failed micro-batch with the SAME batch_id, and every
-    side effect here is an idempotent overwrite keyed by that id or by
-    content — the match report overwrites its batch-keyed path, the log
-    entry is first-write-wins, and ``update_index`` on already-committed
-    ids anti-joins to an empty fresh set and leaves the pointer untouched
-    (a crash BETWEEN the version-dir write and the pointer swap orphans
-    the dir and the replay rewrites it, the batch-CLI discipline
-    unchanged). One narrow crash window is recorded as-observed rather
-    than reconstructed: a crash AFTER the pointer swap but BEFORE the log
-    write makes the replay's log entry an n_added=0 no-op (the original
-    n_added is unrecoverable) — reconcile totals against the pointer
-    state carried in each entry (``index_rows``), not by summing
-    ``n_added``.
-
-    Returns the started query; callers use Trigger.AvailableNow
-    (``query.awaitTermination()`` drains everything currently on disk —
-    rerunning later picks up only files the checkpoint has not seen).
-    """
-    stream = (
-        spark.readStream.schema(schema or INGEST_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.select(id_col, text_col)
-        if batch.isEmpty():  # a no-file trigger must not commit a version
-            return
-        out = (
-            os.path.join(matches_dir, f"batch={batch_id}")
-            if matches_dir is not None
-            else None
-        )
-        summary = update_index(
-            spark, batch, index_dir,
-            id_col=id_col, text_col=text_col,
-            threshold=threshold, matches_out=out,
-        )
-        summary["batch_id"] = batch_id
-        log_dir = os.path.join(index_dir, "ingest_log")
-        os.makedirs(log_dir, exist_ok=True)
-        dest = os.path.join(log_dir, f"batch-{batch_id:06d}.json")
-        if os.path.exists(dest):
-            # replay after a crash that landed BOTH the pointer swap and
-            # the log write: the original entry is the truth — keep it
-            # (the replay's view would be an n_added=0 no-op)
-            return
-        tmp = os.path.join(log_dir, f".batch-{batch_id:06d}.tmp")
-        with open(tmp, "w") as f:
-            json.dump(summary, f, sort_keys=True)
-        os.replace(tmp, dest)
-
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_ingest_log(index_dir: str) -> list[dict]:
-    """All committed per-batch ingest summaries, in batch order."""
-    log_dir = os.path.join(index_dir, "ingest_log")
-    if not os.path.isdir(log_dir):
-        return []
-    out = []
-    for name in sorted(os.listdir(log_dir)):
-        if name.startswith("batch-") and name.endswith(".json"):
-            with open(os.path.join(log_dir, name)) as f:
-                out.append(json.load(f))
-    return out

@@ -9,9 +9,8 @@ heuristics, NB scoring, LM perplexity) need no streaming state at all —
 they run inside foreachBatch exactly as in batch mode, so the batch and
 streaming paths share ONE implementation and cannot drift.
 
-Exactly-once without a transactional sink (the dedup_index_ingest
-posture, plans/dedup_index.py): the checkpoint replays a failed
-micro-batch with the same batch_id, and both side effects are
+Exactly-once without a transactional sink: the checkpoint replays a
+failed micro-batch with the same batch_id, and both side effects are
 idempotent — kept documents overwrite their batch-keyed directory
 ``out_dir/kept/batch=<id>``, and the per-batch funnel JSON under
 ``out_dir/gate_log/`` is first-write-wins.

@@ -15,6 +15,7 @@ outputs from first principles without touching any Spark code path.
 from __future__ import annotations
 
 import re
+import struct
 
 _M = 0xFFFFFFFFFFFFFFFF
 _P1 = 0x9E3779B185EBCA87
@@ -196,3 +197,23 @@ def band_keys_py(sig: list[int], bands: int = 4) -> list[tuple]:
             for b in range(bands)]
 
 
+def n_chunks_for(n_tokens: int, ctx_len: int, stride: int) -> int:
+    """Window count of operators/chunking.py chunk_documents covering
+    ``n_tokens`` tokens: 1 window when the doc fits, else enough stride
+    steps that the last window reaches the end."""
+    if n_tokens <= ctx_len:
+        return 1
+    return -((n_tokens - ctx_len) // -stride) + 1  # ceil div
+
+
+def encode_fake_video(frame_len: int, frames: list[bytes]) -> bytes:
+    """Deterministic synthetic 'video' for operators/multimodal.py:
+    FVID + n_frames + frame_len + fixed-size frames concatenated."""
+    from docling_api_spark.operators.multimodal import FAKE_VIDEO_MAGIC
+
+    assert all(len(f) == frame_len for f in frames)
+    return (
+        FAKE_VIDEO_MAGIC
+        + struct.pack("<II", len(frames), frame_len)
+        + b"".join(frames)
+    )

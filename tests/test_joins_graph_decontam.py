@@ -497,75 +497,3 @@ def test_ngram_decontaminate_randomized(spark):
         for r in ngram_decontaminate(t, e, n=3).collect()
     }
     assert got == _brute_decontam(train, evalset, n=3)
-
-
-def test_select_keepers_quality_aware(spark):
-    """Per-cluster keeper = highest score, min-id tie-break; unscored
-    members lose to any scored one; fully-unscored clusters degrade to
-    min-id; deterministic at any parallelism."""
-    from docling_api_spark.operators.graph import select_keepers
-
-    clusters = spark.createDataFrame(
-        [
-            (1, 1), (2, 1), (3, 1),        # scores 0.2, 0.9, 0.9
-            (10, 10), (11, 10),            # scored vs unscored
-            (20, 20), (21, 20), (22, 20),  # nobody scored
-        ],
-        "id long, comp long",
-    )
-    scores = spark.createDataFrame(
-        [(1, 0.2), (2, 0.9), (3, 0.9), (11, 0.5)],
-        "id long, score double",
-    )
-    got = {int(r["id"]): bool(r["keep"])
-           for r in select_keepers(clusters, scores).collect()}
-    assert got == {
-        1: False, 2: True, 3: False,  # 0.9 tie -> min id 2
-        10: False, 11: True,          # scored beats unscored
-        20: True, 21: False, 22: False,  # all-unscored -> min id
-    }
-    got2 = {int(r["id"]): bool(r["keep"])
-            for r in select_keepers(
-                clusters.repartition(7), scores.repartition(3)
-            ).collect()}
-    assert got2 == got
-
-
-def test_select_keepers_nan_never_wins(spark):
-    """NaN sorts ABOVE every real double in Spark — folded to NULL so a
-    0/0-scored junk copy can never be crowned keeper."""
-    from docling_api_spark.operators.graph import select_keepers
-
-    clusters = spark.createDataFrame(
-        [(1, 1), (2, 1)], "id long, comp long")
-    scores = spark.createDataFrame(
-        [(1, float("nan")), (2, 0.4)], "id long, score double")
-    got = {int(r["id"]): bool(r["keep"])
-           for r in select_keepers(clusters, scores).collect()}
-    assert got == {1: False, 2: True}
-
-
-def test_select_keepers_string_id_fails_loudly(spark):
-    """ADVICE r03: a string id used to negate to NULL silently (non-ANSI
-    cast), crowning a NULL keeper and returning every ``keep`` NULL —
-    it must raise the same loud guard as connected_components."""
-    import pytest
-
-    from docling_api_spark.operators.graph import select_keepers
-
-    clusters = spark.createDataFrame(
-        [("doc-1", 1), ("doc-2", 1)], "id string, comp long")
-    scores = spark.createDataFrame(
-        [("doc-1", 0.2), ("doc-2", 0.9)], "id string, score double")
-    with pytest.raises(Exception, match="select_keepers"):
-        select_keepers(clusters, scores).collect()
-
-    # digit-strings cast losslessly -> still work (same posture as
-    # connected_components)
-    clusters2 = spark.createDataFrame(
-        [("1", 1), ("2", 1)], "id string, comp long")
-    scores2 = spark.createDataFrame(
-        [("1", 0.2), ("2", 0.9)], "id string, score double")
-    got = {r["id"]: bool(r["keep"])
-           for r in select_keepers(clusters2, scores2).collect()}
-    assert got == {"1": False, "2": True}

@@ -68,16 +68,48 @@ def test_extract_one_total_and_deterministic(text):
 @settings(max_examples=50, deadline=None)
 @given(st.lists(payloads, max_size=20))
 def test_extract_flat_agrees_with_extract_one(texts):
-    flat = extract_flat(texts)
+    """Batch invariance: row i of a batch equals the one-row batch of
+    its payload, field for field and span for span."""
+    from docling_api_spark.extraction.kernel import ExtractOptions
+
+    both = ExtractOptions("both")
+    flat = extract_flat(texts, both)
     assert len(flat["status"]) == len(texts)
     assert flat["span_offsets"][0] == 0
     assert flat["span_offsets"][-1] == len(flat["span_start"])
     for i, t in enumerate(texts):
-        one = extract_one(t)
-        assert flat["status"][i] == one["status"]
-        assert flat["extracted_text"][i] == one["extracted_text"]
+        one = extract_one(t, both)
+        for k in ("status", "payload_kind", "extracted_text", "doc_json",
+                  "pages", "n_nodes", "error"):
+            assert flat[k][i] == one[k], k
         lo, hi = flat["span_offsets"][i], flat["span_offsets"][i + 1]
-        assert hi - lo == len(one["spans"])
+        assert list(zip(flat["span_start"][lo:hi], flat["span_end"][lo:hi],
+                        flat["span_node_id"][lo:hi],
+                        flat["span_kind"][lo:hi])) == one["spans"]
+
+
+def test_kernel_exception_becomes_error_capsule():
+    """A payload that makes the kernel raise (bytes, not str) becomes a
+    status='error' / payload_kind='unknown' row carrying the exception
+    name; its neighbours in the batch are untouched."""
+    from docling_api_spark.extraction.kernel import ExtractOptions
+
+    good = f"<p>{'long body paragraph with enough characters ' * 3}</p>"
+    for opts in (ExtractOptions("markdown"), ExtractOptions("both")):
+        r = extract_one(b"<p>bytes payload</p>", opts)
+        assert r["status"] == "error"
+        assert r["payload_kind"] == "unknown"
+        assert r["error"].startswith("TypeError: ")
+        assert r["doc_json"] is None and r["spans"] == []
+        assert (r["pages"], r["n_nodes"]) == (1, 0)
+        flat = extract_flat([good, b"<p>bytes payload</p>", good], opts)
+        assert flat["status"] == ["success", "error", "success"]
+        assert flat["error"][0] is None and flat["error"][2] is None
+        assert flat["error"][1] == r["error"]
+        assert flat["extracted_text"][0] == flat["extracted_text"][2]
+        one = extract_one(good, opts)
+        assert flat["extracted_text"][0] == one["extracted_text"]
+        assert flat["doc_json"][0] == one["doc_json"]
 
 
 BODY = "long body paragraph with enough characters to pass the short-block rule"

@@ -105,9 +105,7 @@ def test_objective_improves_over_seed_quantizer(spark):
 
 
 def test_empty_cell_keeps_previous_centroid(spark):
-    from docling_api_spark.operators.kmeans import (
-        assign_clusters, kmeans_centroids,
-    )
+    from docling_api_spark.operators.kmeans import kmeans_centroids
 
     # two tight opposite directions, duplicated — with k=4 the two seed
     # centroids inside each bundle split it, but seeds 2/3 (copies of
@@ -122,11 +120,6 @@ def test_empty_cell_keeps_previous_centroid(spark):
     assert info["cell_sizes"][2] == 0 and info["cell_sizes"][3] == 0
     assert np.allclose(cents[0], e1) and np.allclose(cents[1], e2)
     assert np.allclose(cents[2], e1) and np.allclose(cents[3], e2)
-
-    assigned = assign_clusters(d, cents)
-    got = {r["vec_id"]: r["cluster"] for r in assigned.collect()}
-    for i in range(20):
-        assert got[i] == (0 if i % 2 == 0 else 1)
 
 
 def test_ivf_with_trained_quantizer_keeps_recall(spark):

@@ -180,85 +180,3 @@ def test_reference_text_beats_gibberish(spark):
     real = sorted(ppl[i] for i, _ in held)
     fake = sorted(ppl[i] for i, _ in gib)
     assert real[len(real) // 2] * 5 < fake[len(fake) // 2]
-
-
-def _trunc_div(a: int, b: int) -> int:
-    """Spark `div`: truncation toward zero (verified: -7 div 2 = -3)."""
-    q = abs(a) // abs(b)
-    return q if (a < 0) == (b < 0) else -q
-
-
-def test_perplexity_buckets_match_replica(spark):
-    from docling_api_spark.operators.lm import (
-        perplexity_buckets, score_lm, train_lm)
-
-    train_df, held_df, _, held_rows = _split(spark)
-    model = train_lm(train_df, n_buckets=V, scale=SCALE)
-    scored = score_lm(
-        held_df.unionByName(
-            spark.createDataFrame([(777, None)],
-                                  "doc_id long, text string")),
-        *model)
-    got = {int(r["doc_id"]): r["ppl_bucket"]
-           for r in perplexity_buckets(scored, model[2]).collect()}
-    # replica: coarse key per doc, cutoffs off the descending histogram
-    rows = {int(r["doc_id"]): (int(r["n_pred"]), int(r["logprob_scaled"]))
-            for r in scored.collect()}
-    step = SCALE // 100
-    keys = {i: _trunc_div(_trunc_div(lp, n), step)
-            for i, (n, lp) in rows.items() if n > 0}
-    import math as m
-    hist = sorted(keys.values())
-    total = len(hist)
-
-    def cutoff(t):
-        cum = 0
-        seen = None
-        from collections import Counter
-        c = Counter(keys.values())
-        for k in sorted(c, reverse=True):
-            cum += c[k]
-            seen = k
-            if cum >= t:
-                return k
-        return seen
-
-    hc, mc = cutoff(m.ceil(total / 3)), cutoff(m.ceil(2 * total / 3))
-    for i, k in keys.items():
-        want = "head" if k >= hc else ("middle" if k >= mc else "tail")
-        assert got[i] == want, (i, k, hc, mc)
-    assert got[777] == "unscored"
-    # roughly balanced terciles (up to key ties)
-    from collections import Counter as C
-    sizes = C(v for i, v in got.items() if i != 777)
-    assert min(sizes.values()) >= total // 6
-
-
-def test_buckets_order_matches_perplexity(spark):
-    """Every head doc has perplexity <= every tail doc (up to the
-    documented coarse-key granularity)."""
-    from docling_api_spark.operators.lm import (
-        perplexity_buckets, score_lm, train_lm)
-
-    train_df, held_df, _, _ = _split(spark)
-    model = train_lm(train_df, n_buckets=V, scale=SCALE)
-    rows = perplexity_buckets(score_lm(held_df, *model), model[2]).collect()
-    head = [r["perplexity"] for r in rows if r["ppl_bucket"] == "head"]
-    tail = [r["perplexity"] for r in rows if r["ppl_bucket"] == "tail"]
-    assert head and tail
-    assert max(head) <= min(tail) * 1.02  # granularity slack
-
-
-def test_bucket_frac_validation(spark):
-    import pytest
-
-    from docling_api_spark.operators.lm import (
-        perplexity_buckets, score_lm, train_lm)
-
-    train_df, held_df, _, _ = _split(spark)
-    model = train_lm(train_df, n_buckets=V, scale=SCALE)
-    scored = score_lm(held_df, *model)
-    for fh, fm in ((0.0, 0.5), (0.7, 0.5), (0.5, -0.1)):
-        with pytest.raises(ValueError):
-            perplexity_buckets(scored, model[2], frac_head=fh,
-                               frac_middle=fm)

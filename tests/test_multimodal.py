@@ -6,10 +6,8 @@ from __future__ import annotations
 
 import pytest
 
-from docling_api_spark.operators.multimodal import (
-    encode_fake_video,
-    sample_video_frames,
-)
+from docling_api_spark.operators.multimodal import sample_video_frames
+from tests.oracles import encode_fake_video
 
 
 def _bin_df(spark, rows, col):

@@ -129,10 +129,10 @@ def _chunk_oracle(rows, ctx_len, stride):
     """Pure-Python twin of chunk_documents: Spark-parity tokens (trim is
     SPACE-only; split is Java-\\s+ i.e. ASCII [ \\t\\n\\x0B\\f\\r]+ with
     limit -1, so leading non-space whitespace yields an empty first
-    token) windowed by the shared n_chunks_for rule."""
+    token) windowed by the n_chunks_for rule."""
     import re
 
-    from docling_api_spark.operators.chunking import n_chunks_for
+    from tests.oracles import n_chunks_for
 
     want = set()
     for doc_id, text in rows:

@@ -109,7 +109,7 @@ def test_crashed_run_id_is_burned_not_reused(spark, transcripts, tmp_path):
     orphan.write.mode("append").partitionBy("run_id", "bucket").parquet(
         f"{out}/data"
     )
-    assert dead_id in m.inflight()
+    assert dead_id in m.snapshot()["inflight"]
 
     # the real run gets a DIFFERENT id; its output excludes orphan rows
     s = run_extraction(spark, transcripts, str(out), n_buckets=4)
@@ -117,7 +117,7 @@ def test_crashed_run_id_is_burned_not_reused(spark, transcripts, tmp_path):
     n_input = transcripts.count()
     assert s["rows"] == n_input
     assert committed_view(spark, str(out)).count() == n_input
-    assert s["run_id"] not in m.inflight()  # settled by commit
+    assert s["run_id"] not in m.snapshot()["inflight"]  # settled by commit
 
 
 def test_committed_view_on_fresh_dir(spark, tmp_path):

@@ -1,11 +1,15 @@
 """Driver-registry hygiene (no Spark session): every DuckDB oracle belongs
-to a registered query, the registry fits its recorded slots, and
-every package module is imported from some user surface."""
+to a registered query, the registry fits its recorded slots, every
+package module is imported from some user surface, every package-level
+definition is referenced outside the tests, and every tracked module
+compiles without warnings."""
 
 from __future__ import annotations
 
 import ast
 import pathlib
+import subprocess
+import warnings
 
 import __spark_entry__ as entrymod
 
@@ -88,3 +92,64 @@ def test_every_package_module_is_reachable_from_a_user_surface():
         if p.name != "__init__.py" and p not in reached
     )
     assert not unreached, unreached
+
+
+def _tracked_py() -> list[pathlib.Path]:
+    """Every tracked ``.py`` file (every ``.py`` outside hidden dirs when
+    the tree is not a git checkout)."""
+    try:
+        out = subprocess.run(["git", "ls-files", "-z", "*.py"], cwd=REPO,
+                             capture_output=True, check=True).stdout
+        return [REPO / p for p in out.decode().split("\0") if p]
+    except (OSError, subprocess.CalledProcessError):
+        return [p for p in REPO.rglob("*.py")
+                if not any(part.startswith(".") or part == "__pycache__"
+                           for part in p.relative_to(REPO).parts)]
+
+
+def _top_level_names(tree: ast.Module):
+    """Names a module's top-level def, class or assignment binds."""
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                             ast.ClassDef)):
+            yield node.name
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                yield from (n.id for n in ast.walk(t) if isinstance(n, ast.Name))
+
+
+def _referenced_names(tree: ast.Module):
+    """Load-context names, attribute names and import aliases."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+            yield node.id
+        elif isinstance(node, ast.Attribute):
+            yield node.attr
+        elif isinstance(node, ast.alias):
+            yield node.name.rpartition(".")[2]
+
+
+def test_every_package_definition_is_referenced_outside_tests():
+    files = [p for p in _tracked_py()
+             if p.relative_to(REPO).parts[0] != "tests"]
+    trees = {p: ast.parse(p.read_text(), str(p)) for p in files}
+    referenced = set()
+    for tree in trees.values():
+        referenced.update(_referenced_names(tree))
+    unreferenced = [
+        f"{p.relative_to(REPO)}:{name}"
+        for p, tree in sorted(trees.items())
+        if p.relative_to(REPO).parts[0] == PKG
+        for name in _top_level_names(tree)
+        if not (name.startswith("__") and name.endswith("__"))
+        and name not in referenced
+    ]
+    assert not unreferenced, "\n".join(unreferenced)
+
+
+def test_every_tracked_module_compiles_without_warnings():
+    for path in _tracked_py():
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            compile(path.read_text(), str(path), "exec")
