@@ -37,7 +37,8 @@ Ships via ``spark-submit --py-files docling_api_spark.zip cli.py ...``
 Every --input-bearing subcommand also accepts ``--input-format jsonl``
 (one JSON document per line — the shape crawl dumps land in).
 
-Benchmarks live in bench.py at the repo root (not a subcommand here).
+The perf harness is perfbench/run.py at the repo root (not a subcommand
+here).
 """
 
 from __future__ import annotations
@@ -375,8 +376,11 @@ def main(argv: list[str] | None = None) -> None:
         # exactly_once compares the rows actually on disk against the
         # funnel's kept total (double-writes or replay drift would
         # break the equality)
-        entries = [json.load(open(p)) for p in sorted(glob.glob(
-            os.path.join(args.output, "gate_log", "batch-*.json")))]
+        entries = []
+        for p in sorted(glob.glob(
+                os.path.join(args.output, "gate_log", "batch-*.json"))):
+            with open(p) as f:
+                entries.append(json.load(f))
         n_kept = sum(e["n_kept"] for e in entries)
         kept_rows = 0
         if any(e["n_kept"] for e in entries):

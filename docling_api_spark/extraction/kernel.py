@@ -778,7 +778,7 @@ def _emit_table(t: _Table) -> str:
     return "\n".join(lines)
 
 
-def _extract_html(text: str, options: ExtractOptions = DEFAULT_OPTIONS):
+def _extract_html(text: str, options: ExtractOptions):
     nodes = _parse_html(text)
     out_parts: list[str] = []
     spans: list[tuple[int, int, int, str]] = []
@@ -850,7 +850,7 @@ def _extract_html(text: str, options: ExtractOptions = DEFAULT_OPTIONS):
 # pdfish: synthetic page-layout format (C1 layout parse + C9 page count)
 # ---------------------------------------------------------------------------
 
-def _extract_pdfish(decoded: str, options: ExtractOptions = DEFAULT_OPTIONS):
+def _extract_pdfish(decoded: str, options: ExtractOptions):
     """Parse the deterministic '%PDFISH' layout text: page markers,
     per-page repeated header/footer furniture in <<...>> lines,
     #TITLE/#H2/#H3 headings, blank-line-separated paragraphs.
@@ -924,7 +924,7 @@ def _extract_pdfish(decoded: str, options: ExtractOptions = DEFAULT_OPTIONS):
 # markdownish: near-passthrough with deterministic normalization
 # ---------------------------------------------------------------------------
 
-def _extract_markdown(text: str, options: ExtractOptions = DEFAULT_OPTIONS):
+def _extract_markdown(text: str, options: ExtractOptions):
     lines = text.split("\n")
     blocks: list[tuple[str, int, int, str]] = []  # (text, start, end, kind)
     buf: list[str] = []
@@ -995,7 +995,7 @@ def _extract_markdown(text: str, options: ExtractOptions = DEFAULT_OPTIONS):
 # plain prose
 # ---------------------------------------------------------------------------
 
-def _extract_plain(text: str, options: ExtractOptions = DEFAULT_OPTIONS):
+def _extract_plain(text: str, options: ExtractOptions):
     spans: list[tuple[int, int, int, str]] = []
     out_parts: list[str] = []
     items: list | None = [] if options.want_json else None

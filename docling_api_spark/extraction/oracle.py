@@ -15,21 +15,19 @@ from __future__ import annotations
 
 import pandas as pd
 
-from docling_api_spark.extraction.kernel import DEFAULT_OPTIONS, extract_flat
+from docling_api_spark.extraction.kernel import ExtractOptions, extract_flat
 from docling_api_spark.schema import EXTRACT_RESULT_FIELDS
 
 RESULT_COLS = [f.name for f in EXTRACT_RESULT_FIELDS]
 
 
-def oracle_extract(pdf: pd.DataFrame, text_col: str = "text",
-                   id_cols: list[str] | None = None,
-                   options=None) -> pd.DataFrame:
-    """Extract every row of ``pdf``; returns id columns + result columns,
-    sorted by the id columns (fixtures are stored sorted; the Spark-side
-    comparison is join-based and order-insensitive)."""
-    id_cols = id_cols or ["conv_id", "turn_idx"]
-    cols = extract_flat(pdf[text_col].tolist(),
-                        options if options is not None else DEFAULT_OPTIONS)
+def oracle_extract(pdf: pd.DataFrame, options: ExtractOptions) -> pd.DataFrame:
+    """Extract every row of ``pdf``; returns the (conv_id, turn_idx) id
+    columns + result columns, sorted by the id columns (fixtures are
+    stored sorted; the Spark-side comparison is join-based and
+    order-insensitive)."""
+    id_cols = ["conv_id", "turn_idx"]
+    cols = extract_flat(pdf["text"].tolist(), options)
     # flat span arrays + list offsets (the Arrow layout) -> per-row dicts
     flat = [{"start": s, "end": e, "node_id": n, "kind": k}
             for s, e, n, k in zip(cols["span_start"], cols["span_end"],

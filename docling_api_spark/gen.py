@@ -277,8 +277,7 @@ def gen_transcripts_pdf(n_convs: int, seed: int = DEFAULT_SEED):
     return pdf
 
 
-def transcripts_df(spark, n_convs: int, seed: int = DEFAULT_SEED,
-                   partitions: int | None = None):
+def transcripts_df(spark, n_convs: int, partitions: int | None = None):
     """Distributed generator: one task generates a contiguous slice of
     conversations — this is how the bench input is produced at scale
     (no driver materialization, no shuffle)."""
@@ -289,7 +288,7 @@ def transcripts_df(spark, n_convs: int, seed: int = DEFAULT_SEED,
 
         for pdf in it:
             for conv_idx in pdf["id"]:
-                rows = gen_conv(int(conv_idx), seed)
+                rows = gen_conv(int(conv_idx), DEFAULT_SEED)
                 out = pd.DataFrame(rows)
                 out["turn_idx"] = out["turn_idx"].astype("int32")
                 out["ts"] = out["ts"].dt.tz_localize(None)

@@ -31,8 +31,8 @@ Shape at 100 TB:
   - driver/executor materialization is bounded by construction: a
     handful of scalar totals plus one localCheckpoint of the
     ≤ n_buckets-row count table (so the seed-counting pass runs once,
-    not once per consumer) — same posture as the 16-row k-means
-    centroid collect.
+    not once per consumer) — same posture as the IVF quantizer's
+    16-row centroid collect (similarity._centroids).
 
 Feature definition (mirrors the string-free minhash idiom, dedup.py):
 token hashed once to a long via a materialized HOF transform; unigram
@@ -62,7 +62,6 @@ ALPHA = 1  # add-one smoothing; integer so every count stays exact
 
 def hashed_features(df: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text", n_buckets: int = N_BUCKETS,
-                    bigrams: bool = True,
                     carry_cols: tuple[str, ...] = ()) -> DataFrame:
     """One row per token-occurrence feature: (id, carry..., feature).
 
@@ -80,41 +79,35 @@ def hashed_features(df: DataFrame, id_col: str = "doc_id",
     )
     v = F.lit(n_buckets).cast("long")
     uni = F.transform(F.col("_th"), lambda h: F.pmod(h, v))
-    if bigrams:
-        bi = F.when(
-            F.size("_th") >= 2,
-            F.transform(
-                F.sequence(F.lit(0), F.size("_th") - 2),
-                lambda i: F.pmod(
-                    F.xxhash64(
-                        F.element_at(F.col("_th"), i + 1),
-                        F.element_at(F.col("_th"), i + 2),
-                    ),
-                    v,
+    bi = F.when(
+        F.size("_th") >= 2,
+        F.transform(
+            F.sequence(F.lit(0), F.size("_th") - 2),
+            lambda i: F.pmod(
+                F.xxhash64(
+                    F.element_at(F.col("_th"), i + 1),
+                    F.element_at(F.col("_th"), i + 2),
                 ),
+                v,
             ),
-        ).otherwise(F.array().cast("array<bigint>"))
-        feats = F.concat(uni, bi)
-    else:
-        feats = uni
+        ),
+    ).otherwise(F.array().cast("array<bigint>"))
     return base.select(
         F.col(id_col), *[F.col(c) for c in carry_cols],
-        F.explode_outer(feats).alias("feature"),
+        F.explode_outer(F.concat(uni, bi)).alias("feature"),
     )
 
 
 def nb_train(labeled: DataFrame, positive, label_col: str = "label",
              id_col: str = "doc_id", text_col: str = "text",
-             n_buckets: int = N_BUCKETS, alpha: int = ALPHA,
-             scale: int = WEIGHT_SCALE,
-             bigrams: bool = True) -> tuple[DataFrame, dict]:
+             n_buckets: int = N_BUCKETS) -> tuple[DataFrame, dict]:
     """Train the NB log-odds model. Returns ``(weights, meta)``:
     ``weights`` is a DataFrame[(feature long, weight_scaled long)] of at
     most ``n_buckets`` rows; ``meta`` carries the scaled prior, the
     default weight for features unseen in training, and the exact totals.
 
     weight(f) = log(c_pos(f)+α) − log(T_pos+αV) − log(c_neg(f)+α)
-              + log(T_neg+αV), quantized HALF_UP to ``scale`` units.
+              + log(T_neg+αV), quantized HALF_UP to ``WEIGHT_SCALE`` units.
     The two denominator logs are driver-side constants folded into one
     literal; the two count logs run per feature ROW in the JVM (pure
     per-row doubles — deterministic; the pytest oracle allows ±1 scaled
@@ -142,7 +135,7 @@ def nb_train(labeled: DataFrame, positive, label_col: str = "label",
     if docs["n_pos"] == 0 or docs["n_neg"] == 0:
         raise ValueError("nb_train needs at least one document per class")
     feats = hashed_features(
-        nn, id_col, text_col, n_buckets, bigrams, carry_cols=(label_col,)
+        nn, id_col, text_col, n_buckets, carry_cols=(label_col,)
     ).filter(F.col("feature").isNotNull())
     # materialized once (<= n_buckets rows by construction): the counting
     # pass otherwise re-executes for the totals agg AND for every scoring
@@ -156,24 +149,24 @@ def nb_train(labeled: DataFrame, positive, label_col: str = "label",
         F.coalesce(F.sum("c_pos"), F.lit(0)).alias("t_pos"),
         F.coalesce(F.sum("c_neg"), F.lit(0)).alias("t_neg"),
     ).collect()[0]
-    logden_pos = math.log(tot["t_pos"] + alpha * n_buckets)
-    logden_neg = math.log(tot["t_neg"] + alpha * n_buckets)
+    logden_pos = math.log(tot["t_pos"] + ALPHA * n_buckets)
+    logden_neg = math.log(tot["t_neg"] + ALPHA * n_buckets)
     const = logden_neg - logden_pos
     weights = counts.select(
         "feature",
         F.round(
-            (F.log(F.col("c_pos") + alpha) - F.log(F.col("c_neg") + alpha)
-             + F.lit(const)) * scale
+            (F.log(F.col("c_pos") + ALPHA) - F.log(F.col("c_neg") + ALPHA)
+             + F.lit(const)) * WEIGHT_SCALE
         ).cast("long").alias("weight_scaled"),
     )
     meta = {
         "prior_scaled": int(round(
-            (math.log(docs["n_pos"]) - math.log(docs["n_neg"])) * scale)),
-        "default_scaled": int(round(const * scale)),
+            (math.log(docs["n_pos"]) - math.log(docs["n_neg"]))
+            * WEIGHT_SCALE)),
+        "default_scaled": int(round(const * WEIGHT_SCALE)),
         "n_buckets": n_buckets,
-        "alpha": alpha,
-        "scale": scale,
-        "bigrams": bigrams,
+        "alpha": ALPHA,
+        "scale": WEIGHT_SCALE,
         "t_pos": int(tot["t_pos"]), "t_neg": int(tot["t_neg"]),
         "n_pos": int(docs["n_pos"]), "n_neg": int(docs["n_neg"]),
     }
@@ -190,9 +183,7 @@ def nb_score(df: DataFrame, weights: DataFrame, meta: dict,
     divided by the scale (one per-row double op); ``keep`` is the NB
     decision score ≥ 0. The weight table broadcasts (≤ n_buckets rows by
     construction)."""
-    feats = hashed_features(
-        df, id_col, text_col, meta["n_buckets"], meta["bigrams"]
-    )
+    feats = hashed_features(df, id_col, text_col, meta["n_buckets"])
     default = F.lit(meta["default_scaled"]).cast("long")
     contrib = F.when(F.col("feature").isNull(), F.lit(0).cast("long")) \
         .otherwise(F.coalesce(F.col("weight_scaled"), default))

@@ -54,9 +54,7 @@ def shingles_of_tokens(toks, n: int = SHINGLE_WORDS):
 
 
 def minhash_signature(df: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text",
-                      n_hashes: int = MINHASH_HASHES,
-                      n: int = SHINGLE_WORDS) -> DataFrame:
+                      text_col: str = "text") -> DataFrame:
     """MinHash signature per doc: sig[i] = min over shingle hashes of
     xxhash64(hb, salt=i). One explode + one groupBy — the agg is a
     fixed-width array of mins, partial-aggregated map-side.
@@ -80,6 +78,7 @@ def minhash_signature(df: DataFrame, id_col: str = "doc_id",
         F.col(id_col), F.col("_toks"),
         F.transform("_toks", lambda t: F.xxhash64(t)).alias("_th"),
     )
+    n = SHINGLE_WORDS
     shingle_hashes = F.when(
         F.size("_toks") >= n,
         F.transform(
@@ -92,22 +91,23 @@ def minhash_signature(df: DataFrame, id_col: str = "doc_id",
     hb = base.select(F.col(id_col), F.explode(shingle_hashes).alias("hb"))
     mins = [
         F.min(F.xxhash64(F.col("hb"), F.lit(i))).alias(f"h{i}")
-        for i in range(n_hashes)
+        for i in range(MINHASH_HASHES)
     ]
     sig = hb.groupBy(id_col).agg(*mins)
     return sig.select(
         F.col(id_col),
-        F.array(*[F.col(f"h{i}") for i in range(n_hashes)]).alias("minhash"),
+        F.array(*[F.col(f"h{i}") for i in range(MINHASH_HASHES)])
+        .alias("minhash"),
     )
 
 
-def _band_key_structs(n_hashes: int = MINHASH_HASHES, bands: int = LSH_BANDS):
+def _band_key_structs():
     """Array of (band, bucket) structs derived from a ``minhash`` column:
     bucket = fixed-width xxhash64 fold of the band's signature rows. The
     SINGLE definition of LSH banding — shared by the batch self-join path
     (lsh_candidate_pairs) and the incremental index path so the two can
     never drift (the pytest oracle freezes it)."""
-    rows_per_band = n_hashes // bands
+    rows_per_band = MINHASH_HASHES // LSH_BANDS
     return F.array(*[
         F.struct(
             F.lit(b).alias("band"),
@@ -116,17 +116,14 @@ def _band_key_structs(n_hashes: int = MINHASH_HASHES, bands: int = LSH_BANDS):
                   for r in range(rows_per_band)]
             ).alias("bucket"),
         )
-        for b in range(bands)
+        for b in range(LSH_BANDS)
     ])
 
 
-def lsh_candidate_pairs(sig: DataFrame, id_col: str = "doc_id",
-                        n_hashes: int = MINHASH_HASHES,
-                        bands: int = LSH_BANDS,
-                        max_bucket: int = MAX_BUCKET) -> DataFrame:
+def lsh_candidate_pairs(sig: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Band the signatures, bucket-join within bands, emit candidate pairs
     (a < b). O(docs·bands) shuffle rows; pair expansion only inside
-    buckets. Buckets up to ``max_bucket`` expand all-pairs; larger
+    buckets. Buckets up to ``MAX_BUCKET`` expand all-pairs; larger
     (degenerate/skewed) buckets expand as a CHAIN over the sorted ids —
     linear in bucket size, never dropped. A chain (not a hub star)
     survives verification robustly: a false-positive member only breaks
@@ -136,7 +133,7 @@ def lsh_candidate_pairs(sig: DataFrame, id_col: str = "doc_id",
     would cost O(M²)); candidate-level connectivity is always complete."""
     banded = sig.select(
         F.col(id_col),
-        F.explode(_band_key_structs(n_hashes, bands)).alias("bk"),
+        F.explode(_band_key_structs()).alias("bk"),
     ).select(id_col, "bk.band", "bk.bucket")
     buckets = (
         banded.groupBy("band", "bucket")
@@ -144,8 +141,8 @@ def lsh_candidate_pairs(sig: DataFrame, id_col: str = "doc_id",
         .filter(F.size("ids") > 1)
     )
     sorted_ids = F.array_sort("ids")
-    small = buckets.filter(F.size("ids") <= max_bucket)
-    big = buckets.filter(F.size("ids") > max_bucket)
+    small = buckets.filter(F.size("ids") <= MAX_BUCKET)
+    big = buckets.filter(F.size("ids") > MAX_BUCKET)
     all_pairs = small.select(
         F.explode(
             F.flatten(
@@ -198,8 +195,7 @@ def jaccard_verify(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
     return j.filter(F.col("jaccard") >= threshold)
 
 
-def minhash_near_duplicates(df: DataFrame, id_col: str = "doc_id",
-                            text_col: str = "text",
+def minhash_near_duplicates(df: DataFrame,
                             threshold: float = 0.6) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline with an exact-dup prefilter.
 
@@ -218,8 +214,8 @@ def minhash_near_duplicates(df: DataFrame, id_col: str = "doc_id",
     verified chain/pair links.
     """
     hashed = df.select(
-        F.col(id_col), F.col(text_col),
-        F.sha2(F.col(text_col), 256).alias("_h"),
+        F.col("doc_id"), F.col("text"),
+        F.sha2(F.col("text"), 256).alias("_h"),
     )
     # The keeper agg carries the representative TEXT inside the
     # aggregation (min_by on the unique id — deterministic, identical to
@@ -248,8 +244,8 @@ def minhash_near_duplicates(df: DataFrame, id_col: str = "doc_id",
     keepers = (
         hashed.groupBy("_h")
         .agg(
-            F.min(id_col).alias("_keeper"),
-            F.min_by(F.col(text_col), F.col(id_col)).alias(text_col),
+            F.min("doc_id").alias("_keeper"),
+            F.min_by(F.col("text"), F.col("doc_id")).alias("text"),
         )
         .localCheckpoint(eager=True)
     )
@@ -259,24 +255,23 @@ def minhash_near_duplicates(df: DataFrame, id_col: str = "doc_id",
     # of the input beat one read + one full-text shuffle + one full-text
     # checkpoint write/read.
     exact_pairs = (
-        hashed.select(id_col, "_h")
+        hashed.select("doc_id", "_h")
         .join(keepers.select("_h", "_keeper"), "_h")
-        .filter(F.col(id_col) != F.col("_keeper"))
+        .filter(F.col("doc_id") != F.col("_keeper"))
         .select(
             F.col("_keeper").alias("id_a"),
-            F.col(id_col).alias("id_b"),
+            F.col("doc_id").alias("id_b"),
             F.lit(1.0).alias("jaccard"),
         )
     )
-    reps = keepers.select(F.col("_keeper").alias(id_col), text_col)
-    sig = minhash_signature(reps, id_col, text_col)
-    pairs = lsh_candidate_pairs(sig, id_col)
-    near = jaccard_verify(reps, pairs, id_col, text_col, threshold)
+    reps = keepers.select(F.col("_keeper").alias("doc_id"), "text")
+    sig = minhash_signature(reps)
+    pairs = lsh_candidate_pairs(sig)
+    near = jaccard_verify(reps, pairs, threshold=threshold)
     return near.unionByName(exact_pairs).orderBy("id_a", "id_b")
 
 
-def simhash64(df: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
+def simhash64(df: DataFrame) -> DataFrame:
     """64-bit SimHash per doc: per-token xxhash64; each output bit is the
     sign of the sum of per-token ±1 contributions. One explode + one
     64-column conditional agg (all codegen'd). A numpy mapInArrow variant
@@ -285,7 +280,7 @@ def simhash64(df: DataFrame, id_col: str = "doc_id",
     1.22 s): the Arrow hop costs more than the 64 codegen'd sums save —
     don't retry."""
     tok = df.select(
-        F.col(id_col), F.explode(_tokens(F.col(text_col))).alias("tok")
+        F.col("doc_id"), F.explode(_tokens(F.col("text"))).alias("tok")
     ).withColumn("th", F.xxhash64("tok"))
     bit_aggs = [
         F.sum(
@@ -294,31 +289,29 @@ def simhash64(df: DataFrame, id_col: str = "doc_id",
         ).alias(f"b{b}")
         for b in range(64)
     ]
-    agg = tok.groupBy(id_col).agg(*bit_aggs)
+    agg = tok.groupBy("doc_id").agg(*bit_aggs)
     sim = F.lit(0).cast("long")
     for b in range(64):
         sim = sim.bitwiseOR(
             F.when(F.col(f"b{b}") > 0, F.shiftleft(F.lit(1).cast("long"), b))
             .otherwise(F.lit(0).cast("long"))
         )
-    return agg.select(F.col(id_col), sim.alias("simhash"))
+    return agg.select(F.col("doc_id"), sim.alias("simhash"))
 
 
-def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame,
-                        id_col: str = "doc_id", text_col: str = "text",
-                        n: int = 3) -> DataFrame:
-    """Exact n-gram Jaccard for given id pairs (the J4-style verification
-    join shape)."""
+def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Exact word-trigram Jaccard for given id pairs (the J4-style
+    verification join shape)."""
     grams = df.select(
-        F.col(id_col), _tokens(F.col(text_col)).alias("_toks")
+        F.col("doc_id"), _tokens(F.col("text")).alias("_toks")
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.array_distinct(
-            shingles_of_tokens(F.col("_toks"), n)
+            shingles_of_tokens(F.col("_toks"), 3)
         ).alias("grams"),
     )
-    a = grams.select(F.col(id_col).alias("id_a"), F.col("grams").alias("g_a"))
-    b = grams.select(F.col(id_col).alias("id_b"), F.col("grams").alias("g_b"))
+    a = grams.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("g_a"))
+    b = grams.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("g_b"))
     # HALF_UP(inter/union, 6) by exact integer division — float round()
     # splits engines on true rational ties (an odd intersection over a
     # 128-gram union is exactly x.xxxxxx5). ONE definition of the rule:
@@ -352,9 +345,7 @@ def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame,
 
 
 def signature_index(df: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text",
-                    n_hashes: int = MINHASH_HASHES,
-                    n: int = SHINGLE_WORDS) -> DataFrame:
+                    text_col: str = "text") -> DataFrame:
     """Build the committed dedup index for a corpus/batch: byte-identical
     docs collapse to their min-id representative FIRST (the same exact-dup
     prefilter as minhash_near_duplicates — a 10⁶-copy boilerplate page is
@@ -375,7 +366,7 @@ def signature_index(df: DataFrame, id_col: str = "doc_id",
         hashed.join(keepers, [id_col, "content_sha"])
         .localCheckpoint(eager=True)
     )
-    sig = minhash_signature(reps, id_col, text_col, n_hashes, n)
+    sig = minhash_signature(reps, id_col, text_col)
     return reps.select(id_col, "content_sha").join(sig, id_col)
 
 
@@ -394,9 +385,7 @@ def incremental_near_duplicates(new_df: DataFrame, index: DataFrame,
                                 id_col: str = "doc_id",
                                 text_col: str = "text",
                                 threshold: float = 0.6,
-                                new_sig: DataFrame | None = None,
-                                n_hashes: int = MINHASH_HASHES,
-                                bands: int = LSH_BANDS) -> DataFrame:
+                                new_sig: DataFrame | None = None) -> DataFrame:
     """Flag docs of a NEW ingest batch that duplicate the already-committed
     corpus, touching only the batch's text and the compact index.
 
@@ -404,7 +393,7 @@ def incremental_near_duplicates(new_df: DataFrame, index: DataFrame,
       - method='exact'      byte-identical to a committed doc (sha equi-join)
       - method='minhash_est' signature-estimated Jaccard ≥ threshold
         (fraction of equal minhash components — the standard unbiased
-        estimator; exact k/n_hashes values, no float drift)
+        estimator; exact k/MINHASH_HASHES values, no float drift)
 
     Shuffle budget: O(batch·bands) band rows from the new side against the
     index's band rows — the committed corpus TEXT is never read. Matching
@@ -422,7 +411,7 @@ def incremental_near_duplicates(new_df: DataFrame, index: DataFrame,
     (plans/dedup_index.py) pays the batch scan+minhash once, not twice."""
     if new_sig is None:
         new_sig = signature_index(
-            new_df, id_col, text_col, n_hashes
+            new_df, id_col, text_col
         ).localCheckpoint(eager=True)  # feeds bands + join-backs + fan-out
     idx = index.select(
         F.col(id_col).alias("match_id"),
@@ -438,7 +427,7 @@ def incremental_near_duplicates(new_df: DataFrame, index: DataFrame,
             F.lit("exact").alias("method"),
         )
     )
-    bandkeys = _band_key_structs(n_hashes, bands)
+    bandkeys = _band_key_structs()
     nb = new_sig.select(
         F.col(id_col).alias("_rep"), F.explode(bandkeys).alias("bk")
     ).select("_rep", "bk.band", "bk.bucket")
@@ -463,7 +452,7 @@ def incremental_near_duplicates(new_df: DataFrame, index: DataFrame,
                 F.size(F.filter(
                     F.zip_with("_mh_n", "_mh_m", lambda a, b: a == b),
                     lambda x: x,
-                )) / F.lit(n_hashes)
+                )) / F.lit(MINHASH_HASHES)
             ).alias("jaccard_est"),
         )
         .filter(F.col("jaccard_est") >= threshold)

@@ -41,16 +41,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .classifier import N_BUCKETS, WEIGHT_SCALE, nb_score, nb_train
+from .classifier import WEIGHT_SCALE, nb_score, nb_train
 
 _U_BITS = 40  # see module docstring: exact-representability bound
 _U_DEN = float((1 << _U_BITS) + 1)
 
 
 def dsir_importance(corpus: DataFrame, target: DataFrame, raw: DataFrame,
-                    id_col: str = "doc_id", text_col: str = "text",
-                    n_buckets: int = N_BUCKETS,
-                    scale: int = WEIGHT_SCALE) -> tuple[DataFrame, dict]:
+                    id_col: str = "doc_id",
+                    text_col: str = "text") -> tuple[DataFrame, dict]:
     """Score every corpus document with the hashed-n-gram importance
     log-ratio (as ``score_scaled``, an exact long; see module
     docstring). ``target``/``raw`` are the two seed frames (raw is
@@ -63,13 +62,12 @@ def dsir_importance(corpus: DataFrame, target: DataFrame, raw: DataFrame,
     ))
     weights, meta = nb_train(
         labeled, positive="target", id_col=id_col, text_col=text_col,
-        n_buckets=n_buckets, scale=scale,
     )
     return nb_score(corpus, weights, meta, id_col, text_col), meta
 
 
-def gumbel_key(id_col_expr, score_scaled_expr, scale: int,
-               temperature: float = 1.0, salt: str = "dsir"):
+def gumbel_key(id_col_expr, score_scaled_expr, temperature: float,
+               salt: str):
     """score/temperature + hash-Gumbel(id): the Gumbel-top-k selection
     key as a column expression (per-row pure doubles of exact inputs —
     deterministic)."""
@@ -81,25 +79,22 @@ def gumbel_key(id_col_expr, score_scaled_expr, scale: int,
     g = -F.log(-F.log(u))
     return (
         score_scaled_expr.cast("double")
-        / F.lit(float(scale) * float(temperature))
+        / F.lit(float(WEIGHT_SCALE) * float(temperature))
         + g
     )
 
 
 def dsir_select(corpus: DataFrame, target: DataFrame, raw: DataFrame,
                 k: int, id_col: str = "doc_id", text_col: str = "text",
-                temperature: float = 1.0, salt: str = "dsir",
-                n_buckets: int = N_BUCKETS,
-                scale: int = WEIGHT_SCALE) -> DataFrame:
+                temperature: float = 1.0, salt: str = "dsir") -> DataFrame:
     """The k selected documents: (id, score_scaled, dsir_key), highest
     Gumbel-perturbed importance first, ties broken by id (total,
     deterministic order). ``temperature`` < 1 sharpens toward the
     highest-importance docs, > 1 flattens toward uniform."""
-    scored, _ = dsir_importance(
-        corpus, target, raw, id_col, text_col, n_buckets, scale)
+    scored, _ = dsir_importance(corpus, target, raw, id_col, text_col)
     keyed = scored.select(
         id_col, "score_scaled",
-        gumbel_key(F.col(id_col), F.col("score_scaled"), scale,
-                   temperature, salt).alias("dsir_key"),
+        gumbel_key(F.col(id_col), F.col("score_scaled"), temperature,
+                   salt).alias("dsir_key"),
     )
     return keyed.orderBy(F.desc("dsir_key"), F.col(id_col)).limit(k)

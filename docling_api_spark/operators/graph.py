@@ -75,22 +75,17 @@ def _as_long(c: str, op: str):
     ).otherwise(casted)
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Label each node of the undirected graph ``edges`` with the minimum
-    node id in its connected component. Returns (id, comp) for every node
-    that appears in at least one edge (isolated nodes never enter the
-    frame — by construction they are singleton clusters). Self-loops are
-    ignored; duplicate / reversed edges are deduped.
+def connected_components(edges: DataFrame) -> DataFrame:
+    """Label each node of the undirected (id_a, id_b) graph ``edges`` with
+    the minimum node id in its connected component. Returns (id, comp)
+    for every node that appears in at least one edge (isolated nodes
+    never enter the frame — by construction they are singleton
+    clusters). Self-loops are ignored; duplicate / reversed edges are
+    deduped.
 
-    Raises RuntimeError if ``max_iter`` rounds do not converge (fail
-    loudly rather than return a partial clustering) — with pointer
-    jumping, 50 rounds covers graphs astronomically deeper than any real
-    dedup output.
+    Raises RuntimeError if 50 rounds do not converge (fail loudly rather
+    than return a partial clustering) — with pointer jumping, 50 rounds
+    covers graphs astronomically deeper than any real dedup output.
 
     Node ids must cast losslessly to long (min-label propagation needs a
     totally ordered numeric id). A non-castable id (e.g. a string
@@ -103,8 +98,8 @@ def connected_components(
 
     e = (
         edges.select(
-            _as_long(src, "connected_components").alias("a"),
-            _as_long(dst, "connected_components").alias("b"),
+            _as_long("id_a", "connected_components").alias("a"),
+            _as_long("id_b", "connected_components").alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
     )
@@ -132,7 +127,7 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     prev_sum = None
-    for _ in range(max_iter):
+    for _ in range(50):
         # 1. neighbor step, FUSED: neighbor label candidates UNION each
         # node's own label, then one groupBy-min. Replaces the groupBy +
         # left-join-back shape (min over neighbors, then join onto
@@ -197,21 +192,16 @@ def connected_components(
             return labels
         prev_sum = agg["s"]
     raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds"
+        "connected_components did not converge in 50 rounds"
     )
 
 
-def cluster_assignments(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    id_alias: str = "doc_id",
-) -> DataFrame:
+def cluster_assignments(edges: DataFrame, id_alias: str = "doc_id") -> DataFrame:
     """Components + cluster sizes in one result: (id_alias, cluster_id,
     cluster_size), the grain a dedup pipeline joins back onto the corpus
     to pick keepers / drop members. Every clustered node has size >= 2
     (singletons never appear in the edge list)."""
-    comp = connected_components(edges, src, dst)
+    comp = connected_components(edges)
     sizes = comp.groupBy("comp").agg(F.count(F.lit(1)).alias("cluster_size"))
     return comp.join(sizes, "comp").select(
         F.col("id").alias(id_alias),

@@ -115,19 +115,16 @@ def c4_clean_lines(df: DataFrame, text_col: str = "text",
     )
 
 
-def c4_document_flags(df: DataFrame, text_col: str = "text",
-                      min_words: int = MIN_WORDS,
-                      min_sentences: int = MIN_SENTENCES) -> DataFrame:
+def c4_document_flags(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Flags-only variant: (c4_keep, n_lines_kept, n_sentences) without
     materializing the cleaned text column (the gate-only caller's
     projection stays ~16 bytes/doc)."""
-    full = c4_clean_lines(df, text_col, min_words, min_sentences)
+    full = c4_clean_lines(df, text_col)
     return full.drop("clean_text", "n_lines", "n_short_lines",
                      "n_no_terminal_lines", "n_boilerplate_lines")
 
 
 def dedup_paragraphs_within_doc(df: DataFrame, text_col: str = "text",
-                                out_col: str = "para_deduped_text",
                                 sep: str = "\n") -> DataFrame:
     """IN-document paragraph dedup: a page's nav menu / footer / cookie
     banner often repeats VERBATIM inside one document (template engines
@@ -147,7 +144,7 @@ def dedup_paragraphs_within_doc(df: DataFrame, text_col: str = "text",
     are): '\\n' for line-shaped text, '\\n\\n' for post-extraction
     markdown where blocks are blank-line separated (otherwise the empty
     separator lines would count as repeats of each other)."""
-    reserved = {out_col, "n_paras", "n_paras_dropped",
+    reserved = {"para_deduped_text", "n_paras", "n_paras_dropped",
                 "_pd_lines", "_pd_kept"}
     clash = reserved & set(df.columns)
     if clash:
@@ -159,7 +156,7 @@ def dedup_paragraphs_within_doc(df: DataFrame, text_col: str = "text",
         df.withColumn("_pd_lines", F.split(F.col(text_col), sep))
         .withColumn("_pd_kept", F.array_distinct("_pd_lines"))
         .withColumn(
-            out_col,
+            "para_deduped_text",
             F.when(F.col(text_col).isNotNull(),
                    F.array_join(F.col("_pd_kept"), sep)),
         )

@@ -24,15 +24,15 @@ CREDITS_PER_PAGE = 1
 MIN_CREDITS = 1
 
 
-def credits_col(pages_col, cpp: int = CREDITS_PER_PAGE, minc: int = MIN_CREDITS):
+def credits_col(pages_col):
     """A2 — scalar credit expression."""
-    return F.greatest(pages_col.cast("long") * F.lit(cpp), F.lit(minc).cast("long"))
+    return F.greatest(pages_col.cast("long") * F.lit(CREDITS_PER_PAGE),
+                      F.lit(MIN_CREDITS).cast("long"))
 
 
 def usage_rollup(df: DataFrame, key_col: str, value_col: str,
                  time_col: str | None = None,
-                 value_decimals: int | None = None,
-                 avg_decimals: int = 4) -> DataFrame:
+                 value_decimals: int | None = None) -> DataFrame:
     """A4 — per-key usage stats (count / sum / avg), the shape of
     get_usage_stats (key_service.py:166-180).
 
@@ -40,7 +40,7 @@ def usage_rollup(df: DataFrame, key_col: str, value_col: str,
     (money in cents, 2-decimal metering values), pass its decimal count
     and the sum/avg are computed in EXACT scaled-integer arithmetic:
     each value becomes a long at that scale, the sum is an associative
-    integer sum, and the avg is HALF_UP at ``avg_decimals`` via integer
+    integer sum, and the avg is HALF_UP at 4 decimals via integer
     division. This is the correct shape at cluster scale — a plain
     double sum is partition-ORDER dependent (AQE re-plans, shuffles, and
     engine differences each reorder the fold, and avg ties at the
@@ -61,7 +61,7 @@ def usage_rollup(df: DataFrame, key_col: str, value_col: str,
         return df.groupBy(key_col).agg(*aggs)
 
     vscale = 10 ** value_decimals
-    ascale = 10 ** avg_decimals
+    ascale = 10 ** 4  # avg_value's decimals
     # value -> exact scaled long (round() repairs the double's
     # representation error; values are promised to have value_decimals
     # decimals, so the nearest integer is never near a .5 tie)
@@ -79,7 +79,7 @@ def usage_rollup(df: DataFrame, key_col: str, value_col: str,
             if time_col else []
         ),
     )
-    # avg = sum_int / (vscale * n_vals), HALF_UP at avg_decimals:
+    # avg = sum_int / (vscale * n_vals), HALF_UP at 4 decimals:
     # floor((2*ascale*sum_int + vscale*n) / (2*vscale*n)) / ascale —
     # all longs; (a - pmod(a,b))/b is an exactly-divisible double div.
     # All-NULL group: _sum_int is NULL -> avg_value NULL (F.avg parity).

@@ -7,19 +7,15 @@ per source hits a target share of a token budget — the standard
 "data mixture" step in front of chunking/packing (cf. temperature-based
 sampling for multilingual pretraining and published source-weight mixes).
 
-Two ways to state the target shares:
-  - explicit ``weights`` {source: weight} (normalized over the given
-    sources; sources without a weight are dropped from the mix), or
-  - ``alpha`` temperature smoothing: share_s proportional to
-    n_tokens_s ** alpha (alpha = 1 reproduces natural proportions,
-    alpha -> 0 approaches uniform).
+The target shares are explicit ``weights`` {source: weight},
+normalized over the given sources; sources without a weight are dropped
+from the mix.
 
 Determinism (SURVEY §4.3: no runtime randomness): the fractional epoch
 keeps a doc iff its md5 ``hash_bucket`` (sampling.py — the same
 cross-engine-stable primitive the stratified sampler uses) falls under
 the fractional rate, so the same mixture is produced on every run, every
-engine, and at every cluster size. Vary ``salt`` to draw a different
-(equally deterministic) fractional subset per training run.
+engine, and at every cluster size.
 
 Scale: rate planning touches one tiny per-source counts row per source
 (collected to the driver — O(#sources), documented); materialization is
@@ -43,44 +39,33 @@ MAX_EPOCHS = 1000
 
 
 def mixture_rates(counts: DataFrame, budget_tokens: int, *,
-                  weights: dict[str, float] | None = None,
-                  alpha: float | None = None,
-                  source_col: str = "source",
-                  tokens_col: str = "n_tokens",
-                  max_epochs: int = MAX_EPOCHS) -> DataFrame:
+                  weights: dict[str, float]) -> DataFrame:
     """Plan per-source sampling factors for a token budget.
 
-    ``counts`` is the tiny per-source rollup (source, n_tokens). Exactly
-    one of ``weights`` / ``alpha`` must be given. Returns one row per
-    mixed source: (source, n_tokens, share_bp, n_copies, frac_bp) where
-    the sampling factor is n_copies + frac_bp/10000, so the expected
-    realized tokens are budget_tokens * share_bp/10000 per source.
+    ``counts`` is the tiny per-source rollup (source, n_tokens). Returns
+    one row per mixed source: (source, n_tokens, share_bp, n_copies,
+    frac_bp) where the sampling factor is n_copies + frac_bp/10000, so
+    the expected realized tokens are budget_tokens * share_bp/10000 per
+    source.
     """
-    if (weights is None) == (alpha is None):
-        raise ValueError("mixture_rates: give exactly one of weights/alpha")
     if budget_tokens <= 0:
         raise ValueError("mixture_rates: budget_tokens must be positive")
     rows = counts.select(
-        F.col(source_col).cast("string").alias("source"),
-        F.col(tokens_col).cast("long").alias("n_tokens"),
+        F.col("source").cast("string").alias("source"),
+        F.col("n_tokens").cast("long").alias("n_tokens"),
     ).collect()  # O(#sources) — the planning table, not the corpus
     have = {r["source"]: r["n_tokens"] for r in rows}
     bad = [s for s, n in have.items() if s is None or n is None or n <= 0]
     if bad:
         raise ValueError(f"mixture_rates: non-positive/NULL counts: {bad}")
-    if weights is not None:
-        missing = set(weights) - set(have)
-        if missing:
-            raise ValueError(
-                f"mixture_rates: weights name unknown sources: {sorted(missing)}"
-            )
-        if any(w < 0 for w in weights.values()):
-            raise ValueError("mixture_rates: weights must be >= 0")
-        mass = {s: float(w) for s, w in weights.items() if w > 0}
-    else:
-        if not 0 < alpha <= 1:
-            raise ValueError("mixture_rates: alpha must be in (0, 1]")
-        mass = {s: float(n) ** alpha for s, n in have.items()}
+    missing = set(weights) - set(have)
+    if missing:
+        raise ValueError(
+            f"mixture_rates: weights name unknown sources: {sorted(missing)}"
+        )
+    if any(w < 0 for w in weights.values()):
+        raise ValueError("mixture_rates: weights must be >= 0")
+    mass = {s: float(w) for s, w in weights.items() if w > 0}
     total = sum(mass.values())
     if total <= 0:
         raise ValueError("mixture_rates: all mixture weights are zero")
@@ -92,10 +77,10 @@ def mixture_rates(counts: DataFrame, budget_tokens: int, *,
         frac_bp = round((factor - n_copies) * 10000)
         if frac_bp == 10000:  # float landed on the next integer
             n_copies, frac_bp = n_copies + 1, 0
-        if n_copies >= max_epochs:
+        if n_copies >= MAX_EPOCHS:
             raise ValueError(
                 f"mixture_rates: source {s!r} needs factor {factor:.1f} "
-                f"(>= {max_epochs} full epochs) — mis-stated mix?"
+                f"(>= {MAX_EPOCHS} full epochs) — mis-stated mix?"
             )
         plan.append((s, have[s], round(share * 10000), n_copies, frac_bp))
     return counts.sparkSession.createDataFrame(
@@ -104,9 +89,7 @@ def mixture_rates(counts: DataFrame, budget_tokens: int, *,
     )
 
 
-def build_mixture(df: DataFrame, rates: DataFrame,
-                  source_col: str = "source", key_col: str = "doc_id",
-                  salt: str = "mix") -> DataFrame:
+def build_mixture(df: DataFrame, rates: DataFrame) -> DataFrame:
     """Materialize the mixture: every doc of a mixed source appears
     ``n_copies`` times (epochs 0..n_copies-1) plus once more in epoch
     ``n_copies`` iff its hash bucket falls under ``frac_bp``. Sources
@@ -114,14 +97,14 @@ def build_mixture(df: DataFrame, rates: DataFrame,
     posture as stratified_sample). Output = input columns + ``epoch``.
 
     The epoch fan-out is ``explode(sequence(...))`` over the broadcast
-    rates join — pure codegen, no shuffle; a doc kept at a given salt is
-    kept at that salt forever (reproducible mixes)."""
-    plan = rates.select(source_col, "n_copies", "frac_bp")
-    joined = df.join(F.broadcast(plan), source_col)
+    rates join — pure codegen, no shuffle; a doc kept once is kept
+    forever (reproducible mixes)."""
+    plan = rates.select("source", "n_copies", "frac_bp")
+    joined = df.join(F.broadcast(plan), "source")
     fanned = joined.withColumn(
         "epoch", F.explode(F.sequence(F.lit(0), F.col("n_copies")))
     )
     keep = (F.col("epoch") < F.col("n_copies")) | (
-        hash_bucket(F.col(key_col), salt) < F.col("frac_bp")
+        hash_bucket(F.col("doc_id"), "mix") < F.col("frac_bp")
     )
     return fanned.filter(keep).drop("n_copies", "frac_bp")

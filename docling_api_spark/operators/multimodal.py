@@ -35,10 +35,9 @@ FRAME_SCHEMA = T.StructType(
 )
 
 
-def sample_video_frames(df: DataFrame, bin_col: str = "video",
-                        every: int = 2) -> DataFrame:
+def sample_video_frames(df: DataFrame, every: int = 2) -> DataFrame:
     """Frame-sampling plumbing: FVID container -> array of per-frame
-    metadata structs for every ``every``-th frame, replacing ``bin_col``
+    metadata structs for every ``every``-th frame, replacing ``video``
     (a real pipeline would emit decoded frame tensors here). Every other
     column is kept zero-copy; header parsing of variable-length binaries
     is per payload, numpy does the per-byte work (one reshape per
@@ -47,11 +46,11 @@ def sample_video_frames(df: DataFrame, bin_col: str = "video",
     failures."""
     import numpy as np
 
-    if bin_col not in df.columns:
+    if "video" not in df.columns:
         # fail loudly: pyarrow's get_field_index returns -1 for a missing
         # column, and column(-1) silently reads the LAST column instead
-        raise ValueError(f"binary column {bin_col!r} not in {df.columns}")
-    keep = [c for c in df.columns if c != bin_col]
+        raise ValueError(f"binary column 'video' not in {df.columns}")
+    keep = [c for c in df.columns if c != "video"]
     out_schema = T.StructType(
         [df.schema[c] for c in keep]
         + [T.StructField("frames", T.ArrayType(FRAME_SCHEMA), True)]
@@ -82,7 +81,7 @@ def sample_video_frames(df: DataFrame, bin_col: str = "video",
         ]))
         out_arrow = None
         for b in batches:
-            payloads = b.column(b.schema.get_field_index(bin_col))
+            payloads = b.column(b.schema.get_field_index("video"))
             values = [frames(raw) for raw in payloads.to_pylist()]
             keep_arrays = [b.column(b.schema.get_field_index(c)) for c in keep]
             if out_arrow is None:

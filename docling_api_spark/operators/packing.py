@@ -82,13 +82,12 @@ def pack_sequences(
     ctx_len: int = 2048,
     id_col: str = "doc_id",
     token_count_col: str | None = None,
-    text_col: str = "text",
     n_shards: int = DEFAULT_SHARDS,
 ) -> DataFrame:
     """Pack each document into a (shard, bin_idx) training-example slot.
 
     ``token_count_col`` names a precomputed token-count column; when
-    None, whitespace token counts are derived JVM-side from ``text_col``
+    None, whitespace token counts are derived JVM-side from ``text``
     (``size(split(...))`` — codegen, no Python). Output: one row per
     document with (id, shard, bin_idx, offset_in_bin, n_tokens,
     bin_oversize); ``(shard, bin_idx)`` is the training-example key and
@@ -104,9 +103,9 @@ def pack_sequences(
         counted = df.select(
             id_col,
             F.when(
-                F.col(text_col).isNull() | (F.trim(text_col) == ""), F.lit(0)
+                F.col("text").isNull() | (F.trim("text") == ""), F.lit(0)
             ).otherwise(
-                F.size(F.split(F.trim(text_col), r"\s+"))
+                F.size(F.split(F.trim("text"), r"\s+"))
             ).cast("long").alias("_nt"),
         )
     sharded = counted.withColumn(

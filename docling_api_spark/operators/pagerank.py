@@ -8,12 +8,12 @@ PageRank, made DETERMINISTIC the same way the rest of this repo is:
 
   - ranks are scaled longs (RANK_SCALE units of probability mass);
   - each out-contribution is exact integer division
-    floor(rank·d_num / (d_den·outdeg)) — a per-row pure function;
+    floor(rank·D_NUM / (D_DEN·outdeg)) — a per-row pure function;
   - per-node accumulation is an exact LONG sum (associative), so every
     iteration's rank vector is bit-identical at any parallelism. Float
     PageRank sums contributions in partition order and never is.
-  - damping d = d_num/d_den is a RATIONAL (default 17/20 = 0.85), never
-    a float.
+  - damping d = D_NUM/D_DEN is a RATIONAL (17/20 = 0.85), never a
+    float.
 
 Each floor loses < 1 scaled unit per edge per iteration (bounded,
 documented mass leak — with RANK_SCALE = 2^40 that is ~1e-12 of total
@@ -46,21 +46,17 @@ RANK_SCALE = 1 << 40
 D_NUM, D_DEN = 17, 20  # damping 0.85 as an exact rational
 
 
-def prepare_edges(edges: DataFrame, src_col: str = "src",
-                  dst_col: str = "dst") -> DataFrame:
-    """Distinct edges, hash-partitioned by src and PERSISTED — pay the
-    edge shuffle once, not once per iteration. Caller unpersists."""
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct().repartition("src")
+def prepare_edges(edges: DataFrame) -> DataFrame:
+    """Distinct (src, dst) edges, hash-partitioned by src and PERSISTED —
+    pay the edge shuffle once, not once per iteration. Caller
+    unpersists."""
+    e = edges.select("src", "dst").distinct().repartition("src")
     e.persist()
     return e
 
 
-def pagerank(edges: DataFrame, n_iter: int = 10,
-             src_col: str = "src", dst_col: str = "dst",
-             d_num: int = D_NUM, d_den: int = D_DEN,
-             scale: int = RANK_SCALE, cut_lineage: bool = True) -> DataFrame:
+def pagerank(edges: DataFrame, n_iter: int = 10, scale: int = RANK_SCALE,
+             cut_lineage: bool = True) -> DataFrame:
     """(node, rank_scaled, rank): ``rank_scaled`` is the exact long the
     iteration produced (the determinism contract — compare THIS across
     runs/engines); ``rank`` is its single-division float convenience.
@@ -71,7 +67,7 @@ def pagerank(edges: DataFrame, n_iter: int = 10,
     the whole iteration lazily composed — for plan audits only (the
     branching on ``ranks`` doubles recomputation per round), results
     are identical."""
-    e = prepare_edges(edges, src_col, dst_col)
+    e = prepare_edges(edges)
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -92,7 +88,7 @@ def pagerank(edges: DataFrame, n_iter: int = 10,
         "node", F.coalesce("outdeg", F.lit(0)).cast("long").alias("outdeg")
     ).localCheckpoint(eager=True)
 
-    base = (scale * (d_den - d_num)) // (d_den * n)
+    base = (scale * (D_DEN - D_NUM)) // (D_DEN * n)
     ranks = nd.select(
         "node", "outdeg",
         F.lit(scale // n).cast("long").alias("rank_scaled"),
@@ -106,20 +102,20 @@ def pagerank(edges: DataFrame, n_iter: int = 10,
             F.coalesce(F.sum("rank_scaled"), F.lit(0).cast("long"))
             .alias("_dm")
         )
-        # floor((dangling·d_num) / (d_den·n)) — same exact long floor as
+        # floor((dangling·D_NUM) / (D_DEN·n)) — same exact long floor as
         # the contribution term (`div` truncates toward zero; both
         # operands are nonnegative, so trunc == floor)
-        dang_term = F.expr(f"(_dm * {d_num}) div {d_den * n}")
+        dang_term = F.expr(f"(_dm * {D_NUM}) div {D_DEN * n}")
         contrib = (
             ranks.filter("outdeg > 0")
             .join(e, ranks["node"] == e["src"])
             .select(
                 F.col("dst").alias("node"),
-                (F.col("rank_scaled") * F.lit(d_num).cast("long"))
+                (F.col("rank_scaled") * F.lit(D_NUM).cast("long"))
                 .alias("_num"),
-                (F.lit(d_den).cast("long") * F.col("outdeg")).alias("_den"),
+                (F.lit(D_DEN).cast("long") * F.col("outdeg")).alias("_den"),
             )
-            # floor(rank·d_num / (d_den·outdeg)) via the INTEGRAL `div`
+            # floor(rank·D_NUM / (D_DEN·outdeg)) via the INTEGRAL `div`
             # operator — exact LONG division at any scale (a double
             # division would round above 2^53, breaking the exactness
             # contract for large `scale` values)

@@ -32,20 +32,19 @@ def hash_bucket(key_col, salt: str = ""):
 
 
 def stratified_sample(df: DataFrame, rates: DataFrame, strata_col: str,
-                      key_col: str, rate_col: str = "rate_bp") -> DataFrame:
+                      key_col: str) -> DataFrame:
     """Per-stratum hash sampling: join the broadcast ``rates`` table
     (strata_col -> rate_bp) and keep rows whose bucket falls under their
     stratum's rate — the 'training-mix weights' primitive (e.g. keep 25%
     of web, 100% of books)."""
     joined = df.join(F.broadcast(rates), strata_col)
-    return joined.filter(hash_bucket(F.col(key_col)) < F.col(rate_col))
+    return joined.filter(hash_bucket(F.col(key_col)) < F.col("rate_bp"))
 
 
 def group_split(df: DataFrame, group_col: str,
                 splits: list[tuple[str, int]] = (
                     ("train", 9000), ("val", 500), ("test", 500)),
-                salt: str = "split",
-                out_col: str = "split") -> DataFrame:
+                salt: str = "split") -> DataFrame:
     """Leakage-free train/val/test assignment: the bucket is hashed from
     the GROUP key (conversation, document, domain), so every row of a
     group lands in the same split — a conversation can never straddle
@@ -81,4 +80,4 @@ def group_split(df: DataFrame, group_col: str,
                 else expr.when(bucket < edge, name))
     last = F.lit(splits[-1][0]) if expr is None else expr.otherwise(
         splits[-1][0])
-    return df.withColumn(out_col, last)
+    return df.withColumn("split", last)

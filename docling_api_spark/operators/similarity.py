@@ -80,29 +80,9 @@ def _np_cosine(va: pd.Series, vb: pd.Series) -> pd.Series:
     return pd.Series(_cosine_batch(va, vb))
 
 
-def cosine_topk(df: DataFrame, queries: DataFrame, k: int = 3,
-                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Brute-force cosine top-k per query.
-
-    ``queries`` (few rows) is broadcast; the corpus is scanned once. The
-    per-query top-k is a window ranked by score — with Q queries the
-    shuffle is Q·N score rows of ~24 bytes, and AQE coalesces it.
-    """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
-    pairs = df.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec")
-    ).join(F.broadcast(q), F.col("cand_id") != F.col("query_id"))
-    scored = pairs.select(
-        "query_id",
-        "cand_id",
-        F.round(
-            _dot(F.col("qvec"), F.col("cvec"))
-            / F.greatest(_norm(F.col("qvec")) * _norm(F.col("cvec")), F.lit(1e-12)),
-            6,
-        ).alias("cosine"),
-    )
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Per query, the ``k`` highest-cosine candidates, ties broken by the
+    lower candidate id: (query_id, cand_id, cosine, rank), rank from 1."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("cand_id").asc()
     )
@@ -113,29 +93,36 @@ def cosine_topk(df: DataFrame, queries: DataFrame, k: int = 3,
     )
 
 
+def cosine_topk(df: DataFrame, queries: DataFrame, k: int = 3) -> DataFrame:
+    """Brute-force cosine top-k per query.
+
+    ``queries`` (few rows) is broadcast; the corpus is scanned once. The
+    per-query top-k is a window ranked by score — with Q queries the
+    shuffle is Q·N score rows of ~24 bytes, and AQE coalesces it.
+    """
+    q = queries.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
+    )
+    pairs = df.select(
+        F.col("vec_id").alias("cand_id"), F.col("embedding").alias("cvec")
+    ).join(F.broadcast(q), F.col("cand_id") != F.col("query_id"))
+    scored = pairs.select(
+        "query_id",
+        "cand_id",
+        F.round(
+            _dot(F.col("qvec"), F.col("cvec"))
+            / F.greatest(_norm(F.col("qvec")) * _norm(F.col("cvec")), F.lit(1e-12)),
+            6,
+        ).alias("cosine"),
+    )
+    return _top_k(scored, k)
+
+
 _BC_REGISTRY: list = []  # corpus-sized broadcasts from prior calls
 _BC_LOCK = threading.Lock()
 
 
-def register_broadcast(bc) -> None:
-    """Session-lifetime hygiene for corpus/model broadcasts (shared by
-    the exact-pairs baseline, k-means assignment, and the BPE encoder):
-    keep the IMMEDIATELY-prior broadcast alive — its result DataFrame
-    may still be lazily pending in an interleaved caller — and evict
-    older ones. unpersist (NOT destroy) is safe for still-referenced
-    plans: the value stays on the driver and re-ships on demand."""
-    with _BC_LOCK:
-        while len(_BC_REGISTRY) > 1:
-            try:
-                _BC_REGISTRY.pop(0).unpersist(blocking=False)
-            except Exception:
-                pass  # broadcast from a stopped SparkContext
-        _BC_REGISTRY.append(bc)
-
-
-def exact_cosine_pairs(emb: DataFrame, threshold: float,
-                       id_col: str = "vec_id",
-                       vec_col: str = "embedding") -> DataFrame:
+def exact_cosine_pairs(emb: DataFrame, threshold: float) -> DataFrame:
     """Exact O(N²) near-dup baseline: every ``id_a < id_b`` pair with
     ``round(cosine, 6) >= threshold``. Declared exact-pair baseline only —
     the 100 TB path is the LSH-bucketed variant (candidates within hash
@@ -157,14 +144,14 @@ def exact_cosine_pairs(emb: DataFrame, threshold: float,
     mapInPandas stage executes exactly once."""
     spark = emb.sparkSession
     pdf = emb.select(
-        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v")
+        F.col("vec_id").cast("long").alias("id"), F.col("embedding").alias("v")
     ).toPandas()
     if len(pdf) == 0:
         # np.vstack rejects zero arrays; an empty corpus has no pairs
         return spark.createDataFrame([], "id_a long, id_b long, cosine double")
     if pdf["id"].isna().any():
         raise ValueError(
-            f"exact_cosine_pairs: {id_col!r} contains nulls or values "
+            "exact_cosine_pairs: 'vec_id' contains nulls or values "
             "that do not cast to long — use a numeric surrogate id"
         )
     order = np.argsort(pdf["id"].to_numpy(), kind="stable")
@@ -175,7 +162,7 @@ def exact_cosine_pairs(emb: DataFrame, threshold: float,
     # ground truth for the ANN recall floors
     if len(ids) > 1 and not (np.diff(ids) > 0).all():
         raise ValueError(
-            f"exact_cosine_pairs: duplicate {id_col!r} values in the "
+            "exact_cosine_pairs: duplicate 'vec_id' values in the "
             "corpus — ids must be unique"
         )
     mat = np.vstack(pdf["v"].to_numpy()[order]).astype(np.float64)
@@ -184,16 +171,22 @@ def exact_cosine_pairs(emb: DataFrame, threshold: float,
             "exact_cosine_pairs: embeddings are zero-dimensional "
             "(empty arrays) — cosine similarity is undefined"
         )
+    bc = spark.sparkContext.broadcast((ids, mat))
     # evict broadcasts from prior calls so a long-lived session invoking
     # this repeatedly doesn't pin one corpus copy per call on the
-    # executors. unpersist (NOT destroy) is safe for still-referenced
-    # plans (the value stays on the driver and re-ships on demand), so
-    # this is purely an efficiency policy: keep the IMMEDIATELY-prior
-    # broadcast alive — its result DataFrame may still be lazily pending
-    # in an interleaved caller — and evict only older ones, under a lock
-    # (concurrent driver threads may share this module global).
-    bc = spark.sparkContext.broadcast((ids, mat))
-    register_broadcast(bc)
+    # executors: keep the IMMEDIATELY-prior broadcast alive — its result
+    # DataFrame may still be lazily pending in an interleaved caller —
+    # and evict older ones, under a lock (concurrent driver threads may
+    # share this module global). unpersist (NOT destroy) is safe for
+    # still-referenced plans: the value stays on the driver and re-ships
+    # on demand.
+    with _BC_LOCK:
+        while len(_BC_REGISTRY) > 1:
+            try:
+                _BC_REGISTRY.pop(0).unpersist(blocking=False)
+            except Exception:
+                pass  # broadcast from a stopped SparkContext
+        _BC_REGISTRY.append(bc)
 
     # Build the pair-generation id frame FROM THE DRIVER SNAPSHOT, not by
     # re-selecting from `emb`: a second distributed scan would (a)
@@ -269,20 +262,19 @@ N_PLANES = 6   # sign bits per table -> 64 buckets/table
 N_TABLES = 8   # independent tables; candidate = same bucket in ANY table
 
 
-def _bucket_vals(mat: np.ndarray, n_planes: int, n_tables: int) -> np.ndarray:
-    """(N, n_tables) base bucket ids: sign pattern of v·Hᵀ per table,
-    offset by ``table << n_planes`` so ids never collide across tables."""
-    planes = _hyperplanes(mat.shape[1], n_tables * n_planes)
+def _bucket_vals(mat: np.ndarray) -> np.ndarray:
+    """(N, N_TABLES) base bucket ids: sign pattern of v·Hᵀ per table,
+    offset by ``table << N_PLANES`` so ids never collide across tables."""
+    planes = _hyperplanes(mat.shape[1], N_TABLES * N_PLANES)
     signs = (mat @ planes.T) > 0  # (N, T*P)
-    weights = 1 << np.arange(n_planes)
-    vals = signs.reshape(len(mat), n_tables, n_planes) @ weights  # (N, T)
-    return vals + (np.arange(n_tables) << n_planes)  # per-table id space
+    weights = 1 << np.arange(N_PLANES)
+    vals = signs.reshape(len(mat), N_TABLES, N_PLANES) @ weights  # (N, T)
+    return vals + (np.arange(N_TABLES) << N_PLANES)  # per-table id space
 
 
-def lsh_bucket_udf(dim: int, n_planes: int = N_PLANES,
-                   n_tables: int = N_TABLES):
+def lsh_bucket_udf():
     """Vectorized multi-table bucketing: one array column of
-    ``n_tables`` bucket ids per vector. Multi-table is the standard
+    ``N_TABLES`` bucket ids per vector. Multi-table is the standard
     random-hyperplane construction: a single table's recall at cosine c
     is (1-θ/π)^planes — a few percent for moderate similarity — while
     the union over T tables is 1-(1-p)^T. One numpy matmul per Arrow
@@ -291,16 +283,15 @@ def lsh_bucket_udf(dim: int, n_planes: int = N_PLANES,
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def buckets(vecs: pd.Series) -> pd.Series:
         mat = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs])
-        vals = _bucket_vals(mat, n_planes, n_tables)
+        vals = _bucket_vals(mat)
         return pd.Series([row.astype("int32").tolist() for row in vals])
 
     return buckets
 
 
-def lsh_probe_udf(dim: int, n_planes: int = N_PLANES,
-                  n_tables: int = N_TABLES):
+def lsh_probe_udf():
     """Multi-probe bucketing (Lv et al., VLDB'07): per vector, the
-    ``n_tables`` BASE buckets followed by the ``n_tables·n_planes``
+    ``N_TABLES`` BASE buckets followed by the ``N_TABLES·N_PLANES``
     single-bit-flip probe buckets (Hamming-distance-1 neighbors — the
     buckets a near neighbor most likely landed in when one hyperplane
     disagreed). Probing from the QUERY/left side only keeps the index
@@ -309,15 +300,15 @@ def lsh_probe_udf(dim: int, n_planes: int = N_PLANES,
     probability rises from p^P to p^P + P·p^(P-1)(1-p) before the
     1-(1-·)^T table union — measured recall on the tracked corpus rose
     0.36 → ~0.9 (near-dup @ cosine 0.40). Layout: entries [0, T) are the
-    base buckets (posexplode pos < n_tables selects the index side from
+    base buckets (posexplode pos < N_TABLES selects the index side from
     the same single UDF pass), [T, T·(1+P)) the flips — the XOR touches
-    only the low ``n_planes`` bits, never the table offset."""
+    only the low ``N_PLANES`` bits, never the table offset."""
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def probes(vecs: pd.Series) -> pd.Series:
         mat = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs])
-        base = _bucket_vals(mat, n_planes, n_tables)  # (N, T)
-        weights = 1 << np.arange(n_planes)
+        base = _bucket_vals(mat)  # (N, T)
+        weights = 1 << np.arange(N_PLANES)
         flips = base[:, :, None] ^ weights[None, None, :]  # (N, T, P)
         allb = np.concatenate([base, flips.reshape(len(mat), -1)], axis=1)
         return pd.Series([row.astype("int32").tolist() for row in allb])
@@ -325,34 +316,32 @@ def lsh_probe_udf(dim: int, n_planes: int = N_PLANES,
     return probes
 
 
-def lsh_cosine_topk(df: DataFrame, queries: DataFrame, dim: int, k: int = 3,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    n_planes: int = N_PLANES,
-                    n_tables: int = N_TABLES) -> DataFrame:
+def lsh_cosine_topk(df: DataFrame, queries: DataFrame, dim: int,
+                    k: int = 3) -> DataFrame:
     """ANN variant: score only candidates sharing a bucket with the query
     in ANY of the LSH tables. Recall < 1 by construction; the scale path
     for 100 TB corpora (the corpus-side bucket column would be
-    precomputed and partition-pruned; the explode costs n_tables rows per
+    precomputed and partition-pruned; the explode costs N_TABLES rows per
     vector — still O(N), never O(N·Q)). The QUERY side multi-probes the
     Hamming-1 neighbor buckets (lsh_probe_udf) — recall rises sharply
     while the corpus side stays at one bucket per table, so the probe
     fan-out multiplies only the broadcast query rows (Q·T·(1+P) ints),
     never anything O(N)."""
-    bucket = lsh_bucket_udf(dim, n_planes, n_tables)
-    probe = lsh_probe_udf(dim, n_planes, n_tables)
+    bucket = lsh_bucket_udf()
+    probe = lsh_probe_udf()
     # Explode only (id, bucket) — 8 bytes/table — NOT the float vector:
     # at 100 TB the exploded-vector variant shuffles the embedding column
-    # n_tables times; this shape shuffles it zero times (candidates join
+    # N_TABLES times; this shape shuffles it zero times (candidates join
     # back to the corpus by id, AQE turns it into a broadcast when the
     # candidate set is small).
     corpus_b = df.select(
-        F.col(id_col).alias("cand_id"),
-        F.explode(bucket(F.col(vec_col))).alias("bucket"),
+        F.col("vec_id").alias("cand_id"),
+        F.explode(bucket(F.col("embedding"))).alias("bucket"),
     )
     q_b = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        F.explode(probe(F.col(vec_col))).alias("bucket"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qvec"),
+        F.explode(probe(F.col("embedding"))).alias("bucket"),
     )
     cand = (
         corpus_b.join(F.broadcast(q_b), "bucket")
@@ -360,7 +349,8 @@ def lsh_cosine_topk(df: DataFrame, queries: DataFrame, dim: int, k: int = 3,
         .dropDuplicates(["query_id", "cand_id"])  # collide in >1 table
     )
     pairs = cand.join(
-        df.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec")),
+        df.select(F.col("vec_id").alias("cand_id"),
+                  F.col("embedding").alias("cvec")),
         "cand_id",
     )
     scored = pairs.select(
@@ -368,20 +358,11 @@ def lsh_cosine_topk(df: DataFrame, queries: DataFrame, dim: int, k: int = 3,
         "cand_id",
         _np_cosine(F.col("qvec"), F.col("cvec")).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cosine", "rank")
-    )
+    return _top_k(scored, k)
 
 
-def embedding_near_duplicates(df: DataFrame, dim: int, threshold: float = 0.95,
-                              id_col: str = "vec_id", vec_col: str = "embedding",
-                              n_planes: int = N_PLANES,
-                              n_tables: int = N_TABLES) -> DataFrame:
+def embedding_near_duplicates(df: DataFrame, dim: int,
+                              threshold: float = 0.95) -> DataFrame:
     """Embedding-cosine near-dup detection: multi-table LSH self-join
     (pairs only within buckets, deduped across tables), exact cosine
     verify at ``threshold``. The LEFT side of the self-join multi-probes
@@ -390,43 +371,41 @@ def embedding_near_duplicates(df: DataFrame, dim: int, threshold: float = 0.95,
     sign patterns differ by ≤1 bit in any table (if a and b differ in bit
     j of table t, flipping bit j of EITHER lands exactly in the other's
     base bucket, so orientation never loses a pair). One UDF pass emits
-    both roles: posexplode positions < n_tables are the base buckets."""
-    probe = lsh_probe_udf(dim, n_planes, n_tables)
+    both roles: posexplode positions < N_TABLES are the base buckets."""
+    probe = lsh_probe_udf()
     # Bucket rows carry only (id, bucket); the float vectors are joined
     # back once per SIDE of the surviving candidate pairs instead of
-    # riding through the n_tables-way explode + self-join (which would
+    # riding through the N_TABLES-way explode + self-join (which would
     # shuffle the embedding column 8x at 100 TB). The two id-equi-joins
     # shuffle the candidate set (tiny after dedup) and the corpus once
     # each; AQE broadcasts the candidate side when it is small.
     b = df.select(
-        F.col(id_col).alias("bid"),
-        F.posexplode(probe(F.col(vec_col))).alias("pos", "bucket"),
+        F.col("vec_id").alias("bid"),
+        F.posexplode(probe(F.col("embedding"))).alias("pos", "bucket"),
     )
     left = b.select("bucket", F.col("bid").alias("id_a"))
-    right = (b.filter(F.col("pos") < n_tables)
+    right = (b.filter(F.col("pos") < N_TABLES)
              .select("bucket", F.col("bid").alias("id_b")))
     cand = (
         left.join(right, "bucket")
         .filter(F.col("id_a") < F.col("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    return verify_candidate_pairs(cand, df, threshold, id_col, vec_col)
+    return verify_candidate_pairs(cand, df, threshold)
 
 
 def verify_candidate_pairs(cand: DataFrame, df: DataFrame,
-                           threshold: float, id_col: str = "vec_id",
-                           vec_col: str = "embedding") -> DataFrame:
-    """Exact-cosine verification of an (id_a, id_b) candidate frame —
-    the ONE definition shared by every candidate generator (LSH buckets,
-    SemDeDup k-means cells): vectors join back once per candidate SIDE
-    (candidates carry only ids through their generator), and score +
-    threshold fuse in a single mapInPandas stage — a plain
+                           threshold: float) -> DataFrame:
+    """Exact-cosine verification of an (id_a, id_b) candidate frame:
+    vectors join back once per candidate SIDE (candidates carry only ids
+    through their generator), and score + threshold fuse in a single
+    mapInPandas stage — a plain
     `select(udf).filter(col)` evaluates the scalar UDF twice (Spark
     extracts one ArrowEvalPython for the pushed filter and another for
     the projection), doubling the Arrow transfer of the vector pairs.
     Fusing also means only the surviving pairs ever leave Python."""
-    va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
+    va = df.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
+    vb = df.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
     pairs = cand.join(va, "id_a").join(vb, "id_b")
     out_schema = T.StructType([
         pairs.schema["id_a"],
@@ -449,20 +428,19 @@ def verify_candidate_pairs(cand: DataFrame, df: DataFrame,
     return pairs.mapInPandas(verify, out_schema)
 
 
-def _centroids(df: DataFrame, dim: int, n_centroids: int,
-               id_col: str, vec_col: str) -> np.ndarray:
+def _centroids(df: DataFrame, n_centroids: int) -> np.ndarray:
     """Deterministic coarse quantizer: the ``n_centroids`` lowest-id
     vectors ARE the centroids (no runtime randomness, SURVEY.md §4.3).
     A production deployment would train k-means|| offline and ship the
     codebook like any model artifact (broadcast, S8-style)."""
     rows = (
-        df.orderBy(F.col(id_col).asc()).limit(n_centroids)
-        .select(vec_col).collect()
+        df.orderBy(F.col("vec_id").asc()).limit(n_centroids)
+        .select("embedding").collect()
     )
     return np.vstack([np.asarray(r[0], dtype=np.float64) for r in rows])
 
 
-def _cell_assign_udf(cents: np.ndarray, n_probe: int = 1):
+def _cell_assign_udf(cents: np.ndarray, n_probe: int):
     """Vectorized IVF cell assignment: one matmul per Arrow batch ranks
     centroids by cosine; returns the top ``n_probe`` cell ids."""
     cn = cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
@@ -479,36 +457,22 @@ def _cell_assign_udf(cents: np.ndarray, n_probe: int = 1):
 
 
 def ivf_cosine_topk(df: DataFrame, queries: DataFrame, dim: int, k: int = 3,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    n_centroids: int = 16, n_probe: int = 4,
-                    kmeans_iters: int = 0) -> DataFrame:
+                    n_centroids: int = 16, n_probe: int = 4) -> DataFrame:
     """IVF ANN: corpus vectors live in their single nearest-centroid cell
     (precomputable + partitionable at 100 TB — the scan prunes to probed
     cells); each query probes its ``n_probe`` nearest cells and scores
     only those candidates. Recall < 1 by construction; the exact
-    brute-force path (cosine_topk) is the correctness baseline.
-
-    ``kmeans_iters > 0`` trains the quantizer with the deterministic
-    distributed Lloyd's pass (operators/kmeans.py) instead of the
-    lowest-id seed vectors — better-balanced cells, same recall floor
-    contract."""
-    if kmeans_iters > 0:
-        from docling_api_spark.operators.kmeans import kmeans_centroids
-
-        cents, _ = kmeans_centroids(
-            df, dim, n_centroids, kmeans_iters, id_col, vec_col
-        )
-    else:
-        cents = _centroids(df, dim, n_centroids, id_col, vec_col)
+    brute-force path (cosine_topk) is the correctness baseline."""
+    cents = _centroids(df, n_centroids)
     one = _cell_assign_udf(cents, 1)
     probe = _cell_assign_udf(cents, n_probe)
     corpus = df.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec"),
-        F.element_at(one(F.col(vec_col)), 1).alias("cell"),
+        F.col("vec_id").alias("cand_id"), F.col("embedding").alias("cvec"),
+        F.element_at(one(F.col("embedding")), 1).alias("cell"),
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
-        F.explode(probe(F.col(vec_col))).alias("cell"),
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"),
+        F.explode(probe(F.col("embedding"))).alias("cell"),
     )
     pairs = corpus.join(F.broadcast(q), "cell").filter(
         F.col("cand_id") != F.col("query_id")
@@ -517,11 +481,4 @@ def ivf_cosine_topk(df: DataFrame, queries: DataFrame, dim: int, k: int = 3,
         "query_id", "cand_id",
         _np_cosine(F.col("qvec"), F.col("cvec")).alias("cosine"),
     ).dropDuplicates(["query_id", "cand_id"])
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cosine", "rank")
-    )
+    return _top_k(scored, k)

@@ -119,18 +119,18 @@ BPE_PATTERN = (
 )
 
 
-def with_bpe_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_bpe_tokens(df: DataFrame) -> DataFrame:
     """BPE-ish token counting: split with the GPT-2-style regex entirely
     JVM-side (`regexp_extract_all`), alongside the whitespace count. At
     100 TB this is the cheap 'how many tokens am I about to train on'
     estimator — one codegen'd projection, no Python."""
-    toks = F.regexp_extract_all(text_col, F.lit(BPE_PATTERN), 0)
+    toks = F.regexp_extract_all("text", F.lit(BPE_PATTERN), 0)
     return df.withColumn("n_bpe_tokens", F.size(toks)).withColumn(
-        "n_ws_tokens", F.size(_tokens(F.col(text_col)))
+        "n_ws_tokens", F.size(_tokens(F.col("text")))
     )
 
 
-def with_repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_repetition_stats(df: DataFrame) -> DataFrame:
     """Gopher-style repetition features: the fraction of duplicate word
     2-grams / 3-grams inside each document (high values flag boilerplate
     and degenerate generations — a standard pre-training quality filter).
@@ -154,35 +154,34 @@ def with_repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
         return _ratio_e4(total - F.size(F.array_distinct(g)), total, 6)
 
     return (
-        df.withColumn("_rep_toks", _tokens(F.col(text_col)))
+        df.withColumn("_rep_toks", _tokens(F.col("text")))
         .withColumn("dup_2gram_frac", dup_frac(2))
         .withColumn("dup_3gram_frac", dup_frac(3))
         .drop("_rep_toks")
     )
 
 
-def with_pii_mask(df: DataFrame, name_col: str = "c_name",
-                  numeric_col: str = "c_acctbal") -> DataFrame:
+def with_pii_mask(df: DataFrame) -> DataFrame:
     """PII scrubbing primitives for corpus preparation: digit masking
     (all but the last 4), sha-256 pseudonymization (reference key-hash
     pattern, db_models.py:31-33), and numeric generalization to coarse
     buckets (k-anonymity style). All codegen'd string/number expressions."""
-    n = F.length(name_col)
+    n = F.length("c_name")
     # names of <= 4 chars mask fully — the keep-last-4 form would return
     # garbage (negative substr lengths differ per engine)
     masked = F.when(
         n > 4,
         F.concat(
-            F.regexp_replace(F.col(name_col).substr(F.lit(1), n - 4),
+            F.regexp_replace(F.col("c_name").substr(F.lit(1), n - 4),
                              "[0-9]", "*"),
-            F.col(name_col).substr(n - 3, F.lit(4)),
+            F.col("c_name").substr(n - 3, F.lit(4)),
         ),
-    ).otherwise(F.regexp_replace(F.col(name_col), "[0-9]", "*"))
+    ).otherwise(F.regexp_replace(F.col("c_name"), "[0-9]", "*"))
     return df.select(
         *df.columns,
-        F.sha2(F.col(name_col), 256).alias("name_hash"),
+        F.sha2(F.col("c_name"), 256).alias("name_hash"),
         masked.alias("masked_name"),
-        (F.floor(F.col(numeric_col) / 1000) * 1000).cast("double")
+        (F.floor(F.col("c_acctbal") / 1000) * 1000).cast("double")
         .alias("balance_bucket"),
     )
 

@@ -256,7 +256,7 @@ def annotate_corpus(
     # the already-checkpointed base, one extra groupBy on the domain key
     if domain_col is not None:
         from docling_api_spark.operators.domains import (
-            domain_policy, domain_stats)
+            apply_domain_policy, domain_policy, domain_stats)
 
         pol = domain_policy(
             domain_stats(
@@ -267,17 +267,12 @@ def annotate_corpus(
             blocklist=domain_blocklist, min_docs=domain_min_docs,
             max_dup_rate=domain_max_dup_rate,
             min_mean_quality=domain_min_quality,
-        ).select(F.col("domain").alias("_dom_domain"),
-                 F.col("keep").alias("_dom_keep"))
-        # eqNullSafe: a drop verdict against the NULL-domain group must
-        # gate NULL-source docs too, not bypass them
-        base = base.join(
-            F.broadcast(pol),
-            F.col(domain_col).eqNullSafe(F.col("_dom_domain")), "left",
-        ).withColumn(
-            "domain_drop",
-            F.col("ok_quality") & ~F.coalesce("_dom_keep", F.lit(True)),
-        ).drop("_dom_keep", "_dom_domain")
+        )
+        # apply_domain_policy joins eqNullSafe: a drop verdict against
+        # the NULL-domain group gates NULL-source docs too
+        base = apply_domain_policy(base, pol, domain_col).withColumn(
+            "domain_drop", F.col("ok_quality") & ~F.col("keep"),
+        ).drop("keep", "drop_reason")
     else:
         base = base.withColumn("domain_drop", F.lit(False))
 

@@ -81,11 +81,10 @@ def update_index(
     next index version. Returns a JSON-able summary; per-pair matches
     are written to ``matches_out`` when given."""
     from docling_api_spark.operators.dedup import (
+        extend_signature_index,
         incremental_near_duplicates,
         signature_index,
     )
-
-    from docling_api_spark.operators.dedup import extend_signature_index
 
     os.makedirs(index_dir, exist_ok=True)
     # one signature pass over the batch feeds BOTH the match report and
@@ -110,8 +109,6 @@ def update_index(
             # the first batch has nothing to match against, but a
             # consumer of matches_out must still find a (schema-stable,
             # empty) report — not a missing path
-            import pyspark.sql.types as T
-
             empty = spark.createDataFrame(
                 [],
                 T.StructType([

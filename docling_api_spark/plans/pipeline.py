@@ -59,31 +59,27 @@ def _salted_bucket_write(df: DataFrame, num_partitions: int,
     )
 
 
-def heavy_conversations(df: DataFrame, threshold: int = SALT_BLOCK) -> DataFrame:
+def heavy_conversations(df: DataFrame) -> DataFrame:
     """Pass 1 of two-pass skew handling: find conversations whose turn
-    count exceeds ``threshold``. The count is a map-side-combined groupBy
+    count exceeds ``SALT_BLOCK``. The count is a map-side-combined groupBy
     on conv_id — tiny output (only the heavy tail survives the filter),
     suitable for broadcasting into pass 2. (SURVEY.md §4.2; the Scarlett-
     style 'detect heavy keys, then treat them specially' pattern.)"""
     return (
         df.groupBy("conv_id")
         .agg(F.count(F.lit(1)).alias("n_turns"))
-        .filter(F.col("n_turns") > threshold)
+        .filter(F.col("n_turns") > SALT_BLOCK)
     )
 
 
 def skew_aware_repartition(df: DataFrame, num_partitions: int,
-                           heavy: DataFrame | None = None,
-                           sort: bool = False) -> DataFrame:
+                           heavy: DataFrame) -> DataFrame:
     """Two-pass skew-aware shuffle: normal conversations hash whole on
     conv_id (co-located — cheapest for downstream per-conv consumers);
     conversations in the broadcast ``heavy`` set additionally salt on
     ``turn_idx // SALT_BLOCK`` so a 10^6-turn conversation spreads over
-    ~250 partitions instead of one. ``heavy`` defaults to computing
-    pass 1 on ``df`` itself (requires a second scan — callers that
-    already have counts should pass them in)."""
-    if heavy is None:
-        heavy = heavy_conversations(df)
+    ~250 partitions instead of one. ``heavy`` is pass 1's output
+    (heavy_conversations)."""
     flagged = df.join(
         F.broadcast(heavy.select("conv_id", F.lit(True).alias("_heavy"))),
         "conv_id", "left",
@@ -95,11 +91,10 @@ def skew_aware_repartition(df: DataFrame, num_partitions: int,
             (F.col("turn_idx") / F.lit(SALT_BLOCK)).cast("int"),
         ).otherwise(F.lit(0)),
     )
-    out = (
+    return (
         salted.repartition(num_partitions, "conv_id", "_salt")
         .drop("_salt", "_heavy")
     )
-    return out.sortWithinPartitions("conv_id", "turn_idx") if sort else out
 
 
 def run_extraction(

@@ -2,12 +2,12 @@
 filtering with batch-trained models.
 
 The production shape for a living corpus: models are trained OFFLINE on
-seed/reference sets (operators/classifier.py, operators/lm.py — both
-return broadcast-sized tables), then every micro-batch of newly landed
-documents is scored and gated as it arrives. The stateless stages (C4
-heuristics, NB scoring, LM perplexity) need no streaming state at all —
-they run inside foreachBatch exactly as in batch mode, so the batch and
-streaming paths share ONE implementation and cannot drift.
+seed/reference sets (operators/classifier.py returns a broadcast-sized
+weight table), then every micro-batch of newly landed documents is
+scored and gated as it arrives. The stateless stages (C4 heuristics, NB
+scoring) need no streaming state at all — they run inside foreachBatch
+exactly as in batch mode, so the batch and streaming paths share ONE
+implementation and cannot drift.
 
 Exactly-once without a transactional sink: the checkpoint replays a
 failed micro-batch with the same batch_id, and both side effects are
@@ -36,17 +36,15 @@ GATE_SCHEMA = T.StructType([
 
 
 def gate_batch(batch: DataFrame, weights: DataFrame, meta: dict,
-               lm_model: tuple | None = None,
-               max_perplexity: float | None = None,
                c4: bool = False,
                id_col: str = "doc_id",
                text_col: str = "text") -> tuple[DataFrame, list]:
     """One batch through the gate chain — the SAME code batch and
     streaming callers run. Returns (annotated, gate_cols): every input
     row with per-gate verdict columns plus ``gate_keep`` (their
-    conjunction); gate order validity -> C4 -> classifier -> LM, later
-    gates evaluated on all rows (the funnel counts are per-gate
-    marginals, the conjunction is the decision).
+    conjunction); gate order validity -> C4 -> classifier, later gates
+    evaluated on all rows (the funnel counts are per-gate marginals, the
+    conjunction is the decision).
 
     ``id_col`` must be unique per batch among non-NULL ids — duplicate
     ids would have their texts scored as ONE merged document by the
@@ -55,10 +53,6 @@ def gate_batch(batch: DataFrame, weights: DataFrame, meta: dict,
     fail ``gate_valid`` and ride the score joins as left-join misses
     (an inner join would silently DROP them from the annotated output
     and the funnel counts)."""
-    if lm_model is not None and max_perplexity is None:
-        raise ValueError(
-            "gate_batch: lm_model given without max_perplexity — the LM "
-            "gate needs its threshold")
     # validity first: the batch pipeline blocks NULL payloads via
     # ok_extract; without this a NULL-text row would ride the
     # classifier's prior-only score straight into the kept corpus.
@@ -89,18 +83,6 @@ def gate_batch(batch: DataFrame, weights: DataFrame, meta: dict,
     )
     out = out.join(scored, id_col, "left")
     gates.append("gate_classifier")
-    if lm_model is not None:
-        from docling_api_spark.operators.lm import score_lm
-
-        bigrams, contexts, lmmeta = lm_model
-        ppl = score_lm(addressable.select(id_col, text_col), bigrams,
-                       contexts, lmmeta, id_col, text_col).select(
-            id_col, "perplexity",
-            (F.col("perplexity") <= F.lit(float(max_perplexity)))
-            .alias("gate_lm"),
-        )
-        out = out.join(ppl, id_col, "left")
-        gates.append("gate_lm")
     keep = F.lit(True)
     for g in gates:
         keep = keep & F.coalesce(F.col(g), F.lit(False))
@@ -114,12 +96,9 @@ def curation_gate_stream(
     checkpoint_dir: str,
     weights: DataFrame,
     meta: dict,
-    lm_model: tuple | None = None,
-    max_perplexity: float | None = None,
     c4: bool = False,
     id_col: str = "doc_id",
     text_col: str = "text",
-    schema: T.StructType | None = None,
     max_files_per_trigger: int = 8,
 ):
     """Start the streaming gate over newly landed parquet files. Kept
@@ -128,7 +107,7 @@ def curation_gate_stream(
     Callers use Trigger.AvailableNow + awaitTermination to drain what is
     on disk; reruns only see files the checkpoint has not."""
     stream = (
-        spark.readStream.schema(schema or GATE_SCHEMA)
+        spark.readStream.schema(GATE_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_dir)
     )
@@ -137,8 +116,7 @@ def curation_gate_stream(
         if batch_df.isEmpty():
             return
         annotated, gates = gate_batch(
-            batch_df, weights, meta, lm_model, max_perplexity, c4,
-            id_col, text_col,
+            batch_df, weights, meta, c4, id_col, text_col,
         )
         annotated = annotated.localCheckpoint(eager=True)
         # gate_batch scores at id grain: duplicate ids within a batch

@@ -200,16 +200,6 @@ def _build_domain_policy(spark, sf_dir):
     return apply_domain_policy(d, pol)
 
 
-def _build_lm_score(spark, sf_dir):
-    from docling_api_spark.operators.lm import score_lm, train_lm
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    model = train_lm(d.filter("doc_id % 2 = 0"), n_buckets=1 << 12)
-    return score_lm(d, *model)
-
-
 def _build_nb_score(spark, sf_dir):
     from pyspark.sql import functions as F
 
@@ -249,15 +239,6 @@ EXTRA_CHECKS = {
                 "explode -> broadcast left join -> partial agg -> ONE "
                 "exchange on doc_id; the seed-corpus training subtree is "
                 "small by construction",
-    },
-    "lm_perplexity_score": {
-        "build": _build_lm_score,
-        "must": ["BroadcastHashJoin", "Generate", "HashAggregate"],
-        "must_not": ["SortMergeJoin", "CartesianProduct"],
-        "note": "both LM tables (bigram lp + context miss lp, bounded by "
-                "the reference corpus / hashed vocab) BROADCAST into the "
-                "corpus bigram stream — the KenLM ship-the-model posture; "
-                "ONE exchange on doc_id for the per-document sums",
     },
     "domain_policy_apply": {
         "build": _build_domain_policy,

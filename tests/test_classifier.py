@@ -17,18 +17,15 @@ DOCS = "/root/testdata/sf0.001/documents.parquet"
 V, SCALE, ALPHA = 1 << 12, 1 << 20, 1
 
 
-def py_features(text: str, n_buckets: int = V, bigrams: bool = True):
+def py_features(text: str, n_buckets: int = V):
     """Replica of hashed_features: unigram pmod(xxhash64(tok), V); bigram
     pmod(xxhash64(h_i, h_{i+1}), V) over adjacent token hashes."""
     toks = java_ws_split(text.lower())
     th = [spark_xxhash64(t) for t in toks]
-    feats = [h % n_buckets for h in th]
-    if bigrams:
-        feats += [
-            spark_xxhash64_longs([th[i], th[i + 1]]) % n_buckets
-            for i in range(len(th) - 1)
-        ]
-    return feats
+    return [h % n_buckets for h in th] + [
+        spark_xxhash64_longs([th[i], th[i + 1]]) % n_buckets
+        for i in range(len(th) - 1)
+    ]
 
 
 def py_train(rows, positive, n_buckets=V, alpha=ALPHA, scale=SCALE):
@@ -92,7 +89,7 @@ def _model(labeled):
     from docling_api_spark.operators.classifier import nb_train
 
     train_df, _, _, _ = labeled
-    return nb_train(train_df, positive="good", n_buckets=V, scale=SCALE)
+    return nb_train(train_df, positive="good", n_buckets=V)
 
 
 def test_counts_and_weights_match_replica(spark, labeled):
@@ -110,8 +107,7 @@ def test_counts_and_weights_match_replica(spark, labeled):
     )
     assert got == want
 
-    weights, meta = nb_train(train_df, positive="good", n_buckets=V,
-                             scale=SCALE)
+    weights, meta = nb_train(train_df, positive="good", n_buckets=V)
     (c_pos, c_neg), py_w, py_prior, py_default = py_train(
         [(lbl, t) for _, t, lbl in train_rows], "good")
     assert meta["t_pos"] == sum(c_pos.values())

@@ -275,9 +275,11 @@ def test_gate_that_drops_everything_is_total(spark):
 
 
 def test_domain_stage_wiring(spark):
-    """Opt-in domain stage: blocklisted and dup-heavy domains drop
-    wholesale BEFORE dedup, flags stay disjoint, funnel arithmetic
-    extends by n_domain_dropped, and off-mode is unchanged."""
+    """Opt-in domain stage: blocklisted, dup-heavy and too-small domains
+    drop wholesale BEFORE dedup — the too-small one is the NULL domain,
+    whose drop verdict must gate NULL-source docs too — flags stay
+    disjoint, funnel arithmetic extends by n_domain_dropped, and
+    off-mode is unchanged."""
     from docling_api_spark.plans.corpus_pipeline import (
         build_training_examples,
     )
@@ -295,6 +297,8 @@ def test_domain_stage_wiring(spark):
                  " ".join(f"pasta{j}" for j in range(40)), "copy.pasta")
                 for i in range(5)
             ],
+            # NULL domain with one doc: dropped by min_docs=2
+            (20020, " ".join(f"nullword{i}" for i in range(50)), None),
         ],
         "doc_id long, text string, source string",
     )
@@ -306,18 +310,19 @@ def test_domain_stage_wiring(spark):
     annotated, _, funnel = build_training_examples(
         spark, docs, eval_docs, ctx_len=64, quality_floor=0.0,
         domain_col="source", domain_blocklist=bl,
-        domain_max_dup_rate=0.75,
+        domain_max_dup_rate=0.75, domain_min_docs=2,
     )
     flags = {
         r["doc_id"]: r
         for r in annotated.filter(F.col("doc_id") >= 20000).collect()
     }
     assert all(f["domain_drop"] for f in flags.values())
+    assert flags[20020]["domain_drop"]  # the NULL-domain verdict holds
     # disjoint: a domain-dropped doc never carries a later-stage flag
     for f in flags.values():
         assert not f["is_exact_dup"] and not f["is_near_dup"]
         assert not f["contaminated"] and not f["final_keep"]
-    assert funnel["n_domain_dropped"] == 7
+    assert funnel["n_domain_dropped"] == 8
     assert funnel["n_kept"] == (
         funnel["n_quality"]
         - funnel["n_domain_dropped"]

@@ -12,7 +12,7 @@ import math
 
 from tests.oracles import SPARK_SEED, _signed, _xxh64_long, xxh64_bytes
 
-V, SCALE = 1 << 12, 1 << 20
+SCALE = 1 << 20
 _U_BITS = 40
 _U_DEN = float((1 << _U_BITS) + 1)
 
@@ -62,13 +62,11 @@ def test_selection_matches_replica(spark):
         dsir_importance, dsir_select)
 
     corpus, target, raw, _ = _frames(spark)
-    scored, _ = dsir_importance(corpus, target, raw, n_buckets=V,
-                                scale=SCALE)
+    scored, _ = dsir_importance(corpus, target, raw)
     scores = {int(r["doc_id"]): int(r["score_scaled"])
               for r in scored.collect()}
     got = [(int(r["doc_id"]), float(r["dsir_key"]))
-           for r in dsir_select(corpus, target, raw, k=10,
-                                n_buckets=V, scale=SCALE).collect()]
+           for r in dsir_select(corpus, target, raw, k=10).collect()]
     want_keys = {i: py_gumbel_key(i, s) for i, s in scores.items()}
     want = sorted(want_keys.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
     # same ids in the same order; keys to relative tolerance (the two
@@ -83,15 +81,14 @@ def test_selection_shifts_toward_target(spark):
 
     corpus, target, raw, rows = _frames(spark)
     sel = {int(r["doc_id"]) for r in
-           dsir_select(corpus, target, raw, k=20,
-                       n_buckets=V, scale=SCALE).collect()}
+           dsir_select(corpus, target, raw, k=20).collect()}
     n_targety = sum(1 for i in sel if i % 2 == 0)
     # corpus is 50/50; the selection must be strongly target-shifted
     assert n_targety >= 16, n_targety
     # low temperature sharpens further (greedy top-k by score)
     sharp = {int(r["doc_id"]) for r in
-             dsir_select(corpus, target, raw, k=20, temperature=1e-6,
-                         n_buckets=V, scale=SCALE).collect()}
+             dsir_select(corpus, target, raw, k=20,
+                         temperature=1e-6).collect()}
     assert sum(1 for i in sharp if i % 2 == 0) >= n_targety
 
 
@@ -102,8 +99,7 @@ def test_salt_and_invariance(spark):
 
     def run(c, salt="dsir"):
         return [int(r["doc_id"]) for r in
-                dsir_select(c, target, raw, k=12, salt=salt,
-                            n_buckets=V, scale=SCALE).collect()]
+                dsir_select(c, target, raw, k=12, salt=salt).collect()]
 
     a = run(corpus)
     assert a == run(corpus.repartition(7))

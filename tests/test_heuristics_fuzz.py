@@ -65,30 +65,15 @@ def test_features_match_replica_on_adversarial_batch(spark):
         assert sorted(got_f.get(i, [])) == want, (i, repr(t))
 
 
-def test_lm_pairs_and_domain_tokens_match_replica_on_adversarial_batch(
-        spark):
+def test_domain_tokens_match_replica_on_adversarial_batch(spark):
     from docling_api_spark.operators.domains import domain_stats
-    from docling_api_spark.operators.lm import _pair_stream
-    from tests.oracles import java_ws_split, spark_xxhash64
+    from tests.oracles import java_ws_split
 
-    V = 1 << 12
     rows = _gen_texts(n=150, seed=23)
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
-    got_p = {}
-    for r in _pair_stream(df, "doc_id", "text", V).collect():
-        got_p.setdefault(int(r["doc_id"]), []).append(
-            (r["prev"], r["cur"]))
-    for i, t in rows:
-        if t is None:
-            assert got_p[i] == [(None, None)], i
-            continue
-        tb = [spark_xxhash64(w) % V for w in java_ws_split(t.lower())]
-        want = list(zip([V] + tb[:-1], tb))
-        assert got_p[i] == want, (i, repr(t))
-
-    # domain token totals over the same adversarial corpus, one domain
-    # per parity bucket
+    # domain token totals over the adversarial corpus, one domain per
+    # parity bucket
     dom = df.withColumn(
         "source", (df.doc_id % 3).cast("string"))
     got_d = {r["domain"]: r["total_tokens"]

@@ -29,20 +29,20 @@ def test_mixture_matches_python_oracle_exactly(spark):
 
     counts, d = _counts(spark)
     budget = 120_000
-    rates = mixture_rates(counts, budget, alpha=0.5)
+    have = {r["source"]: r["n_tokens"] for r in counts.collect()}
+    weights = {s: 1 + i % 4 for i, s in enumerate(sorted(have))}
+    rates = mixture_rates(counts, budget, weights=weights)
     plan = {r["source"]: (r["n_copies"], r["frac_bp"]) for r in rates.collect()}
     got = {
         (r["doc_id"], r["epoch"])
-        for r in build_mixture(d, rates, salt="t1").select("doc_id", "epoch").collect()
+        for r in build_mixture(d, rates).select("doc_id", "epoch").collect()
     }
-    # first-principles oracle: recompute factors from the raw counts
-    import math
-
-    have = {r["source"]: r["n_tokens"] for r in counts.collect()}
-    total = sum(math.sqrt(n) for n in have.values())
+    # first-principles oracle: recompute factors from the weights and
+    # the raw counts
+    total = sum(weights.values())
     expect = set()
     for row in d.select("doc_id", "source").collect():
-        share = math.sqrt(have[row["source"]]) / total
+        share = weights[row["source"]] / total
         factor = budget * share / have[row["source"]]
         n_copies = int(factor)
         frac_bp = round((factor - n_copies) * 10000)
@@ -51,7 +51,7 @@ def test_mixture_matches_python_oracle_exactly(spark):
         assert plan[row["source"]] == (n_copies, frac_bp)
         for e in range(n_copies):
             expect.add((row["doc_id"], e))
-        if _bucket_py(row["doc_id"], "t1") < frac_bp:
+        if _bucket_py(row["doc_id"], "mix") < frac_bp:
             expect.add((row["doc_id"], n_copies))
     assert got == expect
 
@@ -95,14 +95,10 @@ def test_mixture_rates_fails_loudly(spark):
     from docling_api_spark.operators.mixing import mixture_rates
 
     counts, _ = _counts(spark)
-    with pytest.raises(ValueError, match="exactly one"):
-        mixture_rates(counts, 1000, weights={"x": 1.0}, alpha=0.5)
+    src = counts.select("source").collect()[0]["source"]
     with pytest.raises(ValueError, match="positive"):
-        mixture_rates(counts, 0, alpha=1.0)
+        mixture_rates(counts, 0, weights={src: 1.0})
     with pytest.raises(ValueError, match="unknown sources"):
         mixture_rates(counts, 1000, weights={"no_such_source": 1.0})
-    with pytest.raises(ValueError, match="alpha"):
-        mixture_rates(counts, 1000, alpha=1.5)
-    src = counts.select("source").collect()[0]["source"]
     with pytest.raises(ValueError, match="full epochs"):
         mixture_rates(counts, 10**15, weights={src: 1.0})

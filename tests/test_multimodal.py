@@ -24,5 +24,6 @@ def test_video_frame_sampling(spark):
     assert [f["mean_byte"] for f in fr] == [0.0, 2.0]
     assert all(f["n_bytes"] == 16 for f in fr)
     assert got[2]["frames"] is None  # truncated container -> NULL
-    with pytest.raises(ValueError, match="binary column 'clip'"):
-        sample_video_frames(df, bin_col="clip")
+    clip = _bin_df(spark, [(1, vid)], "clip")
+    with pytest.raises(ValueError, match="binary column 'video'"):
+        sample_video_frames(clip)

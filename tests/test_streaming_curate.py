@@ -15,7 +15,6 @@ DOCS = "/root/testdata/sf0.001/documents.parquet"
 
 def _models(spark):
     from docling_api_spark.operators.classifier import nb_train
-    from docling_api_spark.operators.lm import train_lm
 
     docs = spark.read.parquet(DOCS).select("doc_id", "text")
     seed = docs.select(
@@ -24,15 +23,14 @@ def _models(spark):
         .alias("label"),
     ).limit(300)
     weights, meta = nb_train(seed, positive="good", n_buckets=1 << 12)
-    lm = train_lm(docs.filter("doc_id % 2 = 0"), n_buckets=1 << 12)
-    return weights, meta, lm
+    return weights, meta
 
 
 def test_stream_matches_batch_and_is_idempotent(spark, tmp_path):
     from docling_api_spark.streaming.curate import (
         curation_gate_stream, gate_batch)
 
-    weights, meta, lm = _models(spark)
+    weights, meta = _models(spark)
     docs = spark.read.parquet(DOCS).select("doc_id", "text")
     # land the corpus as several files so multiple triggers fire
     in_dir = str(tmp_path / "in")
@@ -41,15 +39,14 @@ def test_stream_matches_batch_and_is_idempotent(spark, tmp_path):
     ck = str(tmp_path / "ck")
 
     q = curation_gate_stream(
-        spark, in_dir, out_dir, ck, weights, meta,
-        lm_model=lm, max_perplexity=500.0, c4=False,
+        spark, in_dir, out_dir, ck, weights, meta, c4=False,
     )
     q.awaitTermination()
 
     kept = spark.read.parquet(os.path.join(out_dir, "kept"))
     got = {int(r["doc_id"]) for r in kept.collect()}
     # batch equivalence: same gate code over the whole corpus at once
-    ann, _ = gate_batch(docs, weights, meta, lm, 500.0, False)
+    ann, _ = gate_batch(docs, weights, meta, False)
     want = {int(r["doc_id"])
             for r in ann.filter("gate_keep").collect()}
     assert got == want and got  # non-trivial gate
@@ -63,15 +60,13 @@ def test_stream_matches_batch_and_is_idempotent(spark, tmp_path):
     ]
     assert sum(e["n_in"] for e in logs) == docs.count()
     assert sum(e["n_kept"] for e in logs) == len(got)
-    assert all("n_fail_classifier" in e and "n_fail_lm" in e
-               for e in logs)
+    assert all("n_fail_classifier" in e for e in logs)
 
     # rerun: checkpoint has seen every file -> no new batches, no
     # double-writes
     before = sorted(os.listdir(os.path.join(out_dir, "gate_log")))
     q2 = curation_gate_stream(
-        spark, in_dir, out_dir, ck, weights, meta,
-        lm_model=lm, max_perplexity=500.0, c4=False,
+        spark, in_dir, out_dir, ck, weights, meta, c4=False,
     )
     q2.awaitTermination()
     assert sorted(os.listdir(os.path.join(out_dir, "gate_log"))) == before
@@ -83,7 +78,7 @@ def test_stream_matches_batch_and_is_idempotent(spark, tmp_path):
 def test_c4_gate_column_present(spark, tmp_path):
     from docling_api_spark.streaming.curate import gate_batch
 
-    weights, meta, _ = _models(spark)
+    weights, meta = _models(spark)
     docs = spark.createDataFrame(
         [(1, "A long properly terminated sentence sits right here.\n\n"
              "Another one follows with enough words to pass the gate!\n\n"
@@ -98,12 +93,10 @@ def test_c4_gate_column_present(spark, tmp_path):
     assert not rows[2]["gate_keep"]
 
 
-def test_null_text_never_kept_and_lm_needs_threshold(spark):
-    import pytest
-
+def test_null_text_never_kept(spark):
     from docling_api_spark.streaming.curate import gate_batch
 
-    weights, meta, lm = _models(spark)
+    weights, meta = _models(spark)
     # a seed split with more positives than negatives -> positive prior,
     # the exact configuration where an ungated NULL row would slip in
     assert meta["n_pos"] > meta["n_neg"]
@@ -117,9 +110,6 @@ def test_null_text_never_kept_and_lm_needs_threshold(spark):
     assert not rows[1]["gate_valid"] and not rows[1]["gate_keep"]
     assert rows[2]["gate_valid"]
 
-    with pytest.raises(ValueError, match="max_perplexity"):
-        gate_batch(docs, weights, meta, lm_model=lm)
-
 
 def test_null_id_rows_survive_annotation_and_never_kept(spark):
     """ADVICE r03: NULL doc_id rows used to be silently DROPPED by the
@@ -127,13 +117,13 @@ def test_null_id_rows_survive_annotation_and_never_kept(spark):
     denominators count them) with gate_valid/gate_keep False."""
     from docling_api_spark.streaming.curate import gate_batch
 
-    weights, meta, lm = _models(spark)
+    weights, meta = _models(spark)
     docs = spark.createDataFrame(
         [(None, "a perfectly ordinary document body right here"),
          (7, "another perfectly ordinary document body here too")],
         "doc_id long, text string",
     )
-    ann, _ = gate_batch(docs, weights, meta, lm, 1e9, c4=True)
+    ann, _ = gate_batch(docs, weights, meta, c4=True)
     rows = ann.collect()
     assert len(rows) == 2  # the NULL-id row did not vanish
     by_id = {r["doc_id"]: r for r in rows}
@@ -149,7 +139,7 @@ def test_stream_duplicate_ids_fail_loudly(spark, tmp_path):
 
     from docling_api_spark.streaming.curate import curation_gate_stream
 
-    weights, meta, _ = _models(spark)
+    weights, meta = _models(spark)
     docs = spark.createDataFrame(
         [(1, "first body of the duplicated id"),
          (1, "second body sharing that same id"),
