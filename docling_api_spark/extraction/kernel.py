@@ -147,11 +147,16 @@ def doc_json_str(payload_kind: str, pages: int, n_nodes: int, items: list) -> st
 #      no tag (doctype/PI/bogus-comment — contribute nothing).
 # A '<' before anything else (spec: a character token) is group 4 and is
 # emitted as LITERAL TEXT — 'price<10' must not glue to 'price10'.
+# A tag's body after its name, through its '>': (a)'s quote-aware form and
+# the first-'>' rule of (b)/(c). The rawtext mask ends an open tag with the
+# same two strings, so mask and scanner agree on where a rawtext body starts.
+_TAG_BODY = r"[^>\"']*(?:(?:\"[^\"<]*\"|'[^'<]*')[^>\"']*)*>"
+_TAG_BODY_LOOSE = r"[^>]*>"
 _SCANNER = re.compile(
     r"(<!--.*?-->)"
-    r"|(</?[a-zA-Z][^>\"']*(?:(?:\"[^\"<]*\"|'[^'<]*')[^>\"']*)*>"
-    r"|</?[a-zA-Z][^>]*>"
-    r"|<[!?/][^>]*>)"
+    r"|(</?[a-zA-Z]" + _TAG_BODY
+    + r"|</?[a-zA-Z]" + _TAG_BODY_LOOSE
+    + r"|<[!?/]" + _TAG_BODY_LOOSE + r")"
     r"|([^<]+)"
     r"|(<)",
     re.DOTALL,
@@ -182,19 +187,11 @@ _RAWTEXT_TAGS = frozenset(["script", "style"])
 # specials for the rawtext pre-mask scan: a comment open (whose interior
 # must NOT trigger rawtext masking — '<!-- <script> -->' is commented
 # out) or a script/style open tag. The open-tag END is resolved
-# separately: quote-aware first ('>' inside a quoted attribute value does
-# not end the tag — the alternatives are disjoint on their first char, so
-# the scan is linear with no backtracking), falling back to the shared
-# tokenizer's first-'>' rule when a quote is unterminated so mask and
-# scanner always agree on where the rawtext body starts.
+# separately with the scanner's own tag bodies: quote-aware first,
+# falling back to the first-'>' rule when a quote is unterminated.
 _MASK_SPECIAL = re.compile(r"(?is)<!--|<(script|style)\b")
-# IDENTICAL quote structure to the scanner's tag alternative (incl. the
-# '<'-excluding quote interiors) so mask and scanner always resolve the
-# same end for a rawtext open tag
-_OPEN_TAG_END = re.compile(
-    r"[^>\"']*(?:(?:\"[^\"<]*\"|'[^'<]*')[^>\"']*)*>"
-)
-_OPEN_TAG_END_LOOSE = re.compile(r"[^>]*>")
+_OPEN_TAG_END = re.compile(_TAG_BODY)
+_OPEN_TAG_END_LOOSE = re.compile(_TAG_BODY_LOOSE)
 # close tags may carry (ignored) attributes per the spec's end-tag-open
 # handling: '</script foo>' still closes — \b keeps name matching aligned
 # with the scanner's _TAG_NAME extraction ('</scriptx>' does not close)

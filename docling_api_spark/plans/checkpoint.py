@@ -12,6 +12,10 @@ so snapshots are emulated deterministically:
   are invisible to ``committed_view`` — the same way Iceberg orphans
   uncommitted data files. The resume then reprocesses those buckets
   under a new run_id, with no double counting.
+- This module owns that layout (``Manifest.run_dir``/``run_dirs``, and
+  ``write_run`` for ``run_extraction`` and ``compact``). A run goes write
+  -> read-back of its own dir -> commit -> lineage append, so lineage
+  lands only for runs whose commit did.
 - Idempotent re-commit: committing an already-committed bucket is a
   no-op (J3 anti-join semantics; reference stripe_service.py:214-231).
 
@@ -78,10 +82,7 @@ class Manifest:
 
             known = [r["run_id"] for r in state["runs"]]
             known += list(state["retired"])
-            data = self.dir / "data"
-            if data.exists():
-                known += [d.name.split("=", 1)[1]
-                          for d in data.glob("run_id=*")]
+            known += list(self.run_dirs())
             state["run_counter"] = 1 + max(
                 (_suffix(r) for r in known), default=-1
             )
@@ -102,6 +103,19 @@ class Manifest:
         tmp = self.path.with_suffix(".json.tmp")
         tmp.write_text(json.dumps(state, indent=1, sort_keys=True))
         os.replace(tmp, self.path)  # atomic commit
+
+    def run_dir(self, run_id: str) -> pathlib.Path:
+        return self.dir / "data" / f"run_id={run_id}"
+
+    def run_dirs(self) -> dict[str, pathlib.Path]:
+        """Every run data dir on disk, keyed by run id, in name order."""
+        return {d.name.split("=", 1)[1]: d
+                for d in sorted((self.dir / "data").glob("run_id=*"))}
+
+    def _require_data(self, run_id: str) -> None:
+        if not self.run_dir(run_id).exists():
+            raise RuntimeError(f"commit refused: data dir for {run_id} is "
+                               "missing (reclaimed by vacuum?) — re-run the job")
 
     def committed_buckets(self) -> set[int]:
         return set(self._read()["buckets"])
@@ -140,11 +154,8 @@ class Manifest:
         skips re-hashed rows on resume."""
         with self._locked():
             state = self._read()
-            if expect_data and not (self.dir / "data" / f"run_id={run_id}").exists():
-                raise RuntimeError(
-                    f"commit refused: data dir for {run_id} is missing "
-                    "(reclaimed by vacuum?) — re-run the buckets"
-                )
+            if expect_data:
+                self._require_data(run_id)
             if n_buckets is not None:
                 recorded = state.get("n_buckets")
                 if recorded is not None and recorded != n_buckets:
@@ -184,11 +195,8 @@ class Manifest:
         The committed-bucket set is unchanged — resume is unaffected."""
         with self._locked():
             state = self._read()
-            if expect_data and not (self.dir / "data" / f"run_id={run_id}").exists():
-                raise RuntimeError(
-                    f"compaction commit refused: data dir for {run_id} is "
-                    "missing (reclaimed by vacuum?)"
-                )
+            if expect_data:
+                self._require_data(run_id)
             retired = {r["run_id"] for r in state["runs"]} - {run_id}
             state["retired"] = sorted(set(state["retired"]) | retired)
             state["runs"] = [
@@ -221,17 +229,24 @@ class Manifest:
         return self._read()["runs"]
 
 
-def manifest_data_reader(spark, manifest: Manifest):
-    """DataFrameReader for the manifest's data dir: uses the recorded
-    write schema when present so a file-less (zero-row) dir reads as
-    empty instead of failing schema inference. Shared by committed_view
-    and compact()."""
-    from pyspark.sql import types as T
+def write_run(spark, output_dir: str, df, run_id: str):
+    """Append ``df`` as run ``run_id``, partitioned run_id/bucket, and
+    return ``(schema, written)``: the write schema (recorded in the
+    manifest at commit) and a reader over this run's own data dir only.
+    Partition discovery never lists another run's dir, so the read-back
+    cost does not grow with the output's run history. A zero-row run
+    writes no dir and reads back as an empty frame with that schema."""
+    from pyspark.sql import functions as F
 
-    schema_json = manifest.data_schema_json()
-    if schema_json:
-        return spark.read.schema(T.StructType.fromJson(json.loads(schema_json)))
-    return spark.read  # pre-schema manifests: infer as before
+    to_write = df.withColumn("run_id", F.lit(run_id))
+    schema = to_write.schema
+    data_dir = f"{output_dir}/data"
+    to_write.write.mode("append").partitionBy("run_id", "bucket").parquet(data_dir)
+    run_dir = Manifest(output_dir).run_dir(run_id)
+    if not run_dir.exists():
+        return schema, spark.createDataFrame([], schema)
+    return schema, (spark.read.schema(schema).option("basePath", data_dir)
+                    .parquet(str(run_dir)))
 
 
 def committed_view(spark, output_dir: str):
@@ -246,20 +261,22 @@ def committed_view(spark, output_dir: str):
 
     m = Manifest(output_dir)
     runs = [r for r in m.runs() if r["buckets"]]
+    schema_json = m.data_schema_json()
+    # the recorded write schema reads a file-less (zero-row) dir as empty
+    # instead of failing inference; pre-schema manifests infer as before
+    schema = T.StructType.fromJson(json.loads(schema_json)) if schema_json else None
     if not runs:
         # zero committed runs: return an empty frame WITHOUT touching
         # the data path — on a fresh output dir the parquet reader would
         # raise PATH_NOT_FOUND before reaching any limit(0)
-        schema_json = m.data_schema_json()
-        if schema_json:
-            return spark.createDataFrame(
-                [], T.StructType.fromJson(json.loads(schema_json))
-            )
+        if schema:
+            return spark.createDataFrame([], schema)
         data = pathlib.Path(output_dir) / "data"
         if data.exists():
             return spark.read.parquet(f"{output_dir}/data").limit(0)
         return spark.createDataFrame([], T.StructType([]))
-    df = manifest_data_reader(spark, m).parquet(f"{output_dir}/data")
+    reader = spark.read.schema(schema) if schema else spark.read
+    df = reader.parquet(f"{output_dir}/data")
     cond = reduce(
         lambda a, b: a | b,
         [

@@ -29,7 +29,8 @@ from pyspark.sql import functions as F
 
 from docling_api_spark.operators.extract import extract_text_column
 from docling_api_spark.operators.metering import credits_col
-from docling_api_spark.plans.checkpoint import Manifest, committed_view
+from docling_api_spark.plans.checkpoint import Manifest, committed_view, write_run
+from docling_api_spark.schema import LINEAGE_SCHEMA
 
 DEFAULT_BUCKETS = 64
 SALT_BLOCK = 4096  # turns per salt block; >max Arrow batch, < skew threshold
@@ -156,28 +157,19 @@ def run_extraction(
     for_write = _salted_bucket_write(extracted, parts, files_per_bucket)
 
     run_id = manifest.next_run_id()
-    data_dir = f"{output_dir}/data"
-    # data is laid out run_id/bucket so that files from a killed,
-    # never-committed run are invisible to committed_view (Iceberg
-    # orphan-file semantics) and a resume can never double-count
-    to_write = for_write.withColumn("run_id", F.lit(run_id))
-    data_schema = to_write.schema  # recorded in the manifest (see commit)
-    to_write.write.mode("append").partitionBy("run_id", "bucket").parquet(data_dir)
+    data_schema, written = write_run(spark, output_dir, for_write, run_id)
 
     # lineage from the data actually written (verify-what-committed): ONE
-    # read-back pass aggregated to <=n_buckets rows, collected, and both
-    # (a) appended to the lineage table and (b) summed for the run's row
-    # count — no second full count() job over the written files. The
-    # explicit schema makes a zero-row run (empty input) readable — no
-    # UNABLE_TO_INFER_SCHEMA on a file-less partitioned dir.
-    written = spark.read.schema(data_schema).parquet(data_dir).filter(
-        (F.col("run_id") == run_id) & F.col("bucket").isin(pending)
-    )
+    # read-back pass over this run's own dir, aggregated straight into
+    # LINEAGE_SCHEMA's columns (<=n_buckets rows) and collected — its sum
+    # is the run's row count, so no second full count() job.
     lineage_rows = (
-        written.groupBy("bucket")
+        written.groupBy(F.lit(run_id).alias("run_id"),
+                        F.lit(snapshot_id).alias("snapshot_id"),
+                        F.col("bucket").alias("partition_id"))
         .agg(
-            F.count(F.lit(1)).alias("rows_out"),
             F.count(F.lit(1)).alias("rows_in"),  # extraction is 1:1
+            F.count(F.lit(1)).alias("rows_out"),
             F.sum((F.col("status") == "success").cast("long")).alias("n_success"),
             F.sum((F.col("status") == "error").cast("long")).alias("n_error"),
             F.sum((F.col("status") == "skipped_ocr").cast("long")).alias("n_skipped_ocr"),
@@ -187,24 +179,17 @@ def run_extraction(
         )
         .collect()
     )
-    from docling_api_spark.schema import LINEAGE_SCHEMA
-
-    lineage = spark.createDataFrame(
-        [
-            (run_id, snapshot_id, int(r["bucket"]), int(r["rows_in"]),
-             int(r["rows_out"]), int(r["n_success"]), int(r["n_error"]),
-             int(r["n_skipped_ocr"]), int(r["n_oversize"]), int(r["pages"]),
-             int(r["credits"]))
-            for r in lineage_rows
-        ],
-        schema=LINEAGE_SCHEMA,
-    )
-    lineage.coalesce(1).write.mode("append").parquet(f"{output_dir}/lineage")
-
-    rows = sum(int(r["rows_out"]) for r in lineage_rows)
+    rows = sum(r["rows_out"] for r in lineage_rows)
     manifest.commit(run_id, snapshot_id, pending,
                     data_schema_json=data_schema.json(),
                     expect_data=rows > 0, n_buckets=n_buckets)
+    # lineage is appended only once the commit has landed, so a run that
+    # dies before it leaves no lineage for cli status to count twice. The
+    # window left (commit landed, lineage append lost) shows as a missing
+    # status row, never a double count; it closes when lineage moves into
+    # the manifest commit.
+    (spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA).coalesce(1)
+     .write.mode("append").parquet(f"{output_dir}/lineage"))
     return {"run_id": run_id, "buckets": pending, "rows": rows, "resumed": bool(done)}
 
 
@@ -221,27 +206,13 @@ def compact(spark: SparkSession, output_dir: str,
     rerun is idempotent. Must not race an in-flight extraction run.
     """
     manifest = Manifest(output_dir)
-    committed = committed_view(spark, output_dir)
     run_id = manifest.next_run_id()
-    data_dir = f"{output_dir}/data"
     n_buckets = max(len(manifest.committed_buckets()), 1)
-    (
-        _salted_bucket_write(
-            committed.withColumn("run_id", F.lit(run_id)),
-            n_buckets * files_per_bucket, files_per_bucket,
-        )
-        .write.mode("append")
-        .partitionBy("run_id", "bucket")
-        .parquet(data_dir)
-    )
-    # read-back with the recorded schema (like run_extraction): inference
-    # fails on a file-less dir when every committed run was zero-row
-    from docling_api_spark.plans.checkpoint import manifest_data_reader
-
-    rows = (
-        manifest_data_reader(spark, manifest).parquet(data_dir)
-        .filter(F.col("run_id") == run_id).count()
-    )
+    for_write = _salted_bucket_write(committed_view(spark, output_dir),
+                                     n_buckets * files_per_bucket,
+                                     files_per_bucket)
+    _, written = write_run(spark, output_dir, for_write, run_id)
+    rows = written.count()
     manifest.replace_runs(run_id, snapshot_id=f"compact-{run_id}",
                           expect_data=rows > 0)
     return {"run_id": run_id, "rows": rows,
@@ -253,7 +224,7 @@ def vacuum(output_dir: str, grace_seconds: float = 86400.0,
     """Delete data directories of runs no longer referenced by the
     manifest — the Iceberg expire-snapshots/remove-orphan-files analog.
 
-    Policy per non-live ``run_id=*`` dir:
+    Policy per non-live run data dir:
     - RETIRED (replaced by a compaction commit): reclaim immediately —
       its rows live on in the compacted run.
     - LEASED (in-flight, id reserved but never committed): NEVER
@@ -295,9 +266,7 @@ def vacuum(output_dir: str, grace_seconds: float = 86400.0,
 
     manifest = Manifest(output_dir)
     now = time.time()
-    out_root = pathlib.Path(output_dir)
-    data = out_root / "data"
-    trash_root = out_root / ".trash"
+    trash_root = pathlib.Path(output_dir) / ".trash"
 
     # Phase 0 (lock-free): clear aged trash — leftovers of a vacuum that
     # crashed (or failed its deletes) after renaming. The age gate keeps
@@ -316,16 +285,14 @@ def vacuum(output_dir: str, grace_seconds: float = 86400.0,
     classified = ({r["run_id"] for r in snap["runs"]}
                   | set(snap["retired"]) | set(snap["inflight"]))
     idle_enough: dict[str, bool] = {}
-    if data.exists():
-        for d in sorted(data.glob("run_id=*")):
-            rid = d.name.split("=", 1)[1]
-            if rid in classified:
-                continue  # grace is never consulted for these in phase 2
-            try:
-                newest = max(p.stat().st_mtime for p in d.rglob("*") if p.is_file())
-            except ValueError:
-                newest = d.stat().st_mtime
-            idle_enough[rid] = now - newest >= grace_seconds
+    for rid, d in manifest.run_dirs().items():
+        if rid in classified:
+            continue  # grace is never consulted for these in phase 2
+        try:
+            newest = max(p.stat().st_mtime for p in d.rglob("*") if p.is_file())
+        except ValueError:
+            newest = d.stat().st_mtime
+        idle_enough[rid] = now - newest >= grace_seconds
 
     removed: list[str] = []
     my_trash: pathlib.Path | None = None
@@ -336,51 +303,48 @@ def vacuum(output_dir: str, grace_seconds: float = 86400.0,
         live = {r["run_id"] for r in state["runs"]}
         leases = state["inflight"]
         retired = set(state["retired"])
-        dirs_seen = set()
-        if data.exists():
-            for d in sorted(data.glob("run_id=*")):
-                rid = d.name.split("=", 1)[1]
-                dirs_seen.add(rid)
-                if rid in live:
-                    continue
-                if rid in retired:
-                    pass  # rows live on in the compacted run
-                elif rid in leases:
-                    if not force:
-                        continue  # possibly in flight — operator must force
-                elif not idle_enough.get(rid, False):
-                    continue  # unknown but fresh (or re-classified since
-                    # the lock-free snapshot): leave it for the next pass
-                # per-invocation subdir: collision-free vs leftovers and
-                # concurrent vacuums (ops-plane uniqueness — the data
-                # plane never reads trash)
-                if my_trash is None:
-                    my_trash = (trash_root
-                                / f"vac-{os.getpid()}-{time.monotonic_ns()}")
+        dirs_seen = manifest.run_dirs()
+        for rid, d in dirs_seen.items():
+            if rid in live:
+                continue
+            if rid in retired:
+                pass  # rows live on in the compacted run
+            elif rid in leases:
+                if not force:
+                    continue  # possibly in flight — operator must force
+            elif not idle_enough.get(rid, False):
+                continue  # unknown but fresh (or re-classified since
+                # the lock-free snapshot): leave it for the next pass
+            # per-invocation subdir: collision-free vs leftovers and
+            # concurrent vacuums (ops-plane uniqueness — the data
+            # plane never reads trash)
+            if my_trash is None:
+                my_trash = (trash_root
+                            / f"vac-{os.getpid()}-{time.monotonic_ns()}")
+                my_trash.mkdir(parents=True, exist_ok=True)
+            # a concurrent vacuum's phase 0 can age out OUR subdir
+            # (this vacuum stalled > _TRASH_MIN_AGE between renames)
+            # — retry with a FRESH subdir (fresh mkdir resets its
+            # age) rather than abort the settle mid-mutation; if the
+            # SOURCE dir vanished instead (reclaimed externally),
+            # fall through and settle its entries anyway.
+            for _attempt in range(3):
+                try:
+                    d.rename(my_trash / d.name)
+                    break
+                except FileNotFoundError:
+                    if not d.exists():
+                        break  # source gone: nothing left to move
+                    my_trash = (
+                        trash_root
+                        / f"vac-{os.getpid()}-{time.monotonic_ns()}"
+                    )
                     my_trash.mkdir(parents=True, exist_ok=True)
-                # a concurrent vacuum's phase 0 can age out OUR subdir
-                # (this vacuum stalled > _TRASH_MIN_AGE between renames)
-                # — retry with a FRESH subdir (fresh mkdir resets its
-                # age) rather than abort the settle mid-mutation; if the
-                # SOURCE dir vanished instead (reclaimed externally),
-                # fall through and settle its entries anyway.
-                for _attempt in range(3):
-                    try:
-                        d.rename(my_trash / d.name)
-                        break
-                    except FileNotFoundError:
-                        if not d.exists():
-                            break  # source gone: nothing left to move
-                        my_trash = (
-                            trash_root
-                            / f"vac-{os.getpid()}-{time.monotonic_ns()}"
-                        )
-                        my_trash.mkdir(parents=True, exist_ok=True)
-                else:
-                    d.rename(my_trash / d.name)  # out of retries: raise
-                removed.append(d.name)
-                leases.pop(rid, None)
-                retired.discard(rid)
+            else:
+                d.rename(my_trash / d.name)  # out of retries: raise
+            removed.append(d.name)
+            leases.pop(rid, None)
+            retired.discard(rid)
         stale_dirless = [
             rid for rid, reserved_at in list(leases.items())
             if rid not in dirs_seen and rid not in live
@@ -404,7 +368,6 @@ def job_status(spark: SparkSession, output_dir: str) -> DataFrame:
     """The reference's GET /v1/status analog (documents.py:302-339): job
     state derived from committed lineage, not from mutable driver state."""
     manifest = Manifest(output_dir)
-    from docling_api_spark.schema import LINEAGE_SCHEMA
     # Read with the EXPLICIT current schema, not footer inference: a
     # resumed pre-upgrade output dir holds lineage files written before
     # n_oversize existed next to post-upgrade ones, and an inferred read

@@ -31,6 +31,26 @@ assert s["rows"] > 0 and s["buckets"], s
 print("package check OK:", s["rows"], "rows,", len(s["buckets"]), "buckets")
 EOF
 
+# status and compact --vacuum ship through the same zip: one status row
+# per bucket holding rows (50 conversations fill 38 of the 64 buckets)
+STATUS=$(spark-submit --master 'local[4]' --py-files "$WORK/das.zip" \
+      docling_api_spark/cli.py status --output "$WORK/out" 2>/dev/null)
+COMPACT=$(spark-submit --master 'local[4]' --py-files "$WORK/das.zip" \
+      docling_api_spark/cli.py compact --output "$WORK/out" --vacuum \
+      2>/dev/null | tail -1)
+echo "$COMPACT"
+python - <<EOF
+import json
+s, c = json.loads('''$OUT'''), json.loads('''$COMPACT''')
+header, *rows = [[f.strip() for f in line.strip("|").split("|")]
+                 for line in '''$STATUS'''.splitlines() if line.startswith("|")]
+rows = [dict(zip(header, r)) for r in rows]
+assert len({r["partition_id"] for r in rows}) == len(rows) == 38, rows
+assert sum(int(r["rows_out"]) for r in rows) == s["rows"], rows
+assert c["rows"] == s["rows"] and c["vacuumed"] == [f"run_id={s['run_id']}"], c
+print("maintenance package check OK:", len(rows), "status rows,", c)
+EOF
+
 # the corpus surface ships through the same zip (exercises the operator
 # and plan layers: extract/quality/dedup/graph/decontam/split/chunk/pack)
 python - <<EOF

@@ -31,8 +31,13 @@ def _read_committed(spark, out_dir) -> pd.DataFrame:
     )
 
 
-def test_partial_then_resume_equals_single_shot(spark, transcripts, tmp_path):
-    from docling_api_spark.plans.pipeline import run_extraction
+def test_partial_then_resume_equals_single_shot(spark, transcripts, tmp_path,
+                                               monkeypatch):
+    from pyspark.sql import functions as F
+
+    from docling_api_spark.operators.extract import extract_text_column
+    from docling_api_spark.plans import pipeline
+    from docling_api_spark.plans.pipeline import run_extraction, with_bucket
 
     single = tmp_path / "single"
     split = tmp_path / "split"
@@ -54,12 +59,40 @@ def test_partial_then_resume_equals_single_shot(spark, transcripts, tmp_path):
     p3 = run_extraction(spark, transcripts, str(split), n_buckets=8)
     assert p3["buckets"] == []
 
-    a = _read_committed(spark, single)
-    b = _read_committed(spark, split)
-    assert len(a) == len(b) > 0
-    pd.testing.assert_frame_equal(
-        a[sorted(a.columns)], b[sorted(b.columns)], check_like=True
+    # the same resume over a longer history: two committed runs plus an
+    # orphan dir written without a commit. The resume's read-back must
+    # list only its own run's dir, whatever else sits under data/.
+    history = tmp_path / "history"
+    for limit in (2, 3):
+        run_extraction(spark, transcripts, str(history), n_buckets=8,
+                       num_partitions=8, limit_buckets=limit)
+    extract_text_column(with_bucket(transcripts, 8)).withColumn(
+        "run_id", F.lit("run-dead")
+    ).write.mode("append").partitionBy("run_id", "bucket").parquet(
+        f"{history}/data"
     )
+    read_backs, real_write_run = [], pipeline.write_run
+
+    def spy_write_run(*args):
+        schema, written = real_write_run(*args)
+        read_backs.append(written)
+        return schema, written
+
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "write_run", spy_write_run)
+        h = run_extraction(spark, transcripts, str(history), n_buckets=8,
+                           num_partitions=8)
+    assert h["resumed"] and len(h["buckets"]) == 3 and len(read_backs) == 1
+    files = read_backs[0].inputFiles()
+    assert files and all(f"/data/run_id={h['run_id']}/" in f for f in files)
+
+    a = _read_committed(spark, single)
+    for out in (split, history):
+        b = _read_committed(spark, out)
+        assert len(a) == len(b) > 0
+        pd.testing.assert_frame_equal(
+            a[sorted(a.columns)], b[sorted(b.columns)], check_like=True
+        )
 
 
 def test_orphan_files_invisible(spark, transcripts, tmp_path):
@@ -118,6 +151,34 @@ def test_crashed_run_id_is_burned_not_reused(spark, transcripts, tmp_path):
     assert s["rows"] == n_input
     assert committed_view(spark, str(out)).count() == n_input
     assert s["run_id"] not in m.snapshot()["inflight"]  # settled by commit
+
+
+def test_crash_before_commit_leaves_no_lineage(spark, transcripts, tmp_path,
+                                               monkeypatch):
+    """A run that writes its data but dies in the manifest commit must
+    leave no lineage behind: after the resume, status has one row per
+    committed bucket and its rows_out total equals the committed data —
+    the crashed run's buckets are not counted twice."""
+    from docling_api_spark.plans.checkpoint import Manifest, committed_view
+    from docling_api_spark.plans.pipeline import job_status, run_extraction
+
+    out = str(tmp_path / "out")
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("injected crash before commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(Manifest, "commit", crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            run_extraction(spark, transcripts, out, n_buckets=4)
+    assert Manifest(out).committed_buckets() == set()
+
+    s = run_extraction(spark, transcripts, out, n_buckets=4)
+    assert len(s["buckets"]) == 4
+    status = job_status(spark, out).toPandas()
+    assert sorted(status["partition_id"]) == sorted(
+        Manifest(out).committed_buckets())
+    assert status["rows_out"].sum() == committed_view(spark, out).count() > 0
 
 
 def test_committed_view_on_fresh_dir(spark, tmp_path):
