@@ -14,8 +14,10 @@ so snapshots are emulated deterministically:
   under a new run_id, with no double counting.
 - This module owns that layout (``Manifest.run_dir``/``run_dirs``, and
   ``write_run`` for ``run_extraction`` and ``compact``). A run goes write
-  -> read-back of its own dir -> commit -> lineage append, so lineage
-  lands only for runs whose commit did.
+  -> read-back of its own dir -> commit -> lineage, so lineage lands only
+  for runs whose commit did. Lineage is one parquet file per run,
+  ``lineage/part-<run_id>.parquet``, written with pyarrow (no Spark job)
+  by ``write_lineage`` with the same tmp+rename as ``manifest.json``.
 - Idempotent re-commit: committing an already-committed bucket is a
   no-op (J3 anti-join semantics; reference stripe_service.py:214-231).
 
@@ -106,6 +108,9 @@ class Manifest:
 
     def run_dir(self, run_id: str) -> pathlib.Path:
         return self.dir / "data" / f"run_id={run_id}"
+
+    def lineage_dir(self) -> pathlib.Path:
+        return self.dir / "lineage"
 
     def run_dirs(self) -> dict[str, pathlib.Path]:
         """Every run data dir on disk, keyed by run id, in name order."""
@@ -249,11 +254,32 @@ def write_run(spark, output_dir: str, df, run_id: str):
                     .parquet(str(run_dir)))
 
 
+def write_lineage(output_dir: str, run_id: str, rows) -> None:
+    """Write run ``run_id``'s collected lineage rows (``LINEAGE_SCHEMA``
+    order) as ``lineage/part-<run_id>.parquet``: a hidden tmp file, then
+    an atomic rename. Re-writing a run's lineage replaces its file, never
+    adds its rows twice; readers skip the hidden tmp name."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from docling_api_spark.schema import LINEAGE_SCHEMA
+
+    table = pa.Table.from_pylist([r.asDict() for r in rows],
+                                 schema=to_arrow_schema(LINEAGE_SCHEMA))
+    lineage = Manifest(output_dir).lineage_dir()
+    lineage.mkdir(parents=True, exist_ok=True)
+    tmp = lineage / f".part-{run_id}.parquet.tmp"
+    pq.write_table(table, tmp)
+    os.replace(tmp, lineage / f"part-{run_id}.parquet")
+
+
 def committed_view(spark, output_dir: str):
     """Snapshot-isolated read: only manifest-committed (run_id, bucket)
-    pairs are visible; orphan files from killed runs are filtered by the
-    partition columns (partition pruning — no data files of orphaned
-    runs are even opened)."""
+    pairs are visible. Only the committed runs' own dirs are listed, so
+    orphaned and retired runs' dirs are never even listed and the cost
+    does not grow with the output's run history; the partition filter
+    drops any bucket a run wrote but did not commit."""
     from functools import reduce
 
     from pyspark.sql import functions as F
@@ -265,8 +291,11 @@ def committed_view(spark, output_dir: str):
     # the recorded write schema reads a file-less (zero-row) dir as empty
     # instead of failing inference; pre-schema manifests infer as before
     schema = T.StructType.fromJson(json.loads(schema_json)) if schema_json else None
-    if not runs:
-        # zero committed runs: return an empty frame WITHOUT touching
+    # a zero-row run commits buckets but writes no dir
+    run_dirs = [str(d) for d in (m.run_dir(r["run_id"]) for r in runs)
+                if d.exists()]
+    if not run_dirs:
+        # no committed rows: return an empty frame WITHOUT touching
         # the data path — on a fresh output dir the parquet reader would
         # raise PATH_NOT_FOUND before reaching any limit(0)
         if schema:
@@ -276,7 +305,7 @@ def committed_view(spark, output_dir: str):
             return spark.read.parquet(f"{output_dir}/data").limit(0)
         return spark.createDataFrame([], T.StructType([]))
     reader = spark.read.schema(schema) if schema else spark.read
-    df = reader.parquet(f"{output_dir}/data")
+    df = reader.option("basePath", f"{output_dir}/data").parquet(*run_dirs)
     cond = reduce(
         lambda a, b: a | b,
         [

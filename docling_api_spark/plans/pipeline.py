@@ -15,7 +15,9 @@ Scale design:
   straight off the parquet/Iceberg scan splits; the only exchange in the
   job moves the (smaller) extracted output into the bucketed write
   layout. Lineage is aggregated from the written files (verify-what-
-  committed), touching only metric columns.
+  committed), touching only metric columns, and once the commit has
+  landed it is written with pyarrow as one parquet file per run
+  (``lineage/part-<run_id>.parquet``) — no Spark job.
 - **Write salting**: the write shuffle salts on ``(conv_id, turn_idx)``
   (``_wsalt``) to bound files-per-bucket without hot write tasks.
 """
@@ -29,7 +31,8 @@ from pyspark.sql import functions as F
 
 from docling_api_spark.operators.extract import extract_text_column
 from docling_api_spark.operators.metering import credits_col
-from docling_api_spark.plans.checkpoint import Manifest, committed_view, write_run
+from docling_api_spark.plans.checkpoint import (Manifest, committed_view,
+                                                write_lineage, write_run)
 from docling_api_spark.schema import LINEAGE_SCHEMA
 
 DEFAULT_BUCKETS = 64
@@ -183,13 +186,12 @@ def run_extraction(
     manifest.commit(run_id, snapshot_id, pending,
                     data_schema_json=data_schema.json(),
                     expect_data=rows > 0, n_buckets=n_buckets)
-    # lineage is appended only once the commit has landed, so a run that
+    # lineage is written only once the commit has landed, so a run that
     # dies before it leaves no lineage for cli status to count twice. The
-    # window left (commit landed, lineage append lost) shows as a missing
+    # window left (commit landed, lineage file lost) shows as a missing
     # status row, never a double count; it closes when lineage moves into
     # the manifest commit.
-    (spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA).coalesce(1)
-     .write.mode("append").parquet(f"{output_dir}/lineage"))
+    write_lineage(output_dir, run_id, lineage_rows)
     return {"run_id": run_id, "buckets": pending, "rows": rows, "resumed": bool(done)}
 
 
@@ -368,6 +370,11 @@ def job_status(spark: SparkSession, output_dir: str) -> DataFrame:
     """The reference's GET /v1/status analog (documents.py:302-339): job
     state derived from committed lineage, not from mutable driver state."""
     manifest = Manifest(output_dir)
+    lineage_dir = manifest.lineage_dir()
+    if not lineage_dir.exists():
+        # a fresh output, or every run so far died before its commit:
+        # nothing committed, so an empty status, not PATH_NOT_FOUND
+        return spark.createDataFrame([], LINEAGE_SCHEMA)
     # Read with the EXPLICIT current schema, not footer inference: a
     # resumed pre-upgrade output dir holds lineage files written before
     # n_oversize existed next to post-upgrade ones, and an inferred read
@@ -375,8 +382,7 @@ def job_status(spark: SparkSession, output_dir: str) -> DataFrame:
     # flickering in and out run-to-run). With the pinned schema, old rows
     # deterministically surface n_oversize as NULL ("recorded before the
     # counter existed"), new rows carry the real count.
-    lineage = spark.read.schema(LINEAGE_SCHEMA).parquet(
-        f"{output_dir}/lineage")
+    lineage = spark.read.schema(LINEAGE_SCHEMA).parquet(str(lineage_dir))
     done = manifest.committed_buckets()
     return lineage.filter(F.col("partition_id").isin(sorted(done))).orderBy(
         "run_id", "partition_id"

@@ -12,10 +12,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-# One Arrow batch ≈ this many rows flows through every pandas UDF.
-# 4096 rows × 64 KB worst-case payload ≈ 256 MB absolute-worst batch
-# (typical ≈ 8 MB); halves the Python<->JVM roundtrips vs 2048 while
-# staying far under executor memory with 32 concurrent tasks.
+# One Arrow batch ≈ this many rows flows through every pandas UDF;
+# halves the Python<->JVM roundtrips vs 2048 (typical batch ≈ 8 MB).
+# Batches are bounded by rows only: at the CLI's --max-payload-chars
+# 1048576 one batch can carry ~4 GiB of text, past Arrow's int32 string
+# offsets — ROADMAP item 4 adds the byte bound.
 ARROW_BATCH_ROWS = 4096
 
 
@@ -52,6 +53,13 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        # list partition dirs in this process, never in a Spark job:
+        # outputs live on the local filesystem the manifest's flock
+        # already requires, and listing a run's 64 bucket dirs with 64
+        # tasks costs more than listing them here (the default threshold
+        # is 32 dirs)
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                str(2**31 - 1))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
     )
     for k, v in (extra_conf or {}).items():

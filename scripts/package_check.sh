@@ -26,8 +26,12 @@ OUT=$(spark-submit --master 'local[4]' --py-files "$WORK/das.zip" \
 echo "$OUT"
 python - <<EOF
 import json
+import pathlib
 s = json.loads('''$OUT''')
 assert s["rows"] > 0 and s["buckets"], s
+# lineage is one file per run, named by its run id
+lineage = [p.name for p in pathlib.Path("$WORK/out/lineage").iterdir()]
+assert lineage == [f"part-{s['run_id']}.parquet"], lineage
 print("package check OK:", s["rows"], "rows,", len(s["buckets"]), "buckets")
 EOF
 
@@ -49,6 +53,18 @@ assert len({r["partition_id"] for r in rows}) == len(rows) == 38, rows
 assert sum(int(r["rows_out"]) for r in rows) == s["rows"], rows
 assert c["rows"] == s["rows"] and c["vacuumed"] == [f"run_id={s['run_id']}"], c
 print("maintenance package check OK:", len(rows), "status rows,", c)
+EOF
+
+# status on a fresh output dir (no run yet, so no lineage) exits 0 and
+# shows no data rows
+mkdir "$WORK/fresh"
+FRESH=$(spark-submit --master 'local[4]' --py-files "$WORK/das.zip" \
+      docling_api_spark/cli.py status --output "$WORK/fresh" 2>/dev/null)
+python - <<EOF
+header, *rows = [line for line in '''$FRESH'''.splitlines()
+                 if line.startswith("|")]
+assert "partition_id" in header and rows == [], '''$FRESH'''
+print("fresh status package check OK: no rows")
 EOF
 
 # the corpus surface ships through the same zip (exercises the operator

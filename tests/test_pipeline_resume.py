@@ -120,6 +120,10 @@ def test_orphan_files_invisible(spark, transcripts, tmp_path):
     )
 
     assert committed_view(spark, str(out)).count() == committed_before
+    # only committed runs' dirs are listed: the orphan's files are not
+    # even part of the read
+    files = committed_view(spark, str(out)).inputFiles()
+    assert files and not any("/run_id=run-dead/" in f for f in files)
 
 
 def test_crashed_run_id_is_burned_not_reused(spark, transcripts, tmp_path):
@@ -172,6 +176,7 @@ def test_crash_before_commit_leaves_no_lineage(spark, transcripts, tmp_path,
         with pytest.raises(RuntimeError, match="injected crash"):
             run_extraction(spark, transcripts, out, n_buckets=4)
     assert Manifest(out).committed_buckets() == set()
+    assert job_status(spark, out).count() == 0
 
     s = run_extraction(spark, transcripts, out, n_buckets=4)
     assert len(s["buckets"]) == 4
@@ -189,6 +194,82 @@ def test_committed_view_on_fresh_dir(spark, tmp_path):
 
     out = tmp_path / "never_written"
     assert committed_view(spark, str(out)).count() == 0
+
+
+def test_job_status_on_fresh_dir(spark, tmp_path):
+    """job_status (cli status) on an output dir where no run ever wrote
+    must return an empty frame with the lineage schema, not raise
+    PATH_NOT_FOUND for the missing lineage dir."""
+    from docling_api_spark.plans.pipeline import job_status
+    from docling_api_spark.schema import LINEAGE_SCHEMA
+
+    status = job_status(spark, str(tmp_path / "never_written"))
+    assert status.schema == LINEAGE_SCHEMA and status.count() == 0
+
+
+def test_run_tail_lists_and_writes_lineage_without_jobs(spark, tmp_path):
+    """A run whose dir holds more than 32 bucket dirs (Spark's default
+    parallel partition-discovery threshold) launches four Spark jobs:
+    two for the bucketed write and two for the lineage read-back.
+    Listing the run's dir and writing the lineage file happen in this
+    process, so neither adds a job."""
+    from docling_api_spark.gen import transcripts_df
+    from docling_api_spark.plans.pipeline import run_extraction
+
+    out = tmp_path / "out"
+    sc = spark.sparkContext
+    sc.setJobGroup("run-tail-jobs", "jobs of one run_extraction")
+    try:
+        s = run_extraction(spark, transcripts_df(spark, 100, partitions=4),
+                           str(out), n_buckets=64)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)  # clear the group
+    # job status reaches the tracker through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    run_dir = out / "data" / f"run_id={s['run_id']}"
+    assert len(list(run_dir.glob("bucket=*"))) > 32
+    assert len(sc.statusTracker().getJobIdsForGroup("run-tail-jobs")) == 4
+
+
+def test_lineage_is_one_file_per_run(spark, transcripts, tmp_path):
+    """Each committed run leaves exactly one lineage file named by its
+    run id (no tmp file, no _temporary dir); the reader perfbench uses
+    (pyarrow), job_status and the committed data agree on the totals;
+    writing a run's lineage again replaces its file, never adds rows."""
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from docling_api_spark.plans.checkpoint import committed_view, write_lineage
+    from docling_api_spark.plans.pipeline import job_status, run_extraction
+
+    out = str(tmp_path / "out")
+    r1 = run_extraction(spark, transcripts, out, n_buckets=8, limit_buckets=2)
+    r2 = run_extraction(spark, transcripts, out, n_buckets=8)
+    files = sorted(f"part-{r['run_id']}.parquet" for r in (r1, r2))
+    assert sorted(os.listdir(f"{out}/lineage")) == files
+
+    cols = ("rows_out", "n_error", "pages")
+
+    def totals():
+        lin = pq.read_table(f"{out}/lineage").to_pydict()
+        status = job_status(spark, out).agg(
+            *[F.sum(c).alias(c) for c in cols]).first().asDict()
+        return {c: sum(lin[c]) for c in cols}, status
+
+    committed = committed_view(spark, out).agg(
+        F.count(F.lit(1)).alias("rows_out"),
+        F.sum((F.col("status") == "error").cast("long")).alias("n_error"),
+        F.sum("pages").alias("pages"),
+    ).first().asDict()
+    assert committed["rows_out"] == transcripts.count()
+    assert totals() == (committed, committed)
+
+    write_lineage(out, r2["run_id"], job_status(spark, out)
+                  .filter(F.col("run_id") == r2["run_id"]).collect())
+    assert sorted(os.listdir(f"{out}/lineage")) == files
+    assert totals() == (committed, committed)
 
 
 def test_legacy_manifest_migration_burns_retired_ids(tmp_path):
