@@ -19,6 +19,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from docling_api_spark.operators.textstats import _ratio_e4
+
 # fixed "as of" instant for window predicates (events span early 2024)
 AS_OF = "2024-02-15 00:00:00"
 
@@ -52,21 +54,6 @@ def entry(spark: SparkSession) -> DataFrame:
 # queries
 # ---------------------------------------------------------------------------
 
-def _half_up(num, den, decimals: int):
-    """HALF_UP(num/den, decimals) over non-negative LONG columns in
-    exact integer arithmetic: floor((2*10^d*num + den) / (2*den)),
-    emitted as a double at scale d. Float round() is NOT engine-portable
-    (Spark HALF_UPs the double's shortest decimal string, DuckDB rounds
-    the binary; float sums are partition-order dependent besides) —
-    every driver query that rounds a sum/avg of fixed-point data goes
-    through this instead. (a - pmod(a, b)) / b divides exactly, so the
-    double division introduces no error."""
-    scale = 10 ** decimals
-    a = F.lit(2 * scale).cast("long") * num + den
-    b = F.lit(2).cast("long") * den
-    return ((a - F.pmod(a, b)) / b) / F.lit(float(scale))
-
-
 def _cents(col):
     """2-decimal double -> exact long at scale 100 (round repairs the
     double's representation error; inputs are promised 2-decimal)."""
@@ -85,7 +72,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed in exact scaled-integer space (quantity is integral, price/
     discount are 2-decimal): integer sums are associative — identical
     under any partitioning, AQE re-plan, or engine — and the rounds are
-    _half_up integer division, so no float-tie can split Spark vs the
+    _ratio_e4 integer division, so no float-tie can split Spark vs the
     oracle at any scale factor. disc_price rides at scale 10^4
     (cents x percent): max ~1.05e9/row, < 2^63 for any SF this side of
     ~10^9 rows per group x 10^9 each — loud overflow beats quiet drift."""
@@ -110,10 +97,10 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_linestatus",
         (F.col("_sq") * F.lit(1.0)).alias("sum_qty"),
         (F.col("_sp") / F.lit(100.0)).alias("sum_base_price"),
-        _half_up(F.col("_sd4"), F.lit(10000).cast("long"), 2)
+        _ratio_e4(F.col("_sd4"), F.lit(10000).cast("long"), 2)
         .alias("sum_disc_price"),
-        _half_up(F.col("_sq"), n, 4).alias("avg_qty"),
-        _half_up(F.col("_sdisc"), F.lit(100).cast("long") * n, 4)
+        _ratio_e4(F.col("_sq"), n, 4).alias("avg_qty"),
+        _ratio_e4(F.col("_sdisc"), F.lit(100).cast("long") * n, 4)
         .alias("avg_disc"),
         "count_order",
     ).orderBy("l_returnflag", "l_linestatus")
@@ -222,7 +209,7 @@ def p4_time_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) / F.lit(10000.0)
     return g.select(
         "event_type", "n", "v", "min_v", "max_v",
-        _half_up(F.col("_s"), F.lit(100).cast("long") * n, 4)
+        _ratio_e4(F.col("_s"), F.lit(100).cast("long") * n, 4)
         .alias("avg_v"),
         F.when(n > 1, F.round(F.sqrt(var), 4)).alias("stddev_v"),
         "p50", "p95",
@@ -242,7 +229,7 @@ def p7_bounds_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"),
              F.sum(_cents(F.col("o_totalprice"))).alias("_sc"))
         .select("o_orderstatus", "n",
-                _half_up(F.col("_sc"),
+                _ratio_e4(F.col("_sc"),
                          F.lit(100).cast("long") * F.col("n"), 2)
                 .alias("avg_price"))
         .orderBy("o_orderstatus")
@@ -344,7 +331,7 @@ def j4_parity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("_s4"),
         )
         .select("o_orderpriority", "n_lines",
-                _half_up(F.col("_s4"), F.lit(10000).cast("long"), 2)
+                _ratio_e4(F.col("_s4"), F.lit(10000).cast("long"), 2)
                 .alias("revenue"))
         .orderBy("o_orderpriority")
     )
@@ -373,7 +360,7 @@ def a7_keyword_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         # avg accuracy = sum(hits)/(k*n), HALF_UP at 6 by integer div —
         # the per-row rational hits/k ties at scale 6 for some k
-        _half_up(F.col("_sh"),
+        _ratio_e4(F.col("_sh"),
                  F.lit(len(kws)).cast("long") * F.col("_n"), 6)
         .alias("avg_accuracy"),
         "n_full_hits",
@@ -1100,9 +1087,9 @@ def corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tot.crossJoin(F.broadcast(pct)).select(
         "n_docs", "n_tokens_total", "n_chars_total",
         "tokens_min", "tokens_max",
-        _half_up(F.col("n_tokens_total"), F.col("n_docs"), 2)
+        _ratio_e4(F.col("n_tokens_total"), F.col("n_docs"), 2)
         .alias("avg_tokens"),
-        _half_up(F.col("q_e4_sum"), F.col("n_docs") * F.lit(10000).cast("long"), 4)
+        _ratio_e4(F.col("q_e4_sum"), F.col("n_docs") * F.lit(10000).cast("long"), 4)
         .alias("avg_quality"),
         "tokens_p50", "tokens_p90", "tokens_p99",
         "n_docs_en", "n_langs",

@@ -6,6 +6,10 @@ JVM-side DataFrame ops + higher-order functions (whole-stage codegen; the
 only shuffles are the groupBys on doc/bucket keys, all partial-agg
 friendly). No Python in any hot path.
 
+One place per rule: ``exact_representatives`` is the exact-duplicate
+collapse and ``near_duplicate_pairs`` the near-duplicate pass over its
+representatives; every dedup path here and in plans/ goes through them.
+
 Scale notes (100 TB): the LSH pattern shuffles one (band, bucket) row per
 doc per band — O(B·N) small rows, not O(N²) pairs; candidate pairs are
 generated only within buckets. Verification re-joins the two small
@@ -195,17 +199,56 @@ def jaccard_verify(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
     return j.filter(F.col("jaccard") >= threshold)
 
 
+def exact_representatives(df: DataFrame, id_col: str, text_col: str,
+                          sha_col: str) -> DataFrame:
+    """THE exact-duplicate collapse: one row per distinct ``sha_col``
+    (a content hash the caller computed) with the min-id keeper as
+    ``id_col``, its text as ``text_col`` and the copy count as
+    ``n_copies``. A NULL hash is one group like any other.
+
+    min_by carries the keeper's text inside the partial aggregation, so
+    a content crosses the exchange at most once per map task and the
+    text never shuffles by itself (joining texts back to keepers on the
+    hash measured 2x the near-dup stage's wall at 4M docs / 800x
+    duplication). Materialized once (eager localCheckpoint): every
+    caller feeds it to several consumers whose stages AQE submits
+    concurrently, so a lazily-shared node would race and recompute.
+    localCheckpoint, not persist(): its blocks are freed when the frame
+    is garbage-collected, while persist() pins a CacheManager entry for
+    the session. Tradeoff: losing an executor fails the query instead of
+    recomputing; in-query recovery would need reliable checkpoint()."""
+    return (
+        df.groupBy(sha_col)
+        .agg(
+            F.min(id_col).alias(id_col),
+            F.min_by(F.col(text_col), F.col(id_col)).alias(text_col),
+            F.count(F.lit(1)).alias("n_copies"),
+        )
+        .localCheckpoint(eager=True)
+    )
+
+
+def near_duplicate_pairs(reps: DataFrame, id_col: str, text_col: str,
+                         threshold: float) -> DataFrame:
+    """THE near-duplicate pass over exact representatives: minhash ->
+    LSH bands -> candidate pairs -> exact-Jaccard verification. Output
+    (id_a, id_b, jaccard) with id_a < id_b and jaccard >= threshold."""
+    sig = minhash_signature(reps, id_col, text_col)
+    return jaccard_verify(reps, lsh_candidate_pairs(sig, id_col),
+                          id_col, text_col, threshold)
+
+
 def minhash_near_duplicates(df: DataFrame,
                             threshold: float = 0.6) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline with an exact-dup prefilter.
 
-    1. Byte-identical copies collapse by content hash FIRST: each group
-       emits star edges (keeper -> member, jaccard = 1.0). A crawl's
-       10⁶-copy boilerplate page costs 10⁶-1 edge rows here instead of
-       flooding an LSH bucket.
-    2. MinHash -> bands -> candidate pairs -> exact-Jaccard verification
-       runs over the distinct REPRESENTATIVES only; oversized buckets
-       chain-expand (see lsh_candidate_pairs) — no silent drops.
+    1. Byte-identical copies collapse by content hash FIRST
+       (exact_representatives): each group emits star edges (keeper ->
+       member, jaccard = 1.0). A crawl's 10⁶-copy boilerplate page costs
+       10⁶-1 edge rows here instead of flooding an LSH bucket.
+    2. near_duplicate_pairs runs over the distinct REPRESENTATIVES only;
+       oversized buckets chain-expand (see lsh_candidate_pairs) — no
+       silent drops.
 
     Output edges (exact-group stars + verified near-dup representative
     pairs) carry the duplicate-cluster structure at O(docs + pairs) rows
@@ -217,38 +260,7 @@ def minhash_near_duplicates(df: DataFrame,
         F.col("doc_id"), F.col("text"),
         F.sha2(F.col("text"), 256).alias("_h"),
     )
-    # The keeper agg carries the representative TEXT inside the
-    # aggregation (min_by on the unique id — deterministic, identical to
-    # "the text of the min-id row"), so the full document text never
-    # shuffles by itself: partial aggregation keeps ONE candidate text
-    # per content hash per map task, so the exchange moves at most
-    # #distinct-per-partition texts (a crawl's 10⁶-copy boilerplate page
-    # crosses the wire once per input partition, not 10⁶ times — and in
-    # the all-unique worst case exactly what a plain text shuffle would).
-    # The previous shape (join texts back to keepers on _h, checkpoint
-    # the joined frame) shuffled AND materialized every document's text:
-    # measured 2x this stage's wall at 4M docs / 800x duplication.
-    # Materialized once (eager localCheckpoint) because it feeds the
-    # exact-star join, the minhash signature, and both sides of
-    # jaccard_verify — and AQE submits those consumers' stages
-    # concurrently, so a lazily-shared node would race and recompute.
-    # localCheckpoint over persist(): the checkpoint block store is
-    # released when the DataFrame is garbage-collected (ContextCleaner),
-    # whereas a persist() pins a CacheManager entry for the life of the
-    # session (and plan-matches later identical queries, contaminating
-    # benchmarks with cache hits). Known tradeoff: localCheckpoint
-    # truncates lineage, so losing an executor mid-query fails THIS
-    # query instead of transparently recomputing — the operator is
-    # deterministic and a rerun is cheap; a deployment preferring
-    # in-query recovery should swap in reliable checkpoint().
-    keepers = (
-        hashed.groupBy("_h")
-        .agg(
-            F.min("doc_id").alias("_keeper"),
-            F.min_by(F.col("text"), F.col("doc_id")).alias("text"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    reps = exact_representatives(hashed, "doc_id", "text", "_h")
     # Star edges need only (id, hash): the corpus is re-derived from the
     # caller's frame (typically an already-materialized upstream
     # checkpoint) and shuffles 40 bytes/row, never the text. Two reads
@@ -256,7 +268,7 @@ def minhash_near_duplicates(df: DataFrame,
     # checkpoint write/read.
     exact_pairs = (
         hashed.select("doc_id", "_h")
-        .join(keepers.select("_h", "_keeper"), "_h")
+        .join(reps.select("_h", F.col("doc_id").alias("_keeper")), "_h")
         .filter(F.col("doc_id") != F.col("_keeper"))
         .select(
             F.col("_keeper").alias("id_a"),
@@ -264,10 +276,7 @@ def minhash_near_duplicates(df: DataFrame,
             F.lit(1.0).alias("jaccard"),
         )
     )
-    reps = keepers.select(F.col("_keeper").alias("doc_id"), "text")
-    sig = minhash_signature(reps)
-    pairs = lsh_candidate_pairs(sig)
-    near = jaccard_verify(reps, pairs, threshold=threshold)
+    near = near_duplicate_pairs(reps, "doc_id", "text", threshold)
     return near.unionByName(exact_pairs).orderBy("id_a", "id_b")
 
 
@@ -347,25 +356,19 @@ def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame) -> DataFrame:
 def signature_index(df: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text") -> DataFrame:
     """Build the committed dedup index for a corpus/batch: byte-identical
-    docs collapse to their min-id representative FIRST (the same exact-dup
-    prefilter as minhash_near_duplicates — a 10⁶-copy boilerplate page is
-    ONE index row, so no index-side LSH bucket inherits crawl skew), then
-    one minhash signature per representative.
+    docs collapse to their min-id representative FIRST through
+    exact_representatives (a 10⁶-copy boilerplate page is ONE index row,
+    so no index-side LSH bucket inherits crawl skew), then one minhash
+    signature per representative, as in near_duplicate_pairs.
 
-    Output: (id_col, content_sha, minhash) — one row per distinct content.
-    The rep subtree (scan -> sha2 -> groupBy -> join) feeds both the
-    signature computation and the sha projection, so it is materialized
-    once (same eager-localCheckpoint rationale as minhash_near_duplicates;
-    index builds are one-time per ingest batch)."""
-    hashed = df.select(
+    Output: (id_col, content_sha, minhash) — one row per distinct
+    content, also when an input row repeats. NULL-text docs are never
+    indexed: they have no content to match."""
+    hashed = df.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col), F.col(text_col),
         F.sha2(F.col(text_col), 256).alias("content_sha"),
     )
-    keepers = hashed.groupBy("content_sha").agg(F.min(id_col).alias(id_col))
-    reps = (
-        hashed.join(keepers, [id_col, "content_sha"])
-        .localCheckpoint(eager=True)
-    )
+    reps = exact_representatives(hashed, id_col, text_col, "content_sha")
     sig = minhash_signature(reps, id_col, text_col)
     return reps.select(id_col, "content_sha").join(sig, id_col)
 

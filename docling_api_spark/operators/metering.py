@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .textstats import _ratio_e4
+
 # reference credit formula: max(pages * credits_per_page, min_credits)
 # (api/routes/documents.py:35-41; defaults 1 and 1, api/config.py:130-137)
 CREDITS_PER_PAGE = 1
@@ -61,7 +63,6 @@ def usage_rollup(df: DataFrame, key_col: str, value_col: str,
         return df.groupBy(key_col).agg(*aggs)
 
     vscale = 10 ** value_decimals
-    ascale = 10 ** 4  # avg_value's decimals
     # value -> exact scaled long (round() repairs the double's
     # representation error; values are promised to have value_decimals
     # decimals, so the nearest integer is never near a .5 tie)
@@ -79,20 +80,17 @@ def usage_rollup(df: DataFrame, key_col: str, value_col: str,
             if time_col else []
         ),
     )
-    # avg = sum_int / (vscale * n_vals), HALF_UP at 4 decimals:
-    # floor((2*ascale*sum_int + vscale*n) / (2*vscale*n)) / ascale —
-    # all longs; (a - pmod(a,b))/b is an exactly-divisible double div.
+    # avg = sum_int / (vscale * n_vals), HALF_UP at 4 decimals in exact
+    # integer arithmetic (textstats._ratio_e4, the one HALF_UP rule).
     # All-NULL group: _sum_int is NULL -> avg_value NULL (F.avg parity).
-    a = (F.lit(2 * ascale).cast("long") * F.col("_sum_int")
-         + F.lit(vscale).cast("long") * F.col("_n_vals"))
-    b = (F.lit(2 * vscale).cast("long") * F.col("_n_vals"))
     cols = [
         key_col,
         "n_requests",
         (F.col("_sum_int") / F.lit(float(vscale))).alias("total_value"),
         F.when(
             F.col("_n_vals") > 0,
-            ((a - F.pmod(a, b)) / b) / F.lit(float(ascale)),
+            _ratio_e4(F.col("_sum_int"),
+                      F.lit(vscale).cast("long") * F.col("_n_vals"), 4),
         ).alias("avg_value"),
     ]
     if time_col:

@@ -149,7 +149,7 @@ def annotate_corpus(
     """
     from docling_api_spark.operators.decontam import ngram_decontaminate
     from docling_api_spark.operators.dedup import (
-        jaccard_verify, lsh_candidate_pairs, minhash_signature)
+        exact_representatives, near_duplicate_pairs)
     from docling_api_spark.operators.extract import extract_text_column
     from docling_api_spark.operators.graph import cluster_assignments
     from docling_api_spark.operators.sampling import group_split
@@ -276,50 +276,23 @@ def annotate_corpus(
     else:
         base = base.withColumn("domain_drop", F.lit(False))
 
-    # B) exact dedup over quality+domain survivors: ONE content groupBy
-    # produces the min-id keeper, the keeper's text, and the copy count
-    # per distinct content. min_by carries the representative text
-    # INSIDE the partial agg (one candidate text per content hash per
-    # map task — a crawl's 10⁶-copy boilerplate page crosses the wire
-    # once per input partition), so the corpus text never shuffles by
-    # itself. Materialized once (eager localCheckpoint): it feeds the
-    # minhash signature, both sides of jaccard_verify, the keeper
-    # filter, and the per-content assembly join — AQE submits those
-    # consumer stages concurrently, so a lazily-shared node would race
-    # and recompute.
+    # B) exact dedup over quality+domain survivors: one content groupBy
+    # on the _sha base already carries gives the min-id keeper, its text
+    # and the copy count per distinct content (exact_representatives).
     gated = base.filter("ok_quality and not domain_drop")
-    keepers = (
-        gated.select(id_col, "_sha", "extracted_text")
-        .groupBy("_sha")
-        .agg(
-            F.min(id_col).alias("exact_keeper"),
-            F.min_by("extracted_text", F.col(id_col))
-            .alias("extracted_text"),
-            F.count(F.lit(1)).alias("_n_copies"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    keepers = exact_representatives(gated, id_col, "extracted_text", "_sha")
 
-    # C) near-dup clustering over the exact REPRESENTATIVES only —
-    # never the corpus. Every byte-identical member is connected to its
-    # keeper by construction and each keeper is its group's MIN id, so
+    # C) near-dup clustering over the exact REPRESENTATIVES only, never
+    # the corpus (near_duplicate_pairs). Every byte-identical member
+    # connects to its keeper and each keeper is its group's MIN id, so
     # the min-label CC of the full graph (exact stars + verified near
     # pairs, what minhash_near_duplicates emits) equals the CC of the
-    # representative-pair graph propagated through the keeper map: a
-    # component's min node id = the min over its representatives. The
-    # previous shape ran CC over the star edges too — an O(corpus)-edge
-    # iteration (every duplicate doc contributed a star edge, each CC
-    # round shuffling the whole id space); this one iterates over the
-    # verified pairs among DISTINCT contents and propagates with one
-    # (AQE-broadcast when small) join. Measured at 16M docs / 3200x
-    # duplication it removes every corpus-sized CC shuffle from the DAG.
-    reps = keepers.select(
-        F.col("exact_keeper").alias(id_col), "extracted_text")
-    rep_edges = jaccard_verify(
-        reps,
-        lsh_candidate_pairs(
-            minhash_signature(reps, id_col, "extracted_text"), id_col),
-        id_col, "extracted_text", near_threshold,
+    # representative-pair graph propagated through the keeper map. CC
+    # over the star edges too would iterate over O(corpus) edges, each
+    # round shuffling the whole id space (measured at 16M docs / 3200x
+    # duplication); here it iterates over pairs among DISTINCT contents.
+    rep_edges = near_duplicate_pairs(
+        keepers, id_col, "extracted_text", near_threshold
     ).select("id_a", "id_b")
     rep_clusters = cluster_assignments(rep_edges, id_alias="_rep").select(
         "_rep", F.col("cluster_id").alias("_rep_cluster"))
@@ -334,12 +307,12 @@ def annotate_corpus(
     # sized shuffles beyond the keeper groupBy itself.
     content_info = (
         keepers.join(
-            rep_clusters, F.col("exact_keeper") == F.col("_rep"), "left")
+            rep_clusters, F.col(id_col) == F.col("_rep"), "left")
         .select(
-            "_sha", "exact_keeper",
+            "_sha", F.col(id_col).alias("exact_keeper"),
             F.coalesce(
                 F.col("_rep_cluster"),
-                F.when(F.col("_n_copies") > 1, F.col("exact_keeper")),
+                F.when(F.col("n_copies") > 1, F.col(id_col)),
             ).alias("cluster_id"),
         )
     )
@@ -351,7 +324,7 @@ def annotate_corpus(
     # unclustered reps + cluster-leading reps, read straight off the
     # (distinct-contents-sized) keeper frame — no corpus join.
     dedup_keepers = (
-        reps.join(rep_clusters, F.col(id_col) == F.col("_rep"), "left")
+        keepers.join(rep_clusters, F.col(id_col) == F.col("_rep"), "left")
         .filter(
             F.col("_rep_cluster").isNull()
             | (F.col("_rep_cluster") == F.col(id_col))

@@ -208,8 +208,11 @@ def compact(spark: SparkSession, output_dir: str,
     rerun is idempotent. Must not race an in-flight extraction run.
     """
     manifest = Manifest(output_dir)
+    n_buckets = len(manifest.committed_buckets())
+    if n_buckets == 0:
+        # nothing committed: reserve no run id (no lease in the manifest)
+        return {"run_id": None, "rows": 0, "buckets": []}
     run_id = manifest.next_run_id()
-    n_buckets = max(len(manifest.committed_buckets()), 1)
     for_write = _salted_bucket_write(committed_view(spark, output_dir),
                                      n_buckets * files_per_bucket,
                                      files_per_bucket)

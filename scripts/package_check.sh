@@ -55,16 +55,22 @@ assert c["rows"] == s["rows"] and c["vacuumed"] == [f"run_id={s['run_id']}"], c
 print("maintenance package check OK:", len(rows), "status rows,", c)
 EOF
 
-# status on a fresh output dir (no run yet, so no lineage) exits 0 and
-# shows no data rows
+# status and compact on a fresh output dir (no run yet, so no lineage
+# and nothing committed) exit 0: status shows no data rows, compact
+# reserves no run id and reports it as null
 mkdir "$WORK/fresh"
 FRESH=$(spark-submit --master 'local[4]' --py-files "$WORK/das.zip" \
       docling_api_spark/cli.py status --output "$WORK/fresh" 2>/dev/null)
+FRESH_COMPACT=$(spark-submit --master 'local[4]' --py-files "$WORK/das.zip" \
+      docling_api_spark/cli.py compact --output "$WORK/fresh" 2>/dev/null | tail -1)
 python - <<EOF
+import json
 header, *rows = [line for line in '''$FRESH'''.splitlines()
                  if line.startswith("|")]
 assert "partition_id" in header and rows == [], '''$FRESH'''
-print("fresh status package check OK: no rows")
+c = json.loads('''$FRESH_COMPACT''')
+assert c == {"run_id": None, "rows": 0, "buckets": []}, c
+print("fresh status/compact package check OK: no rows,", c)
 EOF
 
 # the corpus surface ships through the same zip (exercises the operator
@@ -89,6 +95,25 @@ f = json.loads('''$FUNNEL''')
 assert f["n_input"] >= f["n_extracted"] >= f["n_quality"] >= f["n_kept"] > 0, f
 assert f["n_kept"] == f["n_train"] + f["n_val"] + f["n_test"], f
 print("corpus package check OK:", f["n_kept"], "kept,", f["n_chunks"], "chunks")
+EOF
+
+# the dedup index ships through the same zip: the first run commits one
+# row per distinct content; a rerun commits nothing and reports each
+# extra byte-identical copy as one exact match (no NULL text in docs)
+DEDUP_INDEX () {
+    spark-submit --master 'local[4]' --py-files "$WORK/das.zip" \
+        docling_api_spark/cli.py dedup-index --input "$WORK/docs" \
+        --index "$WORK/sigidx" 2>/dev/null | tail -1
+}
+D1=$(DEDUP_INDEX); D2=$(DEDUP_INDEX); echo "$D1"; echo "$D2"
+python - <<EOF
+import json
+d1, d2 = json.loads('''$D1'''), json.loads('''$D2''')
+assert d1["committed"] and d1["index_version"] == 0, d1
+assert d1["index_rows"] == d1["n_input_distinct"], d1
+assert d2["committed"] is False and d2["n_added"] == 0, d2
+assert d2["matches"]["exact"] == d2["n_input"] - d2["n_input_distinct"], d2
+print("dedup-index package check OK:", d1["index_rows"], "index rows")
 EOF
 
 # the streaming curation gate ships through the same zip: an

@@ -404,6 +404,40 @@ def test_empty_input_run_is_graceful(spark, tmp_path):
     assert committed_view(spark, str(out)).count() == 0
 
 
+def test_compact_with_nothing_committed(spark, transcripts, tmp_path,
+                                        monkeypatch):
+    """compact on an output with no committed bucket — a fresh dir, and
+    one whose first run crashed before its commit — is a no-op that
+    reserves no run id: it returns run_id None and leaves run_counter
+    and the in-flight leases as they were."""
+    from docling_api_spark.plans.checkpoint import Manifest
+    from docling_api_spark.plans.pipeline import compact, run_extraction
+
+    fresh = str(tmp_path / "fresh")
+    assert compact(spark, fresh) == {"run_id": None, "rows": 0,
+                                     "buckets": []}
+    assert Manifest(fresh)._read()["run_counter"] == 0
+    assert Manifest(fresh)._read()["inflight"] == {}
+
+    crashed = str(tmp_path / "crashed")
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("injected crash before commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(Manifest, "commit", crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            run_extraction(spark, transcripts, crashed, n_buckets=4)
+    before = Manifest(crashed)._read()
+    assert before["run_counter"] == 1 and list(before["inflight"]) == [
+        "run-0000"]
+    assert compact(spark, crashed) == {"run_id": None, "rows": 0,
+                                       "buckets": []}
+    after = Manifest(crashed)._read()
+    assert after["run_counter"] == before["run_counter"]
+    assert after["inflight"] == before["inflight"]
+
+
 def test_lineage_metrics(spark, transcripts, tmp_path):
     """North rule: per-partition lineage with rows in/out + error counts
     + pages + credits (usage_records analog)."""
@@ -725,3 +759,27 @@ def test_dedup_index_drift_and_first_run_report(spark, tmp_path):
     # the drifted content is NOT committed (id already present) — the
     # report is the signal; re-ingest under a new id commits it
     assert s2["n_added"] == 0 and s2["committed"] is False
+
+
+def test_dedup_index_repeated_rows_and_null_text(spark, tmp_path):
+    """The index holds one row per distinct non-NULL content: a repeated
+    (doc_id, text) input row is one index row, a NULL-text doc is not
+    indexed, and a later byte-identical doc reports exactly one exact
+    match (not one per repeated input row)."""
+    from docling_api_spark.plans.dedup_index import load_index, update_index
+
+    t = " ".join(f"alpha{i}" for i in range(30))
+    u = " ".join(f"beta{i}" for i in range(30))
+    b1 = spark.createDataFrame(
+        [(1, t), (1, t), (2, u), (3, None)], "doc_id long, text string")
+    idx_dir = str(tmp_path / "idx")
+    s1 = update_index(spark, b1, idx_dir, threshold=0.5)
+    assert s1["n_input"] == 4
+    assert s1["n_input_distinct"] == s1["index_rows"] == 2
+    index, _ = load_index(spark, idx_dir)
+    assert sorted(r["doc_id"] for r in index.collect()) == [1, 2]
+
+    b2 = spark.createDataFrame([(10, t)], "doc_id long, text string")
+    s2 = update_index(spark, b2, idx_dir, threshold=0.5)
+    assert s2["matches"]["exact"] == 1
+    assert s2["matches"]["docs_matched"] == 1
