@@ -110,7 +110,6 @@ def main(argv: list[str] | None = None) -> None:
     s.add_argument("--output", required=True)
     c = sub.add_parser("compact")
     c.add_argument("--output", required=True)
-    c.add_argument("--files-per-bucket", type=int, default=1)
     c.add_argument("--vacuum", action="store_true",
                    help="delete orphaned run dirs after compaction "
                         "(in-flight runs are leased at id reservation and "
@@ -280,7 +279,7 @@ def main(argv: list[str] | None = None) -> None:
     elif args.cmd == "compact":
         from docling_api_spark.plans.pipeline import compact, vacuum
 
-        summary = compact(spark, args.output, args.files_per_bucket)
+        summary = compact(spark, args.output)
         if args.vacuum:
             summary["vacuumed"] = vacuum(args.output, force=args.force)
         print(json.dumps(summary))

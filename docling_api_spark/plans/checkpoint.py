@@ -6,10 +6,13 @@ jars are not in this sandbox (documented substitution, SURVEY.md §7.3.3),
 so snapshots are emulated deterministically:
 
 - ``manifest.json`` lists committed (run_id, bucket) pairs (atomic
-  tmp+rename write). Data files live under ``data/run_id=R/bucket=B/``;
-  a killed run leaves the previous manifest intact, so its partial data
-  files belong to a (run_id, bucket) pair that was never committed and
-  are invisible to ``committed_view`` — the same way Iceberg orphans
+  tmp+rename write). A run's data files sit directly in
+  ``data/run_id=R/``, one per write task, with ``bucket`` a column in
+  them; older outputs also hold runs in ``data/run_id=R/bucket=B/`` dirs,
+  which ``committed_view`` still reads. A killed run leaves the previous
+  manifest intact, so its partial data files belong to a (run_id,
+  bucket) pair that was never committed and are invisible to
+  ``committed_view`` — the same way Iceberg orphans
   uncommitted data files. The resume then reprocesses those buckets
   under a new run_id, with no double counting.
 - This module owns that layout (``Manifest.run_dir``/``run_dirs``, and
@@ -235,23 +238,22 @@ class Manifest:
 
 
 def write_run(spark, output_dir: str, df, run_id: str):
-    """Append ``df`` as run ``run_id``, partitioned run_id/bucket, and
-    return ``(schema, written)``: the write schema (recorded in the
-    manifest at commit) and a reader over this run's own data dir only.
-    Partition discovery never lists another run's dir, so the read-back
-    cost does not grow with the output's run history. A zero-row run
-    writes no dir and reads back as an empty frame with that schema."""
+    """Write ``df`` as run ``run_id`` and return ``(schema, written)``: the
+    write schema (recorded in the manifest at commit) and a reader over
+    this run's own data dir only. Each write task puts its file straight
+    into ``data/run_id=<id>/`` — ``bucket`` stays a data column, so there
+    is no exchange, no per-bucket dir, and the commit's ``_temporary``
+    staging stays inside the run's own dir. The read-back never lists
+    another run's dir, so its cost does not grow with the output's run
+    history; a zero-row run reads back as an empty frame."""
     from pyspark.sql import functions as F
 
-    to_write = df.withColumn("run_id", F.lit(run_id))
-    schema = to_write.schema
-    data_dir = f"{output_dir}/data"
-    to_write.write.mode("append").partitionBy("run_id", "bucket").parquet(data_dir)
-    run_dir = Manifest(output_dir).run_dir(run_id)
-    if not run_dir.exists():
-        return schema, spark.createDataFrame([], schema)
-    return schema, (spark.read.schema(schema).option("basePath", data_dir)
-                    .parquet(str(run_dir)))
+    data = df.drop("run_id")
+    schema = data.withColumn("run_id", F.lit(run_id)).schema
+    run_dir = str(Manifest(output_dir).run_dir(run_id))
+    data.write.mode("append").parquet(run_dir)
+    return schema, (spark.read.schema(schema)
+                    .option("basePath", f"{output_dir}/data").parquet(run_dir))
 
 
 def write_lineage(output_dir: str, run_id: str, rows) -> None:
@@ -278,10 +280,14 @@ def committed_view(spark, output_dir: str):
     """Snapshot-isolated read: only manifest-committed (run_id, bucket)
     pairs are visible. Only the committed runs' own dirs are listed, so
     orphaned and retired runs' dirs are never even listed and the cost
-    does not grow with the output's run history; the partition filter
-    drops any bucket a run wrote but did not commit."""
+    does not grow with the output's run history; the bucket filter drops
+    any bucket a run wrote but did not commit. Runs written before runs
+    went flat keep ``bucket=B/`` dirs; Spark discovers one partition
+    layout per read, so those runs and the flat ones are read apart and
+    unioned by name, columns ordered as the bucket-dir layout reads."""
     from functools import reduce
 
+    from pyspark.sql import DataFrame
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -291,9 +297,8 @@ def committed_view(spark, output_dir: str):
     # the recorded write schema reads a file-less (zero-row) dir as empty
     # instead of failing inference; pre-schema manifests infer as before
     schema = T.StructType.fromJson(json.loads(schema_json)) if schema_json else None
-    # a zero-row run commits buckets but writes no dir
-    run_dirs = [str(d) for d in (m.run_dir(r["run_id"]) for r in runs)
-                if d.exists()]
+    # a zero-row run written in the bucket-dir layout has no dir
+    run_dirs = [d for d in (m.run_dir(r["run_id"]) for r in runs) if d.exists()]
     if not run_dirs:
         # no committed rows: return an empty frame WITHOUT touching
         # the data path — on a fresh output dir the parquet reader would
@@ -304,8 +309,13 @@ def committed_view(spark, output_dir: str):
         if data.exists():
             return spark.read.parquet(f"{output_dir}/data").limit(0)
         return spark.createDataFrame([], T.StructType([]))
-    reader = spark.read.schema(schema) if schema else spark.read
-    df = reader.option("basePath", f"{output_dir}/data").parquet(*run_dirs)
+    reader = (spark.read.schema(schema) if schema else spark.read).option(
+        "basePath", f"{output_dir}/data")
+    by_layout: dict[bool, list[str]] = {}
+    for d in run_dirs:
+        by_layout.setdefault(any(d.glob("bucket=*")), []).append(str(d))
+    df = reduce(DataFrame.unionByName,
+                (reader.parquet(*dirs) for dirs in by_layout.values()))
     cond = reduce(
         lambda a, b: a | b,
         [
@@ -313,4 +323,5 @@ def committed_view(spark, output_dir: str):
             for r in runs
         ],
     )
-    return df.filter(cond)
+    keys = ("run_id", "bucket")
+    return df.filter(cond).select(*[c for c in df.columns if c not in keys], *keys)

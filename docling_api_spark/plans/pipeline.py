@@ -1,5 +1,5 @@
-"""The production extraction pipeline: scan -> extract -> bucketed write
-+ lineage, resumable from a committed manifest.
+"""The production extraction pipeline: scan -> extract -> write +
+lineage, resumable from a committed manifest.
 
 Spark restatement of the reference's flagship request path (SURVEY.md
 §3.1): the async-job lifecycle (reference api/routes/documents.py:255-339)
@@ -11,15 +11,14 @@ uncommitted units (resume, north rule).
 Scale design:
 - **Work unit / partition key**: ``bucket = pmod(xxhash64(conv_id), B)``
   conversation-level buckets make resume tracking O(B), not O(rows).
-- **No input shuffle**: extraction is per-turn independent and runs
-  straight off the parquet/Iceberg scan splits; the only exchange in the
-  job moves the (smaller) extracted output into the bucketed write
-  layout. Lineage is aggregated from the written files (verify-what-
-  committed), touching only metric columns, and once the commit has
-  landed it is written with pyarrow as one parquet file per run
+- **No exchange**: extraction is per-turn independent and runs
+  straight off the parquet/Iceberg scan splits, and each extraction task
+  writes its output as one file into the run's dir (``bucket`` is a
+  column, not a dir), so scan, extract and write are one Spark stage.
+  Lineage is aggregated from the written files (verify-what-committed),
+  touching only metric columns, and once the commit has landed it is
+  written with pyarrow as one parquet file per run
   (``lineage/part-<run_id>.parquet``) — no Spark job.
-- **Write salting**: the write shuffle salts on ``(conv_id, turn_idx)``
-  (``_wsalt``) to bound files-per-bucket without hot write tasks.
 """
 
 from __future__ import annotations
@@ -45,21 +44,6 @@ _TRASH_MIN_AGE = 3600.0  # seconds
 def with_bucket(df: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
     return df.withColumn(
         "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
-    )
-
-
-def _salted_bucket_write(df: DataFrame, num_partitions: int,
-                         files_per_bucket: int) -> DataFrame:
-    """Shared write-shuffle shape for run_extraction and compact: salt on
-    (conv_id, turn_idx) so each bucket fans out over ~files_per_bucket
-    files instead of hashing whole onto one task."""
-    return (
-        df.withColumn(
-            "_wsalt",
-            F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(files_per_bucket)),
-        )
-        .repartition(num_partitions, "bucket", "_wsalt")
-        .drop("_wsalt")
     )
 
 
@@ -107,7 +91,6 @@ def run_extraction(
     output_dir: str,
     snapshot_id: str = "snap-0",
     n_buckets: int = DEFAULT_BUCKETS,
-    num_partitions: int | None = None,
     limit_buckets: int | None = None,
     options=None,
 ) -> dict:
@@ -143,24 +126,18 @@ def run_extraction(
     else:
         pending_df = df.filter(F.col("bucket").isin(pending))
 
-    # Extraction runs straight off the source scan — NO pre-shuffle: it is
-    # per-turn independent, and shuffling the raw payload rows first costs
-    # 2-3x the scan->extract pipeline (the scan's split sizing,
-    # spark.sql.files.maxPartitionBytes, already load-balances; a heavy
+    # Extraction runs straight off the source scan and each task writes
+    # its own output file — NO shuffle on either side: extraction is
+    # per-turn independent, and the scan's split sizing
+    # (spark.sql.files.maxPartitionBytes) already load-balances; a heavy
     # conversation is just consecutive rows, split across scan partitions
-    # like any other rows).
+    # like any other rows. Resume is tracked by the manifest's committed
+    # (run_id, bucket) pairs, so no file needs to hold one bucket only.
     extracted = extract_text_column(pending_df, text_col="text",
                                     options=options)
 
-    # The only shuffle moves the *extracted* output (boilerplate already
-    # stripped — smaller than the input) into the bucketed write layout;
-    # _wsalt bounds files-per-bucket while keeping write parallelism.
-    parts = num_partitions or spark.sparkContext.defaultParallelism * 2
-    files_per_bucket = max(1, parts // n_buckets) * 2
-    for_write = _salted_bucket_write(extracted, parts, files_per_bucket)
-
     run_id = manifest.next_run_id()
-    data_schema, written = write_run(spark, output_dir, for_write, run_id)
+    data_schema, written = write_run(spark, output_dir, extracted, run_id)
 
     # lineage from the data actually written (verify-what-committed): ONE
     # read-back pass over this run's own dir, aggregated straight into
@@ -195,12 +172,12 @@ def run_extraction(
     return {"run_id": run_id, "buckets": pending, "rows": rows, "resumed": bool(done)}
 
 
-def compact(spark: SparkSession, output_dir: str,
-            files_per_bucket: int = 1) -> dict:
-    """Rewrite all committed data into one fresh run with
-    ``files_per_bucket`` files per bucket — the Iceberg
-    rewrite-data-files analog. Every resume appends files to its buckets,
-    so a long-lived output accretes small files; compaction folds them.
+def compact(spark: SparkSession, output_dir: str) -> dict:
+    """Rewrite all committed data into one fresh run — the Iceberg
+    rewrite-data-files analog. Every resume adds a run whose files are
+    sized by its own, often small, share of the input, so a long-lived
+    output accretes small files; compaction reads the committed view with
+    no exchange, and the scan's split packing folds them into fewer.
 
     Safety: the new run is fully written BEFORE the manifest atomically
     swaps the runs list, and the committed-bucket set never changes, so a
@@ -208,15 +185,12 @@ def compact(spark: SparkSession, output_dir: str,
     rerun is idempotent. Must not race an in-flight extraction run.
     """
     manifest = Manifest(output_dir)
-    n_buckets = len(manifest.committed_buckets())
-    if n_buckets == 0:
+    if not manifest.committed_buckets():
         # nothing committed: reserve no run id (no lease in the manifest)
         return {"run_id": None, "rows": 0, "buckets": []}
     run_id = manifest.next_run_id()
-    for_write = _salted_bucket_write(committed_view(spark, output_dir),
-                                     n_buckets * files_per_bucket,
-                                     files_per_bucket)
-    _, written = write_run(spark, output_dir, for_write, run_id)
+    _, written = write_run(spark, output_dir, committed_view(spark, output_dir),
+                           run_id)
     rows = written.count()
     manifest.replace_runs(run_id, snapshot_id=f"compact-{run_id}",
                           expect_data=rows > 0)

@@ -55,9 +55,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # list partition dirs in this process, never in a Spark job:
         # outputs live on the local filesystem the manifest's flock
-        # already requires, and listing a run's 64 bucket dirs with 64
-        # tasks costs more than listing them here (the default threshold
-        # is 32 dirs)
+        # already requires, and listing the committed run dirs (or an
+        # older output's bucket=B dirs, 64 per run) with one task per dir
+        # costs more than listing them here (the default threshold is 32
+        # dirs)
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
                 str(2**31 - 1))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))

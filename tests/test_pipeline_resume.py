@@ -42,17 +42,15 @@ def test_partial_then_resume_equals_single_shot(spark, transcripts, tmp_path,
     single = tmp_path / "single"
     split = tmp_path / "split"
 
-    s1 = run_extraction(spark, transcripts, str(single), n_buckets=8,
-                        num_partitions=8)
+    s1 = run_extraction(spark, transcripts, str(single), n_buckets=8)
     assert len(s1["buckets"]) == 8 and not s1["resumed"]
 
     # partial run: only 3 buckets committed (simulates a killed run)
     p1 = run_extraction(spark, transcripts, str(split), n_buckets=8,
-                        num_partitions=8, limit_buckets=3)
+                        limit_buckets=3)
     assert len(p1["buckets"]) == 3
     # resume: picks up ONLY the remaining 5
-    p2 = run_extraction(spark, transcripts, str(split), n_buckets=8,
-                        num_partitions=8)
+    p2 = run_extraction(spark, transcripts, str(split), n_buckets=8)
     assert p2["resumed"] and len(p2["buckets"]) == 5
     assert set(p1["buckets"]).isdisjoint(p2["buckets"])
     # idempotent third run: nothing to do
@@ -65,7 +63,7 @@ def test_partial_then_resume_equals_single_shot(spark, transcripts, tmp_path,
     history = tmp_path / "history"
     for limit in (2, 3):
         run_extraction(spark, transcripts, str(history), n_buckets=8,
-                       num_partitions=8, limit_buckets=limit)
+                       limit_buckets=limit)
     extract_text_column(with_bucket(transcripts, 8)).withColumn(
         "run_id", F.lit("run-dead")
     ).write.mode("append").partitionBy("run_id", "bucket").parquet(
@@ -80,8 +78,7 @@ def test_partial_then_resume_equals_single_shot(spark, transcripts, tmp_path,
 
     with monkeypatch.context() as m:
         m.setattr(pipeline, "write_run", spy_write_run)
-        h = run_extraction(spark, transcripts, str(history), n_buckets=8,
-                           num_partitions=8)
+        h = run_extraction(spark, transcripts, str(history), n_buckets=8)
     assert h["resumed"] and len(h["buckets"]) == 3 and len(read_backs) == 1
     files = read_backs[0].inputFiles()
     assert files and all(f"/data/run_id={h['run_id']}/" in f for f in files)
@@ -208,11 +205,11 @@ def test_job_status_on_fresh_dir(spark, tmp_path):
 
 
 def test_run_tail_lists_and_writes_lineage_without_jobs(spark, tmp_path):
-    """A run whose dir holds more than 32 bucket dirs (Spark's default
-    parallel partition-discovery threshold) launches four Spark jobs:
-    two for the bucketed write and two for the lineage read-back.
-    Listing the run's dir and writing the lineage file happen in this
-    process, so neither adds a job."""
+    """A run launches three Spark jobs: one single-stage job that scans,
+    extracts and writes (no exchange), and two for the lineage
+    read-back. Each write task puts its file straight into the run's dir,
+    with no bucket=B dirs. Listing the run's dir and writing the lineage
+    file happen in this process, so neither adds a job."""
     from docling_api_spark.gen import transcripts_df
     from docling_api_spark.plans.pipeline import run_extraction
 
@@ -227,8 +224,12 @@ def test_run_tail_lists_and_writes_lineage_without_jobs(spark, tmp_path):
     # job status reaches the tracker through the async listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     run_dir = out / "data" / f"run_id={s['run_id']}"
-    assert len(list(run_dir.glob("bucket=*"))) > 32
-    assert len(sc.statusTracker().getJobIdsForGroup("run-tail-jobs")) == 4
+    assert list(run_dir.glob("*.parquet"))
+    assert not list(run_dir.glob("bucket=*"))
+    tracker = sc.statusTracker()
+    jobs = sorted(tracker.getJobIdsForGroup("run-tail-jobs"))
+    assert len(jobs) == 3
+    assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1  # the write
 
 
 def test_lineage_is_one_file_per_run(spark, transcripts, tmp_path):
@@ -364,23 +365,6 @@ def test_resume_rejects_different_bucketing(spark, transcripts, tmp_path):
     assert s["resumed"] and s["buckets"] == [2, 3]
 
 
-def test_compact_files_per_bucket(spark, transcripts, tmp_path):
-    """files_per_bucket > 1 must actually fan each bucket's rows out over
-    that many files (salted write shuffle, not bucket-only hashing)."""
-    import pathlib
-
-    from docling_api_spark.plans.pipeline import compact, run_extraction
-
-    out = tmp_path / "out"
-    run_extraction(spark, transcripts, str(out), n_buckets=2)
-    summary = compact(spark, str(out), files_per_bucket=3)
-    data = pathlib.Path(out) / "data" / f"run_id={summary['run_id']}"
-    per_bucket = [
-        len(list(b.glob("*.parquet"))) for b in sorted(data.glob("bucket=*"))
-    ]
-    assert per_bucket and all(n > 1 for n in per_bucket), per_bucket
-
-
 def test_empty_input_run_is_graceful(spark, tmp_path):
     """A fresh run over a zero-row input must commit (empty) buckets and
     stay readable — no schema-inference crash on the file-less data dir."""
@@ -494,26 +478,36 @@ def test_lineage_schema_evolution(spark, transcripts, tmp_path):
     assert new["n_oversize"].notna().all() and new["n_oversize"].sum() >= 1
 
 
-def test_compact_and_vacuum(spark, transcripts, tmp_path):
+def test_compact_and_vacuum(spark, tmp_path):
     """Compaction folds multi-run small files into one run per the
-    committed set; content identical; vacuum removes orphaned run dirs;
-    a later incremental run still works (no run-id recycling)."""
+    committed set, with fewer files; content identical; vacuum removes
+    orphaned run dirs; a later incremental run still works (no run-id
+    recycling)."""
     import pathlib
 
+    from docling_api_spark.gen import transcripts_df
     from docling_api_spark.plans.checkpoint import Manifest
     from docling_api_spark.plans.pipeline import compact, run_extraction, vacuum
 
     out = tmp_path / "out"
-    # two runs -> files under two run_id dirs
+    # two runs -> one small file per input split under two run_id dirs
+    # (more splits than the session's cores, so the compaction scan packs
+    # several files into each of its splits)
+    transcripts = transcripts_df(spark, N_CONVS, partitions=16)
     run_extraction(spark, transcripts, str(out), n_buckets=8, limit_buckets=3)
     run_extraction(spark, transcripts, str(out), n_buckets=8)
     before = _read_committed(spark, out)
     data = pathlib.Path(out) / "data"
     dirs_before = {d.name for d in data.glob("run_id=*")}
     assert len(dirs_before) == 2
+    files_before = sum(len(list((data / d).glob("*.parquet")))
+                       for d in dirs_before)
 
-    summary = compact(spark, str(out), files_per_bucket=1)
+    summary = compact(spark, str(out))
     assert summary["rows"] == len(before)
+    compacted = data / f"run_id={summary['run_id']}"
+    assert 0 < len(list(compacted.glob("*.parquet"))) < files_before
+    assert not list(compacted.glob("bucket=*"))
     after = _read_committed(spark, out)
     pd.testing.assert_frame_equal(
         before[sorted(before.columns)], after[sorted(after.columns)],
@@ -583,7 +577,7 @@ def test_crash_resume_compact_vacuum_end_to_end(spark, transcripts, tmp_path):
     r = run_extraction(spark, transcripts, str(out), n_buckets=8)
     assert r["resumed"] and r["run_id"] != dead_id
     # compact folds the two committed runs; the orphan stays invisible
-    summary = compact(spark, str(out), files_per_bucket=1)
+    summary = compact(spark, str(out))
     assert summary["rows"] == len(golden)
     # plain vacuum reclaims the retired dirs but spares the leased orphan
     removed = vacuum(str(out))
@@ -603,6 +597,68 @@ def test_crash_resume_compact_vacuum_end_to_end(spark, transcripts, tmp_path):
     pd.testing.assert_frame_equal(
         golden[sorted(golden.columns)], final[sorted(final.columns)],
         check_like=True,
+    )
+
+
+def test_resume_over_bucket_dir_layout(spark, transcripts, tmp_path):
+    """An output whose committed run holds one bucket=B dir per bucket
+    (the layout runs were written in before each write task wrote its
+    file straight into the run dir) resumes, reads, compacts and vacuums
+    under the flat layout: committed_view equals a single-shot run, with
+    the same columns in the same order, and compaction plus vacuum leave
+    one flat run dir with identical content."""
+    import pathlib
+
+    from pyspark.sql import functions as F
+
+    from docling_api_spark.operators.extract import extract_text_column
+    from docling_api_spark.plans.checkpoint import Manifest, committed_view
+    from docling_api_spark.plans.pipeline import (
+        compact,
+        run_extraction,
+        vacuum,
+        with_bucket,
+    )
+
+    single = tmp_path / "single"
+    run_extraction(spark, transcripts, str(single), n_buckets=8)
+    golden = _read_committed(spark, single)
+    columns = committed_view(spark, str(single)).columns
+
+    # a run written and committed in the bucket-dir layout
+    out = tmp_path / "out"
+    m = Manifest(str(out))
+    old_id = m.next_run_id()
+    old = extract_text_column(
+        with_bucket(transcripts, 8).filter(F.col("bucket").isin([0, 1, 2]))
+    ).withColumn("run_id", F.lit(old_id))
+    old.write.mode("append").partitionBy("run_id", "bucket").parquet(
+        f"{out}/data"
+    )
+    m.commit(old_id, "snap-0", [0, 1, 2], data_schema_json=old.schema.json(),
+             expect_data=True, n_buckets=8)
+    assert committed_view(spark, str(out)).columns == columns
+
+    r = run_extraction(spark, transcripts, str(out), n_buckets=8)
+    assert r["resumed"] and r["buckets"] == [3, 4, 5, 6, 7]
+    data = pathlib.Path(out) / "data"
+    assert not list((data / f"run_id={r['run_id']}").glob("bucket=*"))
+    assert committed_view(spark, str(out)).columns == columns
+    pd.testing.assert_frame_equal(
+        golden[sorted(golden.columns)],
+        _read_committed(spark, out)[sorted(golden.columns)],
+    )
+
+    summary = compact(spark, str(out))
+    assert summary["rows"] == len(golden)
+    assert len(vacuum(str(out))) == 2
+    (run_dir,) = data.glob("run_id=*")
+    assert run_dir.name == f"run_id={summary['run_id']}"
+    assert list(run_dir.glob("*.parquet"))
+    assert not list(run_dir.glob("bucket=*"))
+    pd.testing.assert_frame_equal(
+        golden[sorted(golden.columns)],
+        _read_committed(spark, out)[sorted(golden.columns)],
     )
 
 
@@ -635,7 +691,7 @@ def test_vacuum_trash_protocol(spark, transcripts, tmp_path):
     young = trash / "vac-999-2"
     (young / "run_id=run-live").mkdir(parents=True)
 
-    compact(spark, str(out), files_per_bucket=1)
+    compact(spark, str(out))
     removed = vacuum(str(out))
     assert len(removed) == 2  # the two retired pre-compaction runs
     assert not aged.exists()          # aged leftover cleared (phase 0)

@@ -162,8 +162,6 @@ def test_every_tracked_module_compiles_without_warnings():
 TEST_SET_PARAMETERS = {
     # the json / both output formats of the one-row extractor
     "extract_one.options": "tests/test_kernel.py",
-    # resume under a different partition count gives the same output
-    "run_extraction.num_partitions": "tests/test_pipeline_resume.py",
     # a zero grace period never overrides a live run's lease
     "vacuum.grace_seconds": "tests/test_pipeline_resume.py",
     # packing is exact and partition-invariant at any shard count
