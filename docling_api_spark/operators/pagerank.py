@@ -55,18 +55,13 @@ def prepare_edges(edges: DataFrame) -> DataFrame:
     return e
 
 
-def pagerank(edges: DataFrame, n_iter: int = 10, scale: int = RANK_SCALE,
-             cut_lineage: bool = True) -> DataFrame:
+def pagerank(edges: DataFrame, n_iter: int = 10,
+             scale: int = RANK_SCALE) -> DataFrame:
     """(node, rank_scaled, rank): ``rank_scaled`` is the exact long the
     iteration produced (the determinism contract — compare THIS across
     runs/engines); ``rank`` is its single-division float convenience.
     Nodes are distinct(src) ∪ distinct(dst); every node starts at
-    floor(scale/N).
-
-    ``cut_lineage=False`` skips the per-iteration checkpoint, leaving
-    the whole iteration lazily composed — for plan audits only (the
-    branching on ``ranks`` doubles recomputation per round), results
-    are identical."""
+    floor(scale/N)."""
     e = prepare_edges(edges)
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -130,9 +125,7 @@ def pagerank(edges: DataFrame, n_iter: int = 10, scale: int = RANK_SCALE,
             (F.lit(base).cast("long") + dang_term
              + F.coalesce("in_mass", F.lit(0).cast("long")))
             .alias("rank_scaled"),
-        )
-        if cut_lineage:
-            ranks = ranks.localCheckpoint(eager=True)
+        ).localCheckpoint(eager=True)
 
     e.unpersist()
     return ranks.select(

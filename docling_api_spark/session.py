@@ -2,8 +2,8 @@
 
 Local-mode testing uses ``local[N]`` threads; the same configuration
 carries to a real cluster (AQE, Arrow batching, UTC timezone are
-cluster-size independent — shuffle partition count is the one knob that
-scales with executor count).
+cluster-size independent — shuffle partition count, derived from the
+master, is the one setting that scales with executor count).
 """
 
 from __future__ import annotations
@@ -16,14 +16,13 @@ from pyspark.sql import SparkSession
 # halves the Python<->JVM roundtrips vs 2048 (typical batch ≈ 8 MB).
 # Batches are bounded by rows only: at the CLI's --max-payload-chars
 # 1048576 one batch can carry ~4 GiB of text, past Arrow's int32 string
-# offsets — ROADMAP item 4 adds the byte bound.
+# offsets — ROADMAP item 8 (byte-bounded batches) adds the byte bound.
 ARROW_BATCH_ROWS = 4096
 
 
 def get_spark(
     app_name: str = "docling_api_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults.
@@ -34,10 +33,9 @@ def get_spark(
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
                               len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        # local[N] → N; "local[*]" → os cpu count
-        inner = master.split("[")[-1].rstrip("]") if "[" in master else str(cpus)
-        shuffle_partitions = os.cpu_count() or 8 if inner == "*" else int(inner)
+    # local[N] → N; "local[*]" → os cpu count
+    inner = master.split("[")[-1].rstrip("]") if "[" in master else str(cpus)
+    shuffle_partitions = os.cpu_count() or 8 if inner == "*" else int(inner)
 
     builder = (
         SparkSession.builder.master(master)

@@ -15,7 +15,7 @@ python - <<EOF
 import sys; sys.path.insert(0, ".")
 from docling_api_spark.session import get_spark
 from docling_api_spark.gen import transcripts_df
-s = get_spark(app_name="pkg-gen", master="local[4]", shuffle_partitions=4)
+s = get_spark(app_name="pkg-gen", master="local[4]")
 transcripts_df(s, 50, partitions=4).write.mode("overwrite").parquet("$WORK/in")
 s.stop()
 EOF
@@ -82,7 +82,7 @@ EOF
 python - <<EOF
 import sys; sys.path.insert(0, ".")
 from docling_api_spark.session import get_spark
-s = get_spark(app_name="pkg-docs", master="local[4]", shuffle_partitions=4)
+s = get_spark(app_name="pkg-docs", master="local[4]")
 d = s.read.parquet("/root/testdata/sf0.001/documents.parquet").select("doc_id", "text")
 docs = d.filter("doc_id % 10 <> 8")
 docs.write.mode("overwrite").parquet("$WORK/docs")
@@ -136,7 +136,7 @@ python - <<EOF
 import sys; sys.path.insert(0, ".")
 from pyspark.sql import functions as F
 from docling_api_spark.session import get_spark
-s = get_spark(app_name="pkg-stream-gen", master="local[4]", shuffle_partitions=4)
+s = get_spark(app_name="pkg-stream-gen", master="local[4]")
 d = s.read.parquet("/root/testdata/sf0.001/documents.parquet").select("doc_id", "text")
 d.withColumn("label", F.when(F.col("doc_id") % 3 != 0, "good").otherwise("junk")) \
     .write.mode("overwrite").parquet("$WORK/gate_seed")
@@ -153,7 +153,7 @@ G1=$(GATE); echo "$G1"
 python - <<EOF
 import sys; sys.path.insert(0, ".")
 from docling_api_spark.session import get_spark
-s = get_spark(app_name="pkg-stream-gen2", master="local[4]", shuffle_partitions=4)
+s = get_spark(app_name="pkg-stream-gen2", master="local[4]")
 d = s.read.parquet("/root/testdata/sf0.001/documents.parquet").select("doc_id", "text")
 d.filter("doc_id >= 200 AND doc_id < 320").coalesce(1).write.mode("append").parquet("$WORK/gate_in")
 s.stop()

@@ -18,7 +18,7 @@ TESTDATA = pathlib.Path("/root/testdata")
 def spark():
     from docling_api_spark.session import get_spark
 
-    s = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark(app_name="tests", master="local[8]")
     yield s
     s.stop()
 
