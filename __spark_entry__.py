@@ -502,12 +502,15 @@ def fn_string_family(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup via content-hash groupBy (all groups reported)."""
+    """Exact dedup via content-hash groupBy (all groups reported), by the
+    one keeper rule; its unread text carry is pruned from the exchange."""
+    from docling_api_spark.operators.dedup import exact_representatives
+
     d = _t(spark, sf_dir, "documents")
-    return (
-        d.groupBy(F.sha2(F.col("text"), 256).alias("content_hash"))
-        .agg(F.min("doc_id").alias("keeper_id"), F.count(F.lit(1)).alias("n_copies"))
-    )
+    return exact_representatives(
+        d.withColumn("content_hash", F.sha2(F.col("text"), 256)),
+        "doc_id", "text", "content_hash",
+    ).select("content_hash", F.col("doc_id").alias("keeper_id"), "n_copies")
 
 
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -566,7 +569,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
     )
-    return embedding_near_duplicates(emb, dim=64, threshold=0.40).orderBy("id_a", "id_b")
+    return embedding_near_duplicates(emb, threshold=0.40).orderBy("id_a", "id_b")
 
 
 def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -643,8 +646,8 @@ def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("hits") / F.col("total") >= 0.85).alias("ok"),
         )
 
-    lsh = lsh_cosine_topk(emb, queries, dim=64, k=3)
-    ivf = ivf_cosine_topk(emb, queries, dim=64, k=3)
+    lsh = lsh_cosine_topk(emb, queries, k=3)
+    ivf = ivf_cosine_topk(emb, queries, k=3)
     return row("ivf", ivf).unionByName(row("lsh", lsh)).orderBy("method")
 
 
@@ -955,6 +958,7 @@ def corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 '0x'-cast idiom. Shape at 100 TB: one extraction map stage, one
     codegen projection for C4+quality+split, one sha-keyed partial-agg
     groupBy + join for the keepers — no other shuffle."""
+    from docling_api_spark.operators.dedup import exact_representatives
     from docling_api_spark.operators.extract import extract_text_column
     from docling_api_spark.operators.heuristics import c4_document_flags
     from docling_api_spark.operators.sampling import group_split
@@ -983,10 +987,11 @@ def corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann = group_split(ann, "source")
     # materialized once: the frame feeds BOTH the keeper agg and the
     # join back (the extraction subtree would otherwise run twice)
-    ann = ann.localCheckpoint(eager=True)
-    keepers = ann.groupBy(F.sha2("page", 256).alias("_sha")).agg(
-        F.min("doc_id").alias("_keeper"))
-    out = ann.withColumn("_sha", F.sha2("page", 256)).join(keepers, "_sha")
+    ann = ann.localCheckpoint(eager=True).withColumn(
+        "_sha", F.sha2("page", 256))
+    keepers = exact_representatives(ann, "doc_id", "page", "_sha").select(
+        "_sha", F.col("doc_id").alias("_keeper"))
+    out = ann.join(keepers, "_sha")
     gate_q = F.col("quality_score") >= 0.6
     is_keeper = F.col("doc_id") == F.col("_keeper")
     return out.select(

@@ -8,7 +8,8 @@ friendly). No Python in any hot path.
 
 One place per rule: ``exact_representatives`` is the exact-duplicate
 collapse and ``near_duplicate_pairs`` the near-duplicate pass over its
-representatives; every dedup path here and in plans/ goes through them.
+representatives; every dedup path here, in plans/ and in the
+``__spark_entry__`` registry goes through them.
 
 Scale notes (100 TB): the LSH pattern shuffles one (band, bucket) row per
 doc per band — O(B·N) small rows, not O(N²) pairs; candidate pairs are
@@ -210,21 +211,13 @@ def exact_representatives(df: DataFrame, id_col: str, text_col: str,
     a content crosses the exchange at most once per map task and the
     text never shuffles by itself (joining texts back to keepers on the
     hash measured 2x the near-dup stage's wall at 4M docs / 800x
-    duplication). Materialized once (eager localCheckpoint): every
-    caller feeds it to several consumers whose stages AQE submits
-    concurrently, so a lazily-shared node would race and recompute.
-    localCheckpoint, not persist(): its blocks are freed when the frame
-    is garbage-collected, while persist() pins a CacheManager entry for
-    the session. Tradeoff: losing an executor fails the query instead of
-    recomputing; in-query recovery would need reliable checkpoint()."""
-    return (
-        df.groupBy(sha_col)
-        .agg(
-            F.min(id_col).alias(id_col),
-            F.min_by(F.col(text_col), F.col(id_col)).alias(text_col),
-            F.count(F.lit(1)).alias("n_copies"),
-        )
-        .localCheckpoint(eager=True)
+    duplication). Lazy: a plan that feeds the result to several
+    consumers materializes it where they share it (annotate_corpus,
+    minhash_near_duplicates and signature_index each checkpoint theirs)."""
+    return df.groupBy(sha_col).agg(
+        F.min(id_col).alias(id_col),
+        F.min_by(F.col(text_col), F.col(id_col)).alias(text_col),
+        F.count(F.lit(1)).alias("n_copies"),
     )
 
 
@@ -260,7 +253,12 @@ def minhash_near_duplicates(df: DataFrame,
         F.col("doc_id"), F.col("text"),
         F.sha2(F.col("text"), 256).alias("_h"),
     )
-    reps = exact_representatives(hashed, "doc_id", "text", "_h")
+    # reps feeds the star edges, the minhash and the verify join-back,
+    # which Catalyst prunes to different aggregates: lazy, each would
+    # rescan the input and re-hash every text, so materialize it once.
+    reps = exact_representatives(
+        hashed, "doc_id", "text", "_h"
+    ).localCheckpoint(eager=True)
     # Star edges need only (id, hash): the corpus is re-derived from the
     # caller's frame (typically an already-materialized upstream
     # checkpoint) and shuffles 40 bytes/row, never the text. Two reads
@@ -368,7 +366,11 @@ def signature_index(df: DataFrame, id_col: str = "doc_id",
         F.col(id_col), F.col(text_col),
         F.sha2(F.col(text_col), 256).alias("content_sha"),
     )
-    reps = exact_representatives(hashed, id_col, text_col, "content_sha")
+    # materialized once: the (id, sha) side and the minhash side prune
+    # reps to different aggregates, each a rescan + re-hash if lazy
+    reps = exact_representatives(
+        hashed, id_col, text_col, "content_sha"
+    ).localCheckpoint(eager=True)
     sig = minhash_signature(reps, id_col, text_col)
     return reps.select(id_col, "content_sha").join(sig, id_col)
 
@@ -481,5 +483,4 @@ def incremental_near_duplicates(new_df: DataFrame, index: DataFrame,
             ~((F.col("new_id") == F.col("match_id"))
               & (F.col("method") == "exact"))
         )
-        .orderBy("new_id", "match_id")
     )

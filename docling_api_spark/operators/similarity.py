@@ -316,7 +316,7 @@ def lsh_probe_udf():
     return probes
 
 
-def lsh_cosine_topk(df: DataFrame, queries: DataFrame, dim: int,
+def lsh_cosine_topk(df: DataFrame, queries: DataFrame,
                     k: int = 3) -> DataFrame:
     """ANN variant: score only candidates sharing a bucket with the query
     in ANY of the LSH tables. Recall < 1 by construction; the scale path
@@ -361,7 +361,7 @@ def lsh_cosine_topk(df: DataFrame, queries: DataFrame, dim: int,
     return _top_k(scored, k)
 
 
-def embedding_near_duplicates(df: DataFrame, dim: int,
+def embedding_near_duplicates(df: DataFrame,
                               threshold: float = 0.95) -> DataFrame:
     """Embedding-cosine near-dup detection: multi-table LSH self-join
     (pairs only within buckets, deduped across tables), exact cosine
@@ -456,7 +456,7 @@ def _cell_assign_udf(cents: np.ndarray, n_probe: int):
     return assign
 
 
-def ivf_cosine_topk(df: DataFrame, queries: DataFrame, dim: int, k: int = 3,
+def ivf_cosine_topk(df: DataFrame, queries: DataFrame, k: int = 3,
                     n_centroids: int = 16, n_probe: int = 4) -> DataFrame:
     """IVF ANN: corpus vectors live in their single nearest-centroid cell
     (precomputable + partitionable at 100 TB — the scan prunes to probed

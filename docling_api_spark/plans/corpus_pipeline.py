@@ -151,7 +151,7 @@ def annotate_corpus(
     from docling_api_spark.operators.dedup import (
         exact_representatives, near_duplicate_pairs)
     from docling_api_spark.operators.extract import extract_text_column
-    from docling_api_spark.operators.graph import cluster_assignments
+    from docling_api_spark.operators.graph import connected_components
     from docling_api_spark.operators.sampling import group_split
     from docling_api_spark.operators.textstats import with_quality_score
 
@@ -279,8 +279,18 @@ def annotate_corpus(
     # B) exact dedup over quality+domain survivors: one content groupBy
     # on the _sha base already carries gives the min-id keeper, its text
     # and the copy count per distinct content (exact_representatives).
+    # Materialized once (eager localCheckpoint): connected_components'
+    # eager jobs and the verdict-table checkpoint below are separate
+    # actions over it, so a lazy keeper groupBy would be recomputed by
+    # each of them. localCheckpoint, not persist(): its blocks are freed
+    # when the frame is garbage-collected, while persist() pins a
+    # CacheManager entry for the session. Tradeoff: losing an executor
+    # fails the query instead of recomputing; in-query recovery would
+    # need reliable checkpoint().
     gated = base.filter("ok_quality and not domain_drop")
-    keepers = exact_representatives(gated, id_col, "extracted_text", "_sha")
+    keepers = exact_representatives(
+        gated, id_col, "extracted_text", "_sha"
+    ).localCheckpoint(eager=True)
 
     # C) near-dup clustering over the exact REPRESENTATIVES only, never
     # the corpus (near_duplicate_pairs). Every byte-identical member
@@ -291,13 +301,13 @@ def annotate_corpus(
     # over the star edges too would iterate over O(corpus) edges, each
     # round shuffling the whole id space (measured at 16M docs / 3200x
     # duplication); here it iterates over pairs among DISTINCT contents.
-    rep_edges = near_duplicate_pairs(
-        keepers, id_col, "extracted_text", near_threshold
-    ).select("id_a", "id_b")
-    rep_clusters = cluster_assignments(rep_edges, id_alias="_rep").select(
-        "_rep", F.col("cluster_id").alias("_rep_cluster"))
+    rep_labels = connected_components(
+        near_duplicate_pairs(
+            keepers, id_col, "extracted_text", near_threshold
+        ).select("id_a", "id_b")
+    ).select(F.col("id").alias("_rep"), F.col("comp").alias("_rep_cluster"))
 
-    # per-CONTENT verdict row (one row per distinct _sha): the keeper id
+    # per-CONTENT label row (one row per distinct _sha): the keeper id
     # and the propagated cluster label — a rep in a near-dup component
     # takes its component's min rep id; a pure-exact group (>1 copy,
     # rep unclustered) labels by its keeper (matching CC over the full
@@ -305,32 +315,28 @@ def annotate_corpus(
     # and contamination verdicts fold in below (stages D/E), so the
     # assembly is ONE _sha join — per-doc verdicts cost ZERO corpus-
     # sized shuffles beyond the keeper groupBy itself.
-    content_info = (
-        keepers.join(
-            rep_clusters, F.col(id_col) == F.col("_rep"), "left")
-        .select(
-            "_sha", F.col(id_col).alias("exact_keeper"),
-            F.coalesce(
-                F.col("_rep_cluster"),
-                F.when(F.col("n_copies") > 1, F.col(id_col)),
-            ).alias("cluster_id"),
-        )
+    labelled = keepers.join(
+        rep_labels, F.col(id_col) == F.col("_rep"), "left"
+    ).select(
+        "_sha", id_col, "extracted_text",
+        F.coalesce(
+            F.col("_rep_cluster"),
+            F.when(F.col("n_copies") > 1, F.col(id_col)),
+        ).alias("cluster_id"),
     )
+    content_info = labelled.select(
+        "_sha", F.col(id_col).alias("exact_keeper"), "cluster_id")
 
     # D) cross-snapshot dedup over this batch's dedup keepers only: the
     # committed corpus text is never read (compact sha+minhash index);
     # raw text re-joins from the input because the index grain is the
     # pre-extraction payload (what `cli dedup-index` commits). Keepers =
-    # unclustered reps + cluster-leading reps, read straight off the
-    # (distinct-contents-sized) keeper frame — no corpus join.
-    dedup_keepers = (
-        keepers.join(rep_clusters, F.col(id_col) == F.col("_rep"), "left")
-        .filter(
-            F.col("_rep_cluster").isNull()
-            | (F.col("_rep_cluster") == F.col(id_col))
-        )
-        .select(id_col, "extracted_text")
-    )
+    # unclustered reps + cluster-leading reps (cluster_id NULL or the
+    # rep's own id), read straight off the (distinct-contents-sized)
+    # labelled frame — no corpus join.
+    dedup_keepers = labelled.filter(
+        F.col("cluster_id").isNull() | (F.col("cluster_id") == F.col(id_col))
+    ).select(id_col, "extracted_text")
     if snapshot_index is not None:
         from docling_api_spark.operators.dedup import (
             incremental_near_duplicates,

@@ -136,6 +136,43 @@ def test_funnel_flags_and_examples(spark):
     assert sorted(map(tuple, ex)) == sorted(map(tuple, ex2.collect()))
 
 
+def test_cluster_labels_equal_full_graph_components(spark):
+    """annotate_corpus runs connected components over the exact
+    REPRESENTATIVES only and propagates the labels through the keepers;
+    every gated doc's cluster_id must equal its min-label component over
+    the full graph (exact-copy stars + verified near pairs) of the gated
+    extracted texts, and be NULL when the doc is in no edge. The input
+    adds byte-identical copies under new ids (the docs_dup input of
+    scripts/package_check.sh), so the keeper path runs."""
+    from docling_api_spark.operators.dedup import minhash_near_duplicates
+    from docling_api_spark.operators.graph import connected_components
+    from docling_api_spark.plans.corpus_pipeline import annotate_corpus
+
+    d = spark.read.parquet(DOCS).select("doc_id", "text")
+    copies = d.filter("doc_id < 30").selectExpr(
+        "doc_id + 1000000 AS doc_id", "text")
+    near_threshold = 0.25
+    annotated = annotate_corpus(
+        d.unionByName(copies), d.filter("doc_id % 10 = 8"),
+        near_threshold=near_threshold,
+    ).localCheckpoint(eager=True)
+    gated = annotated.filter("ok_quality and not domain_drop")
+    assert gated.filter("is_exact_dup").count() > 0
+    assert gated.filter("is_near_dup").count() > 0
+
+    full = connected_components(minhash_near_duplicates(
+        gated.select("doc_id", F.col("extracted_text").alias("text")),
+        near_threshold,
+    ))
+    comp = {r["id"]: r["comp"] for r in full.collect()}
+    got = {r["doc_id"]: r["cluster_id"]
+           for r in gated.select("doc_id", "cluster_id").collect()}
+    assert got == {i: comp.get(i) for i in got}
+    assert annotated.filter(
+        "not (ok_quality and not domain_drop) and cluster_id is not null"
+    ).count() == 0
+
+
 def test_snapshot_index_gate(spark):
     """--index wiring: a doc byte-identical to a PREVIOUS crawl (exact
     sha in the committed signature index) and a doc near-duplicating one

@@ -169,10 +169,11 @@ PLANS = {
                 "the parquet scan and MapInArrow (per-turn independence)",
     },
     "dedup_exact": {
-        "must": ["HashAggregate", "sha2", "hashpartitioning(_groupingexpression"],
-        "must_not": [],
+        "must": ["HashAggregate", "sha2", "hashpartitioning(content_hash"],
+        "must_not": ["min_by"],
         "note": "shuffle key is the 32-byte sha2, never the document bytes; "
-                "partial aggregation runs map-side",
+                "partial aggregation runs map-side; the keeper rule's "
+                "min_by text carry is pruned, the query never reads it",
     },
     "w2_turn_ordering": {
         "must": ["Window", "hashpartitioning(user_id"],
@@ -429,12 +430,13 @@ def test_run_and_compact_plans_have_no_exchange(static_spark, tmp_path,
 
 
 # `build_training_examples` on the input below at local[8], AQE off, as
-# measured when this test was written: 8 localCheckpoint calls, and 36
-# Exchange-named nodes across their plans plus 1 in `annotated`. Upper
-# bounds only: ROADMAP item 4 (fewer Spark jobs per `cli corpus` pass)
-# lowers them.
+# last measured: 8 localCheckpoint calls, and 34 Exchange-named nodes
+# across their plans plus 1 in `annotated` (the per-content verdict
+# table labels representatives from one keeper-label join, with no
+# cluster-size join). Upper bounds only: ROADMAP item 4 (fewer Spark
+# jobs per `cli corpus` pass) lowers them.
 CORPUS_CHECKPOINTS = 8
-CORPUS_EXCHANGES = 37
+CORPUS_EXCHANGES = 35
 
 
 def test_corpus_plan_shape_is_bounded(static_spark, monkeypatch):

@@ -324,7 +324,7 @@ def test_embedding_lsh_sound_and_recall(spark, emb_np):
     emb = spark.read.parquet(EMB).select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
     )
-    got = embedding_near_duplicates(emb, dim=64, threshold=0.40).collect()
+    got = embedding_near_duplicates(emb, threshold=0.40).collect()
     cos = _exact_cosines(mat)
     idx = {int(v): i for i, v in enumerate(ids)}
     exact_pairs = {
@@ -366,8 +366,8 @@ def test_lsh_and_ivf_topk_sound_vs_exact(spark, emb_np):
     for r in exact:
         exact_by_q.setdefault(r["query_id"], set()).add(r["cand_id"])
     for name, ann in (
-        ("lsh", lsh_cosine_topk(emb, queries, dim=64, k=3).collect()),
-        ("ivf", ivf_cosine_topk(emb, queries, dim=64, k=3).collect()),
+        ("lsh", lsh_cosine_topk(emb, queries, k=3).collect()),
+        ("ivf", ivf_cosine_topk(emb, queries, k=3).collect()),
     ):
         hits = 0
         for r in ann:

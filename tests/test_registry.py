@@ -2,8 +2,8 @@
 to a registered query, the registry fits its recorded slots, every
 package module is imported from some user surface, every package-level
 definition is referenced outside the tests, every defaulted package
-parameter is passed outside the tests, and every tracked module compiles
-without warnings."""
+parameter is passed outside the tests, every package parameter is read
+by its body, and every tracked module compiles without warnings."""
 
 from __future__ import annotations
 
@@ -176,33 +176,38 @@ TEST_SET_PARAMETERS = {
 }
 
 
-def _defaulted_params(tree: ast.Module):
-    """(qualname, call key, positional names, defaulted names) for every
-    def in ``tree``, nested ones included. A method's positional names
-    skip ``self``/``cls``; an ``__init__`` is called by its class name."""
+def _defs(tree: ast.Module):
+    """(qualname, def node, is_method) for every def in ``tree``, nested
+    ones included; a staticmethod is not a method."""
     def walk(node, prefix, in_class):
         for ch in ast.iter_child_nodes(node):
             if isinstance(ch, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                a = ch.args
-                pos = [x.arg for x in a.posonlyargs + a.args]
                 static = any(isinstance(d, ast.Name) and d.id == "staticmethod"
                              for d in ch.decorator_list)
-                if in_class and not static and pos:
-                    pos = pos[1:]
-                defaulted = (pos[len(pos) - len(a.defaults):] if a.defaults
-                             else [])
-                defaulted += [k.arg for k, d in zip(a.kwonlyargs, a.kw_defaults)
-                              if d is not None]
-                key = (prefix.rstrip(".").rpartition(".")[2]
-                       if ch.name == "__init__" else ch.name)
-                yield (prefix + ch.name, key,
-                       pos + [k.arg for k in a.kwonlyargs], defaulted)
+                yield prefix + ch.name, ch, in_class and not static
                 yield from walk(ch, prefix + ch.name + ".", False)
             elif isinstance(ch, ast.ClassDef):
                 yield from walk(ch, prefix + ch.name + ".", True)
             else:
                 yield from walk(ch, prefix, in_class)
     return walk(tree, "", False)
+
+
+def _defaulted_params(tree: ast.Module):
+    """(qualname, call key, positional names, defaulted names) for every
+    def in ``tree``, nested ones included. A method's positional names
+    skip ``self``/``cls``; an ``__init__`` is called by its class name."""
+    for qual, fn, is_method in _defs(tree):
+        a = fn.args
+        pos = [x.arg for x in a.posonlyargs + a.args]
+        if is_method and pos:
+            pos = pos[1:]
+        defaulted = pos[len(pos) - len(a.defaults):] if a.defaults else []
+        defaulted += [k.arg for k, d in zip(a.kwonlyargs, a.kw_defaults)
+                      if d is not None]
+        key = (qual.rpartition(".")[0].rpartition(".")[2]
+               if fn.name == "__init__" else fn.name)
+        yield qual, key, pos + [k.arg for k in a.kwonlyargs], defaulted
 
 
 def _calls(tree: ast.Module):
@@ -267,3 +272,34 @@ def test_every_package_parameter_default_is_set_outside_tests():
         calls = test_calls.get(test, {}).get(key, [])
         assert entry.rpartition(".")[2] in _passed(calls, params), \
             f"{test} no longer passes {entry}"
+
+
+# Package parameters the body never reads, kept because a caller outside
+# the package passes them. Keys are ``<def qualname>.<param>``.
+UNREAD_PARAMETERS = {
+    # perfbench/jobs.py passes the session positionally, and the
+    # benchmark's files change only together with the benchmark
+    "build_training_examples.spark": "perfbench/jobs.py",
+}
+
+
+def test_every_package_parameter_is_read():
+    unread = []
+    for path in _tracked_py():
+        rel = path.relative_to(REPO).as_posix()
+        if not rel.startswith(PKG + "/"):
+            continue
+        for qual, fn, is_method in _defs(ast.parse(path.read_text(), rel)):
+            a = fn.args
+            params = [x.arg for x in a.posonlyargs + a.args]
+            if is_method and params:
+                params = params[1:]
+            params += [x.arg for x in a.kwonlyargs]
+            params += [x.arg for x in (a.vararg, a.kwarg) if x is not None]
+            read = {n.id for stmt in fn.body for n in ast.walk(stmt)
+                    if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)}
+            unread += [f"{qual}.{p}" for p in params if p not in read]
+    never_read = sorted(set(unread) - set(UNREAD_PARAMETERS))
+    assert not never_read, "\n".join(never_read)
+    stale = sorted(set(UNREAD_PARAMETERS) - set(unread))
+    assert not stale, f"read now or gone, drop the exemption: {stale}"

@@ -108,7 +108,7 @@ def test_ivf_topk_matches_bruteforce_recall(spark):
     queries = emb.filter(F.col("vec_id") < 3)
     exact = cosine_topk(emb, queries, k=3).collect()
     full_probe = ivf_cosine_topk(
-        emb, queries, dim=64, k=3, n_centroids=8, n_probe=8
+        emb, queries, k=3, n_centroids=8, n_probe=8
     ).collect()
     key = lambda r: (r["query_id"], r["rank"])
     assert sorted(map(tuple, full_probe), key=lambda t: (t[0], t[3])) == \
@@ -116,7 +116,7 @@ def test_ivf_topk_matches_bruteforce_recall(spark):
 
     # partial probe: proper subset behavior — every returned row must be a
     # true candidate with correct score (checked against exact scores)
-    part = ivf_cosine_topk(emb, queries, dim=64, k=3, n_centroids=8, n_probe=2)
+    part = ivf_cosine_topk(emb, queries, k=3, n_centroids=8, n_probe=2)
     exact_scores = {
         (r["query_id"], r["cand_id"]): r["cosine"]
         for r in cosine_topk(emb, queries, k=10**6).collect()
