@@ -25,8 +25,9 @@ Ships via ``spark-submit --py-files docling_api_spark.zip cli.py ...``
            decontam -> split -> [--span-k: cut duplicated spans] ->
            chunk -> pack -> [--shuffle-shards: deterministic
            training-order permutation at the bin grain];
-           writes annotated/ and examples/ parquet plus
-           funnel.json, prints the funnel)
+           commits annotated/ and examples/ parquet plus
+           funnel.json as one version, <output>/v<NNNN>/, named by
+           <output>/INDEX.json; prints the funnel)
 
   select  --input <corpus> --target <seed parquet> --raw <seed parquet>
           -k N --output <dir>
@@ -159,8 +160,9 @@ def main(argv: list[str] | None = None) -> None:
                    choices=("parquet", "jsonl"),
                    help="format of --eval")
     k.add_argument("--output", required=True,
-                   help="writes <output>/annotated, <output>/examples "
-                        "parquet and <output>/funnel.json")
+                   help="commits annotated/ and examples/ parquet "
+                        "plus funnel.json as <output>/v<NNNN>/, named "
+                        "by <output>/INDEX.json")
     k.add_argument("--ctx-len", type=int, default=512)
     k.add_argument("--stride", type=int, default=None,
                    help="token advance between chunk windows "
@@ -317,8 +319,10 @@ def main(argv: list[str] | None = None) -> None:
                 ).collect()
             ]
         if args.output:
-            with open(args.output, "w") as f:
-                json.dump(report, f, sort_keys=True)
+            from docling_api_spark.plans.checkpoint import publish
+
+            publish(args.output, lambda tmp: tmp.write_text(
+                json.dumps(report, sort_keys=True)))
         print(json.dumps(report, sort_keys=True))
     elif args.cmd == "select":
         from pyspark.sql import functions as F
@@ -351,8 +355,7 @@ def main(argv: list[str] | None = None) -> None:
             report["max_score_scaled"] = int(stats["max_score_scaled"])
         print(json.dumps(report, sort_keys=True))
     elif args.cmd == "gate-stream":
-        import glob
-        import os
+        import pathlib
 
         from docling_api_spark.operators.classifier import nb_train
         from docling_api_spark.streaming.curate import curation_gate_stream
@@ -375,33 +378,25 @@ def main(argv: list[str] | None = None) -> None:
         # exactly_once compares the rows actually on disk against the
         # funnel's kept total (double-writes or replay drift would
         # break the equality)
-        entries = []
-        for p in sorted(glob.glob(
-                os.path.join(args.output, "gate_log", "batch-*.json"))):
-            with open(p) as f:
-                entries.append(json.load(f))
-        n_kept = sum(e["n_kept"] for e in entries)
+        entries = [json.loads(p.read_text()) for p in sorted(
+            pathlib.Path(args.output, "gate_log").glob("batch-*.json"))]
+        summary = {k: sum(e.get(k, 0) for e in entries) for k in (
+            "n_in", "n_kept", "n_fail_valid", "n_fail_classifier")}
         kept_rows = 0
-        if any(e["n_kept"] for e in entries):
+        if summary["n_kept"]:
             kept_rows = spark.read.parquet(
-                os.path.join(args.output, "kept")).count()
-        summary = {
+                str(pathlib.Path(args.output, "kept"))).count()
+        summary.update({
             "n_batches": len(entries),
             "batch_ids": [e["batch_id"] for e in entries],
-            "n_in": sum(e["n_in"] for e in entries),
-            "n_kept": n_kept,
-            "n_fail_valid": sum(e.get("n_fail_valid", 0) for e in entries),
-            "n_fail_classifier": sum(e.get("n_fail_classifier", 0)
-                                     for e in entries),
             "kept_rows_on_disk": kept_rows,
-            "exactly_once": kept_rows == n_kept,
-        }
+            "exactly_once": kept_rows == summary["n_kept"],
+        })
         print(json.dumps(summary, sort_keys=True))
     elif args.cmd == "corpus":
-        import os
-
         from docling_api_spark.plans.corpus_pipeline import (
             build_training_examples,
+            write_corpus,
         )
 
         snapshot_index = None
@@ -448,14 +443,7 @@ def main(argv: list[str] | None = None) -> None:
             domain_max_dup_rate=args.domain_max_dup_rate,
             domain_min_quality=args.domain_min_quality,
         )
-        annotated.write.mode("overwrite").parquet(
-            os.path.join(args.output, "annotated")
-        )
-        examples.write.mode("overwrite").parquet(
-            os.path.join(args.output, "examples")
-        )
-        with open(os.path.join(args.output, "funnel.json"), "w") as f:
-            json.dump(funnel, f, sort_keys=True)
+        write_corpus(args.output, annotated, examples, funnel)
         print(json.dumps(funnel, sort_keys=True))
     spark.stop()
 

@@ -1,18 +1,25 @@
-"""Manifest-based snapshot/commit emulation (resumability, north rule).
+"""Write-then-commit for every CLI writer (resumability, north rule).
 
-In production framing this is an Iceberg table: each run's appended data
-files + a snapshot commit; resume = diff committed snapshots. Iceberg
-jars are not in this sandbox (documented substitution, SURVEY.md §7.3.3),
-so snapshots are emulated deterministically:
+``publish`` is the package's one atomic swap (tmp file + ``os.replace``):
+``manifest.json``, lineage files, ``INDEX.json`` and gate-stream's
+per-batch log are written through it. ``cli dedup-index`` and ``cli
+corpus`` output versioned dirs: ``commit_version`` writes
+``root/v<NNNN>/`` whole, then publishes ``root/INDEX.json``
+(``{"version": N, ...}``) naming it. A crash before the swap orphans the
+new dir like an uncommitted Iceberg data file; the rerun rewrites it.
 
-- ``manifest.json`` lists committed (run_id, bucket) pairs (atomic
-  tmp+rename write). A run's data files sit directly in
-  ``data/run_id=R/``, one per write task, with ``bucket`` a column in
-  them; older outputs also hold runs in ``data/run_id=R/bucket=B/`` dirs,
-  which ``committed_view`` still reads. A killed run leaves the previous
-  manifest intact, so its partial data files belong to a (run_id,
-  bucket) pair that was never committed and are invisible to
-  ``committed_view`` — the same way Iceberg orphans
+``cli run``'s output is, in production framing, an Iceberg table: each
+run's appended data files + a snapshot commit; resume = diff committed
+snapshots. Iceberg jars are not in this sandbox (SURVEY.md §7.3.3), so
+snapshots are emulated deterministically:
+
+- ``manifest.json`` lists committed (run_id, bucket) pairs. A run's data
+  files sit directly in ``data/run_id=R/``, one per write task, with
+  ``bucket`` a column in them; older outputs also hold runs in
+  ``data/run_id=R/bucket=B/`` dirs, which ``committed_view`` still reads.
+  A killed run leaves the previous manifest intact, so its partial data
+  files belong to a (run_id, bucket) pair that was never committed and
+  are invisible to ``committed_view`` — the same way Iceberg orphans
   uncommitted data files. The resume then reprocesses those buckets
   under a new run_id, with no double counting.
 - This module owns that layout (``Manifest.run_dir``/``run_dirs``, and
@@ -20,7 +27,7 @@ so snapshots are emulated deterministically:
   -> read-back of its own dir -> commit -> lineage, so lineage lands only
   for runs whose commit did. Lineage is one parquet file per run,
   ``lineage/part-<run_id>.parquet``, written with pyarrow (no Spark job)
-  by ``write_lineage`` with the same tmp+rename as ``manifest.json``.
+  by ``write_lineage``.
 - Idempotent re-commit: committing an already-committed bucket is a
   no-op (J3 anti-join semantics; reference stripe_service.py:214-231).
 
@@ -31,10 +38,62 @@ to manifest-committed buckets — the Iceberg-snapshot-isolation analog.
 from __future__ import annotations
 
 import contextlib
+import fcntl
 import json
 import os
 import pathlib
+import shutil
 import time
+
+POINTER = "INDEX.json"
+
+
+def publish(path, write) -> None:
+    """Make ``path`` appear whole: ``write(tmp)`` fills a hidden tmp file
+    beside it (dir readers skip hidden names), then it is swapped in."""
+    path = pathlib.Path(path)
+    path.parent.mkdir(parents=True, exist_ok=True)
+    tmp = path.with_name(f".{path.name}.tmp")
+    write(tmp)
+    os.replace(tmp, path)
+
+
+def current_version(root) -> dict | None:
+    """``root``'s committed pointer state, None before its first commit."""
+    pointer = pathlib.Path(root) / POINTER
+    return json.loads(pointer.read_text()) if pointer.exists() else None
+
+
+def version_dir(root, version: int) -> pathlib.Path:
+    return pathlib.Path(root) / f"v{version:04d}"
+
+
+def commit_version(root, write) -> dict:
+    """Commit the next version of ``root``: ``write(vdir)`` fills a fresh
+    ``v<NNNN>/`` and returns the pointer's extra fields, then the pointer
+    is published. Returns the new pointer state. Retention, one rule for
+    every caller: the new version and the one before it stay (a reader
+    that resolved the pointer before the swap still reads a whole
+    version); older ``v*`` dirs are deleted. The first commit also
+    deletes unversioned copies of the version's names (a flat
+    ``annotated/`` written before versioning), as an overwrite would."""
+    root = pathlib.Path(root)
+    prior = current_version(root)
+    version = 0 if prior is None else prior["version"] + 1
+    vdir = version_dir(root, version)
+    shutil.rmtree(vdir, ignore_errors=True)  # a crashed attempt's orphan
+    vdir.mkdir(parents=True)
+    state = {"version": version, **write(vdir)}
+    publish(root / POINTER,
+            lambda tmp: tmp.write_text(json.dumps(state, sort_keys=True)))
+    stale = [d for d in root.glob("v*")
+             if d.name[1:].isdigit() and int(d.name[1:]) < version - 1]
+    if prior is None:
+        stale += [root / p.name for p in vdir.iterdir()
+                  if (root / p.name).exists()]
+    for p in stale:
+        (shutil.rmtree if p.is_dir() else os.remove)(p)
+    return state
 
 
 class Manifest:
@@ -46,17 +105,13 @@ class Manifest:
     @contextlib.contextmanager
     def _locked(self):
         """Advisory mutation lock: every read-modify-write of
-        manifest.json runs under an exclusive ``flock`` on a persistent
-        lock file, so a vacuum's lease pruning cannot lose-update a
-        concurrent run's commit. Readers stay lock-free (the tmp+rename
-        write is atomic). flock is kernel-arbitrated (no stat/steal
-        races) and auto-released when the holder dies, so no staleness
-        heuristics or grave files are needed. Local-filesystem semantics
-        are what this sandbox emulation targets; the production framing
-        is an Iceberg catalog's atomic commit, not file locks."""
+        manifest.json holds an exclusive ``flock`` on a persistent lock
+        file, so a vacuum's lease pruning cannot lose-update a concurrent
+        run's commit; readers stay lock-free (``publish`` is atomic).
+        flock is kernel-arbitrated and released when its holder dies, so
+        no staleness heuristics are needed. The production framing is an
+        Iceberg catalog's atomic commit, not file locks."""
         self.dir.mkdir(parents=True, exist_ok=True)
-        import fcntl
-
         fd = os.open(self.lock_path, os.O_CREAT | os.O_RDWR)
         try:
             fcntl.flock(fd, fcntl.LOCK_EX)
@@ -104,10 +159,8 @@ class Manifest:
         return state
 
     def _write(self, state: dict) -> None:
-        self.dir.mkdir(parents=True, exist_ok=True)
-        tmp = self.path.with_suffix(".json.tmp")
-        tmp.write_text(json.dumps(state, indent=1, sort_keys=True))
-        os.replace(tmp, self.path)  # atomic commit
+        publish(self.path, lambda tmp: tmp.write_text(
+            json.dumps(state, indent=1, sort_keys=True)))
 
     def run_dir(self, run_id: str) -> pathlib.Path:
         return self.dir / "data" / f"run_id={run_id}"
@@ -147,9 +200,6 @@ class Manifest:
             self._write(state)
         return run_id
 
-    def _settle(self, state: dict, run_id: str) -> None:
-        state["inflight"].pop(run_id, None)
-
     def commit(self, run_id: str, snapshot_id: str, buckets: list[int],
                data_schema_json: str | None = None,
                expect_data: bool = False, n_buckets: int | None = None) -> None:
@@ -184,7 +234,7 @@ class Manifest:
                 # recorded so committed_view can read a data dir that holds
                 # no parquet files yet (zero-row runs) without inference
                 state["data_schema"] = data_schema_json
-            self._settle(state, run_id)
+            state["inflight"].pop(run_id, None)
             self._write(state)
 
     def data_schema_json(self) -> str | None:
@@ -211,7 +261,7 @@ class Manifest:
                 {"run_id": run_id, "snapshot_id": snapshot_id,
                  "buckets": list(state["buckets"])}
             ]
-            self._settle(state, run_id)
+            state["inflight"].pop(run_id, None)
             self._write(state)
 
     def snapshot(self) -> dict:
@@ -257,10 +307,8 @@ def write_run(spark, output_dir: str, df, run_id: str):
 
 
 def write_lineage(output_dir: str, run_id: str, rows) -> None:
-    """Write run ``run_id``'s collected lineage rows (``LINEAGE_SCHEMA``
-    order) as ``lineage/part-<run_id>.parquet``: a hidden tmp file, then
-    an atomic rename. Re-writing a run's lineage replaces its file, never
-    adds its rows twice; readers skip the hidden tmp name."""
+    """Publish run ``run_id``'s lineage rows (``LINEAGE_SCHEMA`` order) as
+    ``lineage/part-<run_id>.parquet``; a rewrite replaces the file."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -269,11 +317,8 @@ def write_lineage(output_dir: str, run_id: str, rows) -> None:
 
     table = pa.Table.from_pylist([r.asDict() for r in rows],
                                  schema=to_arrow_schema(LINEAGE_SCHEMA))
-    lineage = Manifest(output_dir).lineage_dir()
-    lineage.mkdir(parents=True, exist_ok=True)
-    tmp = lineage / f".part-{run_id}.parquet.tmp"
-    pq.write_table(table, tmp)
-    os.replace(tmp, lineage / f"part-{run_id}.parquet")
+    publish(Manifest(output_dir).lineage_dir() / f"part-{run_id}.parquet",
+            lambda tmp: pq.write_table(table, tmp))
 
 
 def committed_view(spark, output_dir: str):

@@ -606,3 +606,24 @@ def build_training_examples(
     examples = examples.localCheckpoint(eager=True)
     funnel["n_chunks"] = examples.count()
     return annotated, examples, funnel
+
+
+def write_corpus(output_dir: str, annotated: DataFrame, examples: DataFrame,
+                 funnel: dict) -> dict:
+    """Commit one build as the next version of ``output_dir``:
+    ``v<NNNN>/annotated/`` and ``v<NNNN>/examples/`` parquet plus
+    ``v<NNNN>/funnel.json``, made visible together by one swap of
+    ``output_dir/INDEX.json`` (plans/checkpoint.commit_version). A build
+    that dies mid-write leaves the previous version current and whole.
+    Returns the pointer state."""
+    import json
+
+    from docling_api_spark.plans.checkpoint import commit_version
+
+    def write(vdir) -> dict:
+        annotated.write.parquet(str(vdir / "annotated"))
+        examples.write.parquet(str(vdir / "examples"))
+        (vdir / "funnel.json").write_text(json.dumps(funnel, sort_keys=True))
+        return {}
+
+    return commit_version(output_dir, write)

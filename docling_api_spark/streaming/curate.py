@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from docling_api_spark.plans.checkpoint import publish
+
 GATE_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
     T.StructField("text", T.StringType()),
@@ -144,14 +146,10 @@ def curation_gate_stream(
         entry = {k: int(row[k]) if row[k] is not None else 0
                  for k in row.asDict()}
         entry["batch_id"] = batch_id
-        log_dir = os.path.join(out_dir, "gate_log")
-        os.makedirs(log_dir, exist_ok=True)
-        path = os.path.join(log_dir, f"batch-{batch_id:08d}.json")
+        path = os.path.join(out_dir, "gate_log", f"batch-{batch_id:08d}.json")
         if not os.path.exists(path):  # first-write-wins on replay
-            tmp = path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(entry, f, sort_keys=True)
-            os.replace(tmp, path)
+            publish(path, lambda tmp: tmp.write_text(
+                json.dumps(entry, sort_keys=True)))
 
     return (
         stream.writeStream.foreachBatch(_gate)

@@ -92,17 +92,39 @@ copies = docs.filter("doc_id < 30").selectExpr("doc_id + 1000000 AS doc_id", "te
 docs.unionByName(copies).write.mode("overwrite").parquet("$WORK/docs_dup")
 s.stop()
 EOF
-FUNNEL=$(spark-submit --master 'local[4]' --py-files "$WORK/das.zip" \
-      docling_api_spark/cli.py corpus --input "$WORK/docs" --eval "$WORK/eval" \
-      --output "$WORK/corpus" --ctx-len 128 --stride 96 --near-threshold 0.4 \
-      2>/dev/null | tail -1)
+# each build commits annotated/, examples/ and funnel.json as one version
+# that INDEX.json names; a rebuild commits the next version and keeps the
+# previous one readable
+CORPUS () {
+    spark-submit --master 'local[4]' --py-files "$WORK/das.zip" \
+        docling_api_spark/cli.py corpus --input "$WORK/docs" --eval "$WORK/eval" \
+        --output "$WORK/corpus" --ctx-len 128 --stride 96 --near-threshold 0.4 \
+        2>/dev/null | tail -1
+}
+FUNNEL=$(CORPUS)
 echo "$FUNNEL"
 python - <<EOF
 import json
 f = json.loads('''$FUNNEL''')
 assert f["n_input"] >= f["n_extracted"] >= f["n_quality"] >= f["n_kept"] > 0, f
 assert f["n_kept"] == f["n_train"] + f["n_val"] + f["n_test"], f
+index = json.load(open("$WORK/corpus/INDEX.json"))
+assert index == {"version": 0}, index
+assert json.load(open("$WORK/corpus/v0000/funnel.json")) == f
 print("corpus package check OK:", f["n_kept"], "kept,", f["n_chunks"], "chunks")
+EOF
+FUNNEL2=$(CORPUS)
+python - <<EOF
+import json
+import pyarrow.parquet as pq
+f, f2 = json.loads('''$FUNNEL'''), json.loads('''$FUNNEL2''')
+index = json.load(open("$WORK/corpus/INDEX.json"))
+assert index == {"version": 1}, index
+assert f2 == f and json.load(open("$WORK/corpus/v0001/funnel.json")) == f, f2
+v0 = "$WORK/corpus/v0000"
+assert pq.read_table(f"{v0}/annotated").num_rows == f["n_input"]
+assert pq.read_table(f"{v0}/examples").num_rows == f["n_chunks"]
+print("corpus rebuild package check OK: version 1 committed, version 0 readable")
 EOF
 
 # the dedup index ships through the same zip: the first run commits one
@@ -114,13 +136,17 @@ DEDUP_INDEX () {
         docling_api_spark/cli.py dedup-index --input "$WORK/docs_dup" \
         --index "$WORK/sigidx" 2>/dev/null | tail -1
 }
-D1=$(DEDUP_INDEX); D2=$(DEDUP_INDEX); echo "$D1"; echo "$D2"
+D1=$(DEDUP_INDEX); cp "$WORK/sigidx/INDEX.json" "$WORK/sigidx_v0.json"
+D2=$(DEDUP_INDEX); echo "$D1"; echo "$D2"
+# the no-op rerun leaves the committed pointer byte-identical
+cmp "$WORK/sigidx_v0.json" "$WORK/sigidx/INDEX.json"
 python - <<EOF
 import json
 d1, d2 = json.loads('''$D1'''), json.loads('''$D2''')
 assert d1["committed"] and d1["index_version"] == 0, d1
 assert d1["index_rows"] == d1["n_input_distinct"], d1
 assert d2["committed"] is False and d2["n_added"] == 0, d2
+assert d2["n_ids_reused"] == 0, d2
 assert d2["matches"]["exact"] == d2["n_input"] - d2["n_input_distinct"] > 0, d2
 print("dedup-index package check OK:", d1["index_rows"], "index rows")
 EOF

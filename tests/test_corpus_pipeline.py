@@ -685,3 +685,55 @@ def test_oversize_cap_in_funnel(spark):
     row2 = {r["doc_id"]: r for r in annotated2.collect()}
     assert row2[2]["status"] == "success"
     assert "Unique oversized words" in row2[2]["extracted_text"]
+
+
+def test_corpus_commit_survives_a_crash_mid_write(spark, tmp_path):
+    """``write_corpus`` commits annotated/, examples/ and funnel.json as
+    one version: a rerun whose examples/ write dies after annotated/ is
+    written leaves INDEX.json on the previous version, which stays whole;
+    the next rerun commits the next version, equal to the in-process
+    build."""
+    import json
+
+    import pytest
+
+    from docling_api_spark.plans.checkpoint import (
+        current_version,
+        version_dir,
+    )
+    from docling_api_spark.plans.corpus_pipeline import (
+        build_training_examples,
+        write_corpus,
+    )
+
+    docs, eval_docs = _corpus(spark)
+    annotated, examples, funnel = build_training_examples(
+        spark, docs, eval_docs, ctx_len=128, stride=96,
+    )
+    out = tmp_path / "corpus"
+    assert write_corpus(str(out), annotated, examples, funnel) == {"version": 0}
+
+    broken = examples.withColumn("chunk_text", F.when(
+        F.col("chunk_idx") >= 0, F.raise_error(F.lit("injected failure"))
+    ).otherwise(F.col("chunk_text")))
+    with pytest.raises(Exception, match="injected failure"):
+        write_corpus(str(out), annotated, broken, funnel)
+    assert (version_dir(out, 1) / "annotated").is_dir()  # written, orphaned
+    assert current_version(out) == {"version": 0}
+    v0 = version_dir(out, 0)
+    committed = json.loads((v0 / "funnel.json").read_text())
+    assert committed == funnel
+    assert spark.read.parquet(str(v0 / "annotated")).count() \
+        == committed["n_input"]
+    assert spark.read.parquet(str(v0 / "examples")).count() \
+        == committed["n_chunks"]
+
+    assert write_corpus(str(out), annotated, examples, funnel) == {"version": 1}
+    v1 = version_dir(out, 1)
+    assert json.loads((v1 / "funnel.json").read_text()) == funnel
+    for name, df in (("annotated", annotated), ("examples", examples)):
+        got = spark.read.parquet(str(v1 / name))
+        assert got.columns == df.columns
+        assert sorted(map(repr, got.collect())) \
+            == sorted(map(repr, df.collect())), name
+    assert v0.is_dir()  # the previous version is retained

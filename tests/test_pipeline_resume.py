@@ -706,6 +706,58 @@ def test_vacuum_trash_protocol(spark, transcripts, tmp_path):
     assert state["retired"] == []
 
 
+def test_commit_version_retention_and_legacy_cleanup(tmp_path):
+    """The versioned pointer: a write that dies leaves INDEX.json on the
+    last committed version and the rerun rewrites the same version
+    number; the committed version and the one before it are kept; the
+    first commit into a dir holding flat, unversioned copies of the
+    version's names removes them and nothing else."""
+    import json
+
+    import pytest
+
+    from docling_api_spark.plans.checkpoint import (
+        commit_version,
+        current_version,
+        version_dir,
+    )
+
+    root = tmp_path / "out"
+    (root / "annotated").mkdir(parents=True)
+    (root / "annotated" / "part-0.parquet").write_text("flat")
+    (root / "funnel.json").write_text("{}")
+    (root / "notes.txt").write_text("not a name any version holds")
+
+    def write(n):
+        def fill(vdir):
+            (vdir / "annotated").mkdir()
+            (vdir / "funnel.json").write_text(json.dumps({"n": n}))
+            return {"n": n}
+        return fill
+
+    def crash(vdir):
+        (vdir / "annotated").mkdir()
+        raise RuntimeError("write died")
+
+    assert commit_version(root, write(0)) == {"version": 0, "n": 0}
+    assert sorted(p.name for p in root.iterdir()) == [
+        "INDEX.json", "notes.txt", "v0000"]
+    with pytest.raises(RuntimeError, match="write died"):
+        commit_version(root, crash)
+    assert current_version(root) == {"version": 0, "n": 0}
+    assert commit_version(root, write(1)) == {"version": 1, "n": 1}
+    assert sorted(p.name for p in version_dir(root, 1).iterdir()) == [
+        "annotated", "funnel.json"]
+    for n in (2, 3):
+        commit_version(root, write(n))
+    assert current_version(root) == {"version": 3, "n": 3}
+    assert (root / "INDEX.json").read_text() == '{"n": 3, "version": 3}'
+    assert sorted(p.name for p in root.iterdir()) == [
+        "INDEX.json", "notes.txt", "v0002", "v0003"]
+    assert json.loads((version_dir(root, 2) / "funnel.json").read_text()) \
+        == {"n": 2}
+
+
 def test_dedup_index_update_and_idempotency(spark, tmp_path):
     """plans/dedup_index.py lifecycle: first batch builds v0000; a second
     batch reports its duplicates vs the committed index (exact + near)
@@ -714,11 +766,8 @@ def test_dedup_index_update_and_idempotency(spark, tmp_path):
     the operator-level extension."""
     from pyspark.sql import functions as F
 
-    from docling_api_spark.plans.dedup_index import (
-        load_index,
-        read_pointer,
-        update_index,
-    )
+    from docling_api_spark.plans.checkpoint import current_version
+    from docling_api_spark.plans.dedup_index import load_index, update_index
 
     d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     batch1 = d.filter(F.col("doc_id") % 3 != 0).select("doc_id", "text")
@@ -754,12 +803,12 @@ def test_dedup_index_update_and_idempotency(spark, tmp_path):
     # idempotent re-run: same batch, nothing committed, pointer untouched.
     # (The match REPORT legitimately grows — batch2's own near-dup pairs
     # are now cross-index matches — but never with self-pairs.)
-    before = read_pointer(idx_dir)
+    before = current_version(idx_dir)
     s3 = update_index(spark, batch2, idx_dir, threshold=0.25,
                       matches_out=str(tmp_path / "matches2"))
     assert s3["committed"] is False and s3["n_added"] == 0
     assert s3["index_version"] == 1
-    assert read_pointer(idx_dir) == before
+    assert current_version(idx_dir) == before
     m2 = spark.read.parquet(str(tmp_path / "matches2"))
     assert m2.filter(F.col("new_id") == F.col("match_id")).count() == 0
     assert m2.count() >= mm.count()  # prior cross matches all still found
@@ -815,6 +864,26 @@ def test_dedup_index_drift_and_first_run_report(spark, tmp_path):
     # the drifted content is NOT committed (id already present) — the
     # report is the signal; re-ingest under a new id commits it
     assert s2["n_added"] == 0 and s2["committed"] is False
+    assert s2["n_ids_reused"] == 1
+
+
+def test_dedup_index_refuses_one_id_with_two_texts(spark, tmp_path):
+    """One id names one text: a batch that gives id 1 two different
+    texts is refused before anything is committed (its minhash would
+    merge both texts). A byte-identical repeat stays legal
+    (test_dedup_index_repeated_rows_and_null_text)."""
+    import pytest
+
+    from docling_api_spark.plans.checkpoint import current_version
+    from docling_api_spark.plans.dedup_index import update_index
+
+    t = " ".join(f"alpha{i}" for i in range(30))
+    u = " ".join(f"beta{i}" for i in range(30))
+    idx_dir = str(tmp_path / "idx")
+    bad = spark.createDataFrame([(1, t), (1, u)], "doc_id long, text string")
+    with pytest.raises(ValueError, match="one id must name one text"):
+        update_index(spark, bad, idx_dir)
+    assert current_version(idx_dir) is None
 
 
 def test_dedup_index_repeated_rows_and_null_text(spark, tmp_path):
