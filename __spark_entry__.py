@@ -1033,71 +1033,28 @@ def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The corpus card (operators/profile.py) as ONE driver-checkable
-    row: doc/token/char totals, min/max, HALF_UP exact-integer averages,
-    EXACT token-count percentiles (p50/p90/p99), and per-language doc
-    counts. The percentile rule is profile._hist_percentile's — smallest
-    value whose cumulative count reaches ceil(p/100*n) — computed here
-    distributively: groupBy(n_tokens) yields a bounded histogram (at
-    most max-doc-token-count rows, ~50 B each, so the single-partition
-    cumulative window over it is a driver-sized sort, never the corpus;
-    same boundedness argument as profile.corpus_report's collect).
-    approx_count_distinct (the report's HLL dup estimate) is *excluded*:
+    """The corpus card `cli report` prints (profile.corpus_card, the one
+    definition), projected to its driver-checkable columns: doc/token/
+    char totals, min/max, HALF_UP exact-integer averages, EXACT token-
+    count percentiles (p50/p90/p99), the English doc count and the
+    number of languages present. The HLL dup estimate is *excluded*:
     sketch merges are engine-specific, and the exact-dedup family
-    already driver-verifies distinctness (dedup_exact). All averages
-    are HALF_UP by exact integer division (CLAUDE.md float-round rule);
-    q_e4 recovers the e4 fixed-point quality_score as a long (sanctioned
-    single-fixed-point round, profile.py:104-108)."""
+    already driver-verifies distinctness (dedup_exact)."""
     from docling_api_spark.operators.profile import (
-        corpus_profile as profile_stats,
+        DEFAULT_PERCENTILES,
+        corpus_card,
     )
+    from docling_api_spark.operators.textstats import LANG_CODES
 
-    stats = profile_stats(_t(spark, sf_dir, "documents"))
-    # materialized once (text already dropped, ~50 B/doc): the totals,
-    # histogram, and percentile aggregations below re-read THIS frame,
-    # never the corpus — corpus_report's exact posture (profile.py:96)
-    per_doc = stats.select(
-        "n_tokens", "n_chars", "lang_pred",
-        F.round(F.col("quality_score") * 10000).cast("long").alias("q_e4"),
-    ).localCheckpoint(eager=True)
-    tot = per_doc.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("n_tokens_total"),
-        F.sum("n_chars").cast("long").alias("n_chars_total"),
-        F.min("n_tokens").alias("tokens_min"),
-        F.max("n_tokens").alias("tokens_max"),
-        F.sum("q_e4").alias("q_e4_sum"),
-        F.sum((F.col("lang_pred") == "en").cast("long")).alias("n_docs_en"),
-        F.countDistinct("lang_pred").alias("n_langs"),
-    )
-    hist = per_doc.groupBy("n_tokens").agg(F.count(F.lit(1)).alias("cnt"))
-    cum = hist.withColumn(
-        "cum",
-        F.sum("cnt").over(
-            Window.orderBy("n_tokens")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    # ceil(p*n/100) without floats: (p*n + 99) div 100 (operands > 0)
-    pcols = [
-        F.min(
-            F.when(
-                F.col("cum")
-                >= F.expr(f"({p} * n_docs + 99) div 100"), F.col("n_tokens")
-            )
-        ).alias(f"tokens_p{p}")
-        for p in (50, 90, 99)
-    ]
-    pct = cum.crossJoin(F.broadcast(tot.select("n_docs"))).agg(*pcols)
-    return tot.crossJoin(F.broadcast(pct)).select(
+    card = corpus_card(_t(spark, sf_dir, "documents"), "text",
+                       DEFAULT_PERCENTILES, 0.05)
+    return card.select(
         "n_docs", "n_tokens_total", "n_chars_total",
-        "tokens_min", "tokens_max",
-        _ratio_e4(F.col("n_tokens_total"), F.col("n_docs"), 2)
-        .alias("avg_tokens"),
-        _ratio_e4(F.col("q_e4_sum"), F.col("n_docs") * F.lit(10000).cast("long"), 4)
-        .alias("avg_quality"),
-        "tokens_p50", "tokens_p90", "tokens_p99",
-        "n_docs_en", "n_langs",
+        "tokens_min", "tokens_max", "avg_tokens", "avg_quality",
+        *[f"tokens_p{p}" for p in DEFAULT_PERCENTILES],
+        F.col("n_lang_en").alias("n_docs_en"),
+        sum((F.col(f"n_lang_{c}") > 0).cast("long") for c in LANG_CODES)
+        .alias("n_langs"),
     )
 
 
@@ -2219,12 +2176,12 @@ def oracle_sql() -> dict[str, str]:
             ORDER BY doc_id, frame_idx
         """,
         "corpus_profile": r"""
-            -- operators/profile.py corpus card: exact-integer averages
-            -- (HALF_UP by integer division, q1 note), EXACT percentiles
-            -- read off the cumulative token-count histogram (smallest
-            -- value whose cumulative count reaches ceil(p/100*n) —
-            -- profile._hist_percentile), q_e4 = the e4 fixed-point
-            -- quality score as an integer (text_quality oracle form)
+            -- the corpus card `cli report` prints (profile.corpus_card):
+            -- exact-integer averages (HALF_UP by integer division, q1
+            -- note), EXACT percentiles read off the cumulative token-
+            -- count histogram (smallest value whose cumulative count
+            -- reaches ceil(p/100*n)), q_e4 = the e4 fixed-point quality
+            -- score as an integer (text_quality oracle form)
             WITH t AS (
                 SELECT coalesce(text, '') AS text FROM documents
             ), s AS (

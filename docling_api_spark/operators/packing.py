@@ -79,17 +79,15 @@ def pack_greedy(ids_tokens: list[tuple], ctx_len: int) -> list[tuple]:
 
 def pack_sequences(
     df: DataFrame,
-    ctx_len: int = 2048,
-    id_col: str = "doc_id",
-    token_count_col: str | None = None,
+    ctx_len: int,
+    id_col: str,
+    token_count_col: str,
     n_shards: int = DEFAULT_SHARDS,
 ) -> DataFrame:
     """Pack each document into a (shard, bin_idx) training-example slot.
 
-    ``token_count_col`` names a precomputed token-count column; when
-    None, whitespace token counts are derived JVM-side from ``text``
-    (``size(split(...))`` — codegen, no Python). Output: one row per
-    document with (id, shard, bin_idx, offset_in_bin, n_tokens,
+    ``token_count_col`` names the document's token-count column. Output:
+    one row per document with (id, shard, bin_idx, offset_in_bin, n_tokens,
     bin_oversize); ``(shard, bin_idx)`` is the training-example key and
     ``sum(n_tokens) <= ctx_len`` holds per key unless the key is a
     single flagged-oversize document.
@@ -97,17 +95,7 @@ def pack_sequences(
     if ctx_len <= 0:
         raise ValueError(f"ctx_len must be positive, got {ctx_len}")
     id_field = df.schema[id_col]
-    if token_count_col is not None:
-        counted = df.select(id_col, F.col(token_count_col).cast("long").alias("_nt"))
-    else:
-        counted = df.select(
-            id_col,
-            F.when(
-                F.col("text").isNull() | (F.trim("text") == ""), F.lit(0)
-            ).otherwise(
-                F.size(F.split(F.trim("text"), r"\s+"))
-            ).cast("long").alias("_nt"),
-        )
+    counted = df.select(id_col, F.col(token_count_col).cast("long").alias("_nt"))
     sharded = counted.withColumn(
         "shard",
         F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(n_shards))

@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 DEFAULT_SPLITS = (("train", 9000), ("val", 500), ("test", 500))
+SPLIT_SALT = "split"
+DECONTAM_N = 8  # n-gram size of the eval-set overlap check
 
 # Assembly broadcast bound: the per-content verdict table (one row per
 # DISTINCT content that survived the quality/domain gates — Spark sha2
@@ -62,9 +64,6 @@ def annotate_corpus(
     text_col: str = "text",
     quality_floor: float = 0.35,
     near_threshold: float = 0.6,
-    decontam_n: int = 8,
-    splits=DEFAULT_SPLITS,
-    split_salt: str = "split",
     snapshot_index: DataFrame | None = None,
     snapshot_threshold: float = 0.6,
     domain_col: str | None = None,
@@ -248,7 +247,7 @@ def annotate_corpus(
     # the base subtree feeds the exact-dedup groupBy, the near-dup
     # operator, decontam, and the final assembly — one materialization
     base = group_split(
-        base, id_col, splits=list(splits), salt=split_salt
+        base, id_col, splits=list(DEFAULT_SPLITS), salt=SPLIT_SALT
     ).localCheckpoint(eager=True)
 
     # A') optional domain stage (RefinedWeb posture): stats over quality
@@ -369,7 +368,7 @@ def annotate_corpus(
         ),
         id_col,
         "extracted_text",
-        decontam_n,
+        DECONTAM_N,
     ).select(id_col, F.lit(True).alias("contaminated"))
 
     # fold the snapshot/contamination verdicts (keyed on KEEPER ids —

@@ -99,16 +99,13 @@ def update_index(
         ).collect()[0]
         # ONE definition of the extension rule (operators/dedup.py)
         grown = extend_signature_index(index, new_sig, id_col)
-    by_method = {
-        r["method"]: r["n"]
-        for r in matches.groupBy("method")
-        .agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    summary["matches"] = {
-        "exact": int(by_method.get("exact", 0)),
-        "minhash_est": int(by_method.get("minhash_est", 0)),
-        "docs_matched": matches.select("new_id").distinct().count(),
-    }
+    summary["matches"] = matches.agg(
+        F.count(F.when(F.col("method") == "exact", 1)).alias("exact"),
+        F.count(F.when(F.col("method") == "minhash_est", 1))
+        .alias("minhash_est"),
+        # in a struct, a NULL new_id counts as one id, as in distinct()
+        F.count_distinct(F.struct("new_id")).alias("docs_matched"),
+    ).first().asDict()
     if matches_out is not None:
         matches.write.mode("overwrite").parquet(matches_out)
         summary["matches_out"] = matches_out

@@ -121,13 +121,20 @@ def curation_gate_stream(
             batch_df, weights, meta, c4, id_col, text_col,
         )
         annotated = annotated.localCheckpoint(eager=True)
+        # one aggregation: the batch funnel, and the duplicate-id count
+        # that must be 0 before anything is written
+        entry = annotated.agg(
+            F.count(F.lit(1)).alias("n_in"),
+            F.sum(F.col("gate_keep").cast("long")).alias("n_kept"),
+            *[F.sum((~F.coalesce(F.col(g), F.lit(False))).cast("long"))
+              .alias(f"n_fail_{g[5:]}") for g in gates],
+            (F.count(F.col(id_col))
+             - F.count_distinct(F.col(id_col))).alias("_dup"),
+        ).collect()[0].asDict()
         # gate_batch scores at id grain: duplicate ids within a batch
         # would have been scored as one merged document — fail the batch
         # loudly (the checkpoint replays it after the producer is fixed)
-        dup = annotated.agg(
-            (F.count(F.col(id_col))
-             - F.count_distinct(F.col(id_col))).alias("d")
-        ).collect()[0]["d"]
+        dup = entry.pop("_dup")
         if dup:
             raise ValueError(
                 f"curation_gate_stream: batch {batch_id} has {dup} "
@@ -137,14 +144,7 @@ def curation_gate_stream(
         annotated.filter("gate_keep").write.mode("overwrite").parquet(
             os.path.join(out_dir, "kept", f"batch={batch_id}")
         )
-        row = annotated.agg(
-            F.count(F.lit(1)).alias("n_in"),
-            F.sum(F.col("gate_keep").cast("long")).alias("n_kept"),
-            *[F.sum((~F.coalesce(F.col(g), F.lit(False))).cast("long"))
-              .alias(f"n_fail_{g[5:]}") for g in gates],
-        ).collect()[0]
-        entry = {k: int(row[k]) if row[k] is not None else 0
-                 for k in row.asDict()}
+        entry = {k: int(v) if v is not None else 0 for k, v in entry.items()}
         entry["batch_id"] = batch_id
         path = os.path.join(out_dir, "gate_log", f"batch-{batch_id:08d}.json")
         if not os.path.exists(path):  # first-write-wins on replay

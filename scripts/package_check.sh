@@ -151,6 +151,32 @@ assert d2["matches"]["exact"] == d2["n_input"] - d2["n_input_distinct"] > 0, d2
 print("dedup-index package check OK:", d1["index_rows"], "index rows")
 EOF
 
+# the corpus card ships through the same zip: the published report is
+# byte-identical to the printed one, and its card fields equal the
+# registry's corpus_profile row (the DuckDB-checked projection of it)
+spark-submit --master 'local[4]' --py-files "$WORK/das.zip" \
+    docling_api_spark/cli.py report \
+    --input /root/testdata/sf0.001/documents.parquet \
+    --output "$WORK/report.json" 2>/dev/null | tail -1 > "$WORK/report.out"
+cat "$WORK/report.out"
+python - <<EOF
+import json
+import sys; sys.path.insert(0, ".")
+printed = open("$WORK/report.out").read()
+assert open("$WORK/report.json").read() + "\n" == printed, printed
+r = json.loads(printed)
+import __spark_entry__ as entry
+from docling_api_spark.session import get_spark
+s = get_spark(app_name="pkg-report", master="local[4]")
+row = entry.corpus_profile(s, "/root/testdata/sf0.001").first().asDict()
+s.stop()
+assert row.pop("n_docs_en") == r["lang_dist"].get("en", 0), (row, r)
+assert row.pop("n_langs") == len(r["lang_dist"]), (row, r)
+assert row == {k: r[k] for k in row}, (row, r)
+print("report package check OK:", r["n_docs"], "docs,", len(row) + 2,
+      "fields equal the registry row")
+EOF
+
 # the streaming curation gate ships through the same zip: an
 # AvailableNow micro-run in three spark-submit invocations — wave A
 # split into 2 micro-batches (max-files-per-trigger=1), wave B landed

@@ -535,7 +535,7 @@ def test_all_stages_enabled_together(spark, tmp_path):
     def run():
         return build_training_examples(
             spark, docs, eval_docs, ctx_len=32, quality_floor=0.0,
-            near_threshold=0.9, decontam_n=8,
+            near_threshold=0.9,
             c4=True, c4_min_words=5, c4_min_sentences=3,
             langs=("en",), para_dedup=True,
             domain_col="source", domain_blocklist=bl,

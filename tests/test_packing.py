@@ -41,14 +41,11 @@ def _oracle(rows, shard_of, ctx_len):
 def _case(spark, rows, ctx_len, n_shards):
     from docling_api_spark.operators.packing import pack_sequences
 
-    df = spark.createDataFrame(
-        [(d, " ".join(["w"] * n) if n else "") for d, n in rows],
-        "doc_id string, text string",
-    )
+    df = spark.createDataFrame(rows, "doc_id string, n_tokens long")
     got = {
         r["doc_id"]: (r["shard"], r["bin_idx"], r["offset_in_bin"],
                       r["n_tokens"], r["bin_oversize"])
-        for r in pack_sequences(df, ctx_len=ctx_len,
+        for r in pack_sequences(df, ctx_len, "doc_id", "n_tokens",
                                 n_shards=n_shards).collect()
     }
     want = _oracle(rows, _spark_shards(spark, rows, n_shards), ctx_len)
@@ -69,10 +66,9 @@ def test_pack_invariants(spark):
     from docling_api_spark.operators.packing import pack_sequences
 
     rng = random.Random(5)
-    rows = [(f"d{i:04d}", " ".join(["tok"] * rng.randrange(0, 200)))
-            for i in range(300)]
-    df = spark.createDataFrame(rows, "doc_id string, text string")
-    packed = pack_sequences(df, ctx_len=96, n_shards=4)
+    rows = [(f"d{i:04d}", rng.randrange(0, 200)) for i in range(300)]
+    df = spark.createDataFrame(rows, "doc_id string, n_tokens long")
+    packed = pack_sequences(df, 96, "doc_id", "n_tokens", n_shards=4)
     rs = packed.collect()
     assert len(rs) == len(rows) and len({r["doc_id"] for r in rs}) == len(rows)
     bins: dict[tuple, list] = {}
@@ -92,8 +88,8 @@ def test_pack_invariants(spark):
     # partitioning invariance: same assignment from a repartitioned input
     again = {
         r["doc_id"]: (r["shard"], r["bin_idx"], r["offset_in_bin"])
-        for r in pack_sequences(df.repartition(13), ctx_len=96,
-                                n_shards=4).collect()
+        for r in pack_sequences(df.repartition(13), 96, "doc_id",
+                                "n_tokens", n_shards=4).collect()
     }
     assert again == {r["doc_id"]: (r["shard"], r["bin_idx"],
                                    r["offset_in_bin"]) for r in rs}
@@ -110,7 +106,7 @@ def test_pack_precomputed_counts_and_edge_cases(spark):
     )
     got = {
         r["doc_id"]: r
-        for r in pack_sequences(df, ctx_len=100, token_count_col="n_tok",
+        for r in pack_sequences(df, 100, "doc_id", "n_tok",
                                 n_shards=1).collect()
     }
     # exactly-full doc gets its own unflagged bin; the over-budget one
@@ -119,7 +115,7 @@ def test_pack_precomputed_counts_and_edge_cases(spark):
     assert got["c"]["bin_oversize"] is True
     assert {r["n_tokens"] for r in got.values()} == {50, 100, 101, 0}
     with _pytest.raises(ValueError, match="positive"):
-        pack_sequences(df, ctx_len=0, token_count_col="n_tok")
+        pack_sequences(df, 0, "doc_id", "n_tok")
 
 
 # --- token-window chunking (operators/chunking.py) --------------------------

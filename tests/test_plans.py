@@ -374,7 +374,8 @@ PLANS = {
         "must_not": ["Exchange", "CartesianProduct"],
         "note": "the corpus-card stats frame is ONE shuffle-free projection "
                 "that drops the text column (~50 bytes/doc survives); the "
-                "three report aggregations run over its materialization, "
+                "card's one aggregation query (cli report and the "
+                "registry's corpus_profile) runs over its materialization, "
                 "never the corpus",
     },
 }

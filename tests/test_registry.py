@@ -205,40 +205,69 @@ def _defaulted_params(tree: ast.Module):
         defaulted = pos[len(pos) - len(a.defaults):] if a.defaults else []
         defaulted += [k.arg for k, d in zip(a.kwonlyargs, a.kw_defaults)
                       if d is not None]
-        key = (qual.rpartition(".")[0].rpartition(".")[2]
-               if fn.name == "__init__" else fn.name)
-        yield qual, key, pos + [k.arg for k in a.kwonlyargs], defaulted
+        params = pos + [k.arg for k in a.kwonlyargs]
+        yield qual, _call_key(qual, fn), params, defaulted
+
+
+def _call_key(qual: str, fn: ast.FunctionDef) -> str:
+    """The name a def is called by: an ``__init__`` by its class name."""
+    return (qual.rpartition(".")[0].rpartition(".")[2]
+            if fn.name == "__init__" else fn.name)
 
 
 def _calls(tree: ast.Module):
-    """(callee name, Call) per call: a ``Name`` through its import alias,
-    or an ``Attribute``'s attribute name."""
+    """(callee name, Call, forwarder) per call: a ``Name`` through its
+    import alias, or an ``Attribute``'s attribute name. ``forwarder`` is
+    the call key of the innermost enclosing def when the call forwards
+    that def's own ``**`` parameter, else None."""
     alias = {a.asname: a.name.rpartition(".")[2]
              for node in ast.walk(tree)
              if isinstance(node, (ast.Import, ast.ImportFrom))
              for a in node.names if a.asname}
+    forwards = {}
+    for qual, fn, _ in _defs(tree):  # outer defs first: inner ones win
+        kwarg = fn.args.kwarg
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Call):
+                fwd = kwarg is not None and any(
+                    kw.arg is None and isinstance(kw.value, ast.Name)
+                    and kw.value.id == kwarg.arg for kw in node.keywords)
+                forwards[node] = _call_key(qual, fn) if fwd else None
     for node in ast.walk(tree):
         if isinstance(node, ast.Call):
             if isinstance(node.func, ast.Name):
-                yield alias.get(node.func.id, node.func.id), node
+                yield (alias.get(node.func.id, node.func.id), node,
+                       forwards.get(node))
             elif isinstance(node.func, ast.Attribute):
-                yield node.func.attr, node
+                yield node.func.attr, node, forwards.get(node)
 
 
-def _passed(calls, params: list[str]) -> set[str]:
+def _passed(calls, params: list[str], by_key: dict,
+            forwarded: frozenset = frozenset()) -> set[str]:
     """The parameters of a def with positional-then-keyword ``params``
-    that some call in ``calls`` passes: by keyword, by position, or
-    through ``*``/``**`` forwarding."""
+    that some (call, forwarder) in ``calls`` passes: by keyword, by
+    position, through ``*`` forwarding, or through ``**``. A ``**``
+    forward of the enclosing def's own ``**`` parameter passes only what
+    that def's non-test callers (``by_key``) pass it by keyword; any
+    other ``**`` mapping passes every parameter. ``forwarded`` holds the
+    forwarding defs being resolved: their callers' positional arguments
+    bind to the forwarding def, never to ``params``."""
     out: set[str] = set()
-    for call in calls:
-        for i, arg in enumerate(call.args):
+    for call, forwarder in calls:
+        for i, arg in enumerate([] if forwarded else call.args):
             if isinstance(arg, ast.Starred):
                 out.update(params[i:])
                 break
             if i < len(params):
                 out.add(params[i])
         for kw in call.keywords:
-            out.update(params if kw.arg is None else [kw.arg])
+            if kw.arg is not None:
+                out.add(kw.arg)
+            elif forwarder is None:
+                out.update(params)
+            elif forwarder not in forwarded:
+                out |= _passed(by_key.get(forwarder, []), params, by_key,
+                               forwarded | {forwarder})
     return out
 
 
@@ -249,17 +278,18 @@ def test_every_package_parameter_default_is_set_outside_tests():
     by_key: dict[str, list] = {}
     test_calls: dict[str, dict[str, list]] = {}
     for rel, tree in trees.items():
-        for key, call in _calls(tree):
+        for key, call, forwarder in _calls(tree):
             if rel.startswith("tests/"):
-                test_calls.setdefault(rel, {}).setdefault(key, []).append(call)
+                test_calls.setdefault(rel, {}).setdefault(key, []).append(
+                    (call, forwarder))
             else:
-                by_key.setdefault(key, []).append(call)
+                by_key.setdefault(key, []).append((call, forwarder))
     unset, defaulted = [], {}
     for rel, tree in sorted(trees.items()):
         if not rel.startswith(PKG + "/"):
             continue
         for qual, key, params, dflt in _defaulted_params(tree):
-            passed = _passed(by_key.get(key, []), params)
+            passed = _passed(by_key.get(key, []), params, by_key)
             for name in dflt:
                 defaulted[f"{qual}.{name}"] = (key, params)
                 if name not in passed and f"{qual}.{name}" not in \
@@ -270,7 +300,7 @@ def test_every_package_parameter_default_is_set_outside_tests():
         assert entry in defaulted, f"{entry} is no longer a defaulted parameter"
         key, params = defaulted[entry]
         calls = test_calls.get(test, {}).get(key, [])
-        assert entry.rpartition(".")[2] in _passed(calls, params), \
+        assert entry.rpartition(".")[2] in _passed(calls, params, by_key), \
             f"{test} no longer passes {entry}"
 
 
